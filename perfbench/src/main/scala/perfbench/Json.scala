@@ -1,0 +1,36 @@
+package perfbench
+
+/** Minimal JSON writer for the harness's raw result file. */
+object Json {
+  def write(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => write(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
+    case f: Float => write(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + write(x) }
+        .mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(write).mkString("[", ",", "]")
+    case xs: Array[_] => write(xs.toSeq)
+    case other => quote(other.toString)
+  }
+
+  private def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b.append("\\\"")
+      case '\\' => b.append("\\\\")
+      case '\n' => b.append("\\n")
+      case '\r' => b.append("\\r")
+      case '\t' => b.append("\\t")
+      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+      case c => b.append(c)
+    }
+    b.append('"').toString
+  }
+}
