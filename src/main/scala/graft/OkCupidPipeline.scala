@@ -3,7 +3,6 @@ package graft
 import graft.functions.TextFunctions
 import graft.operators._
 import org.apache.spark.ml.Pipeline
-import org.apache.spark.ml.classification.DecisionTreeClassifier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,9 +15,13 @@ import org.apache.spark.sql.types._
   * → confusion matrix (R:188).
   *
   * Unlike the reference, nothing densifies (the reference's `as.matrix`
-  * at R:110 allocated 6.17 GB; we stay sparse end-to-end) and the tree
-  * trains distributed — the 27-minute single-thread rpart baseline is
-  * the number to beat.
+  * at R:110 allocated 6.17 GB; we stay sparse end-to-end). The tree is
+  * [[graft.operators.DeterministicCart]]'s exact CART: one distributed
+  * job per level while the training rows are too big for the driver,
+  * then the rest of the tree grown in memory once they fit under its
+  * `spark.driver.maxResultSize`-derived bound — identical at any
+  * parallelism. The 27-minute single-thread rpart baseline is the
+  * number to beat.
   */
 object OkCupidPipeline {
 
@@ -118,10 +121,9 @@ object OkCupidPipeline {
 
   /** [[trainAndEvaluate]] plus per-stage wall seconds — featurize
     * (token chain + vectorizer fit/transform, forced by the row
-    * count), fit (stratified split + data-sized repartition + tree
-    * grow), prune_eval (cp prune + predict + confusion) — so a bench
-    * regression is attributable to a stage instead of a coin flip on
-    * the ~85%-of-wall total.
+    * count), fit (stratified split + exact CART grow), prune_eval (cp
+    * prune + predict + confusion) — so a bench regression is
+    * attributable to a stage instead of a coin flip on the total.
     */
   def trainAndEvaluateTimed(
       profiles: DataFrame,
@@ -152,10 +154,10 @@ object OkCupidPipeline {
         .select(col("label"), col("features"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val nRows = features.count() // forces the whole featurize chain
+        features.count() // forces the whole featurize chain
         val featurizeSec = (System.nanoTime() - tFeat0) / 1e9
         val (confusion, acc, fitSec, pruneEvalSec) =
-          trainOnFeatures(features, profiles, nRows, maxDepth, seed, cp)
+          trainOnFeatures(features, profiles, maxDepth, seed, cp)
         (confusion, acc, Seq(
           "featurize" -> featurizeSec,
           "fit" -> fitSec,
@@ -164,65 +166,18 @@ object OkCupidPipeline {
     } finally tokens.unpersist()
   }
 
-  /** Tree-fit partition count: nRows/rowsPerPartition rounded up,
-    * clamped to [1, parallelism − 2]. The upper clamp ENFORCES the
-    * headroom rule the sweep comment above documents: the same
-    * round-11 sweep that measured 8.5 s at 30 busy partitions read a
-    * 52.9 s cliff at 32 (= every local[32] thread busy, starving
-    * Spark's scheduler/GC threads), so saturating `parallelism` is
-    * never the right answer — any corpus ≥ (parallelism−1)·2048 rows
-    * would land exactly on the measured cliff. Pure arithmetic so
-    * the spec pins the clamp without a fit.
-    */
-  private[graft] def treePartitions(
-      parallelism: Int, nRows: Long, rowsPerPartition: Long): Int = {
-    val cap = math.max(1, parallelism - 2).toLong
-    math.max(1L, math.min(cap, nRows / rowsPerPartition + 1)).toInt
-  }
-
   /** Split + train + evaluate on a persisted (label, features) frame.
     * Returns (confusion, accuracy, fit seconds, prune+eval seconds).
     */
   private def trainOnFeatures(
       features: DataFrame,
       profiles: DataFrame,
-      nRows: Long,
       maxDepth: Int,
       seed: Long,
       cp: Double): (DataFrame, Double, Double, Double) = {
     val tFit0 = System.nanoTime()
-    val (train0, test0) = StratifiedSplit.split(features, "label", 0.7, seed)
-    // The content-hash split keeps the input's partitioning (its only
-    // shuffle is the tiny per-(shard,label) quota aggregate), so the
-    // train/test frames inherit whatever width the feature pipeline
-    // left. Right-size before training — to the DATA, not the session
-    // parallelism. 2048 rows/partition is MEASURED, not assumed: a
-    // round-11 sweep at local[32] over the 59,946-row sf0.1 corpus
-    // (quiet box, bracket-spin-verified best-of-2 per point) read
-    // fit = 26.5 s at 8192 (8 partitions — 24 cores idle), 10.9 s at
-    // 4096 (15), 8.5 s at 2048 (30), and a cliff to 52.9 s at 1024
-    // (32 partitions = every executor thread busy, which starves
-    // Spark's own scheduler/GC threads at local[32]). Leaving ~2
-    // threads of headroom below the core count is the same rule a
-    // 1000-executor cluster follows per-executor.
-    val parallelism = features.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val rowsPerPartition =
-      sys.env.get("SPARK_GRAFT_TREE_ROWS_PER_PART").map(_.toLong)
-        .getOrElse(2048L)
-    val nPart = treePartitions(parallelism, nRows, rowsPerPartition)
-    val train = train0.repartition(nPart)
-    val test = test0.repartition(nPart)
-    // MLlib's distributed trainer is the SCALE path (sampled bins,
-    // per-level aggregateByKey — the right trade at 60k..100 TB
-    // rows); its fitted tree depends on the partition layout, which
-    // is why the oracle-pinned q_confusion uses the exact
-    // [[graft.operators.DeterministicCart]] twin instead. Here the
-    // bench pins ACCURACY (layout-robust), never the tree shape.
-    val dt = new DecisionTreeClassifier()
-      .setLabelCol("label").setFeaturesCol("features")
-      .setMaxDepth(maxDepth).setSeed(seed)
-    val grown = dt.fit(train)
+    val (train, test) = StratifiedSplit.split(features, "label", 0.7, seed)
+    val grown = DeterministicCart.fit(train, "features", "label", maxDepth)
     val fitSec = (System.nanoTime() - tFit0) / 1e9
     val tEval0 = System.nanoTime()
     // rpart's capacity control: weakest-link prune at cp (driver-side

@@ -1,17 +1,21 @@
 package graft.operators
 
+import scala.annotation.tailrec
 import scala.collection.mutable
 
 import org.apache.spark.ml.classification.DecisionTreeClassificationModel
 import org.apache.spark.ml.graftbridge.TreeBridge
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.tree.Node
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 /** Exact, partition-layout-invariant CART trainer for binary labels —
   * the determinism twin of the reference's `rpart` fit
   * (`/root/reference/Week5_datingNLP.R:178`).
+  * It is the flagship's trainer ([[graft.OkCupidPipeline]]).
   *
   * MLlib's `DecisionTreeClassifier` bins continuous features by
   * SAMPLING and aggregates float impurities in partition order, so the
@@ -23,26 +27,29 @@ import org.apache.spark.sql.functions._
   * row order. That also makes it rpart-faithful: rpart evaluates every
   * observed value as a split candidate (no binning).
   *
-  * Per tree level, one distributed pass:
-  *   1. explode the active rows' nonzero (feature, value) pairs and
-  *      hash-aggregate exact `(count, positives)` per
-  *      `(node, feature, value)`; the implicit value-0 group is
-  *      reconstructed from node totals (sparse vectors never
-  *      materialize their zeros);
-  *   2. a window over `(node, feature)` ordered by value turns the
-  *      group counts into prefix sums = left-child stats for the
-  *      "x <= v" candidate split at every observed value;
-  *   3. Gini gain is computed from those exact longs, and the best
-  *      split per node is `max(struct(gain, -feature, -value))` — a
-  *      lexicographic arg-max whose tie-break (gain desc, feature asc,
-  *      value asc) is total, so ties cannot reintroduce
-  *      nondeterminism. IEEE doubles derived from exact integers are
-  *      reproducible across JVMs and layouts.
-  * Only ONE ROW PER ACTIVE NODE reaches the driver (≤ 2^depth), never
-  * the per-term stats — the shape scales like MLlib's own per-level
-  * `aggregateByKey` (PLANET); the extra cost vs binning is bounded by
-  * the number of distinct values per feature (small integers for count
-  * vectors).
+  * The split rule: exact `(cnt, pos)` per `(node, feature, value)`
+  * over the nonzeros; the implicit value-0 group (sparse vectors never
+  * materialize their zeros) is reconstructed from the node totals and
+  * sorted into value order; a prefix scan turns the groups into the
+  * left-child stats of every "x <= v" candidate (the rightmost prefix,
+  * `nl = n`, is not a split); Gini gain uses `StrictMath.pow`; the best
+  * split per node is the arg-max under gain desc, feature asc, value
+  * asc — a total order, so ties cannot reintroduce nondeterminism.
+  *
+  * How it runs (PLANET's two regimes, Panda et al., VLDB 2009):
+  *   1. one root pass caches the `(label, nonzeros)` rows and counts
+  *      rows, positives, nonzeros and `numFeatures`;
+  *   2. while the active rows are too big for the driver, each level
+  *      is ONE job: rows are routed by walking the split table grown
+  *      so far (Spark SQL `<=`), per-partition hash maps hold the
+  *      stats, `reduceByKey` on `(node, feature)` runs the prefix-scan
+  *      kernel reduce-side, and only one best row per node reaches the
+  *      driver — with each child's row and nonzero counts;
+  *   3. once the active rows' bytes fit under half of Spark's own
+  *      `spark.driver.maxResultSize` (the cap on one collect; a quarter
+  *      of the driver heap if that is lower), they are collected once
+  *      and every remaining level grows on the driver through the same
+  *      kernel, so the two regimes cannot disagree. No knob of its own.
   *
   * The result is a stock [[DecisionTreeClassificationModel]] (built
   * via [[TreeBridge]] with exact class counts), so
@@ -50,17 +57,146 @@ import org.apache.spark.sql.functions._
   */
 object DeterministicCart {
 
-  // Nonzero (index, value) pairs of a sparse/dense MLlib vector: the
-  // native graft.functions.vector_nonzeros kernel (round 18) — the
-  // former UDF here paid a full VectorUDT deserialization plus a
-  // reflection-encoded tuple conversion per row on the stats-pass
-  // scan, the hottest loop of the fit.
+  /** A training row: label, dimension, nonzeros (indices ascending). */
+  private final case class Pt(
+      y: Long, size: Int, idx: Array[Int], vals: Array[Double]) {
+    def at(f: Int): Double = {
+      val k = java.util.Arrays.binarySearch(idx, f)
+      if (k >= 0) vals(k) else 0.0
+    }
+  }
+
+  /** Exact rows, positives and nonzeros of a node. */
+  private final case class Tot(n: Long, p: Long, nnz: Long) {
+    def impure: Boolean = p > 0L && p < n
+    /** Its rows' driver bytes: 12 per nonzero, 48 per row. */
+    def bytes: Long = 12L * nnz + 48L * n
+  }
+
+  private final case class Split(feat: Int, thr: Double, left: Int, right: Int)
+
+  /** A candidate split: left-child rows, positives and nonzeros. */
+  private final case class Cand(
+      gain: Double, feat: Int, v: Double, nl: Long, pl: Long, zl: Long)
+
+  /** `(cnt, pos, nnz)` of one (node, feature) per nonzero value, ascending. */
+  private final class Hist(val v: Array[Double], val cnt: Array[Long],
+      val pos: Array[Long], val nnz: Array[Long]) extends Serializable
+
+  /** Spark SQL's double order: NaN above everything, -0.0 == 0.0. */
+  private def sqlCmp(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  @tailrec
+  private def route(splits: Map[Int, Split], pt: Pt, id: Int = 0): Int =
+    splits.get(id) match {
+      case Some(s) =>
+        route(splits, pt,
+          if (sqlCmp(pt.at(s.feat), s.thr) <= 0) s.left else s.right)
+      case None => id
+    }
+
+  /** Histograms of every (node, feature) over the rows that route to an
+    * active node, keyed `node << 32 | feature`.
+    */
+  private def histograms(rows: Iterator[Pt], splits: Map[Int, Split],
+      active: Set[Int]): Iterator[(Long, Hist)] = {
+    // value keys are IEEE bits: one NaN key, and zeros never occur
+    val acc = mutable.LongMap.empty[mutable.LongMap[Array[Long]]]
+    rows.foreach { pt =>
+      val node = route(splits, pt)
+      if (active(node)) {
+        var i = 0
+        while (i < pt.idx.length) {
+          val c = acc.getOrElseUpdate((node.toLong << 32) | pt.idx(i),
+            mutable.LongMap.empty[Array[Long]])
+            .getOrElseUpdate(java.lang.Double.doubleToLongBits(pt.vals(i)),
+              new Array[Long](3))
+          c(0) += 1L; c(1) += pt.y; c(2) += pt.idx.length
+          i += 1
+        }
+      }
+    }
+    acc.iterator.map { case (key, byValue) =>
+      val e = byValue.toArray
+        .map { case (bits, c) => (java.lang.Double.longBitsToDouble(bits), c) }
+        .sortBy(_._1)(Ordering.Double.TotalOrdering)
+      key -> new Hist(e.map(_._1), e.map(_._2(0)), e.map(_._2(1)),
+        e.map(_._2(2)))
+    }
+  }
+
+  private def merge(a: Hist, b: Hist): Hist = {
+    val vs = mutable.ArrayBuilder.make[Double]
+    val cs, ps, zs = mutable.ArrayBuilder.make[Long]
+    var (i, j) = (0, 0)
+    while (i < a.v.length || j < b.v.length) {
+      val c = if (i == a.v.length) 1 else if (j == b.v.length) -1
+        else java.lang.Double.compare(a.v(i), b.v(j))
+      def sum(f: Hist => Array[Long]): Long =
+        (if (c <= 0) f(a)(i) else 0L) + (if (c >= 0) f(b)(j) else 0L)
+      vs += (if (c <= 0) a.v(i) else b.v(j))
+      cs += sum(_.cnt); ps += sum(_.pos); zs += sum(_.nnz)
+      if (c <= 0) i += 1
+      if (c >= 0) j += 1
+    }
+    new Hist(vs.result(), cs.result(), ps.result(), zs.result())
+  }
 
   /** Gini impurity 1 - (p/n)^2 - ((n-p)/n)^2 from exact long counts. */
-  private def gini(n: Column, p: Column): Column = {
-    val nd = n.cast("double")
-    lit(1.0) - pow(p.cast("double") / nd, 2) -
-      pow((n - p).cast("double") / nd, 2)
+  private def gini(n: Long, p: Long): Double = {
+    val nd = n.toDouble
+    1.0 - StrictMath.pow(p.toDouble / nd, 2) -
+      StrictMath.pow((n - p).toDouble / nd, 2)
+  }
+
+  /** The kernel: best "x <= v" split of one (node, feature), ties to
+    * the smaller value.
+    */
+  private def bestSplit(t: Tot, feat: Int, h: Hist): Option[Cand] = {
+    var (nl, pl, zl) = (0L, 0L, 0L)
+    var best: Cand = null
+    def step(v: Double, c: Long, q: Long, z: Long): Unit = {
+      nl += c; pl += q; zl += z
+      if (nl < t.n) {
+        val g = gini(t.n, t.p) - nl.toDouble / t.n.toDouble * gini(nl, pl) -
+          (t.n - nl).toDouble / t.n.toDouble * gini(t.n - nl, t.p - pl)
+        if (best == null || sqlCmp(g, best.gain) > 0)
+          best = Cand(g, feat, v, nl, pl, zl)
+      }
+    }
+    val zeros = t.n - h.cnt.sum
+    var zeroDone = zeros == 0L
+    def zero(): Unit = {
+      step(0.0, zeros, t.p - h.pos.sum, t.nnz - h.nnz.sum); zeroDone = true
+    }
+    for (i <- h.v.indices) {
+      if (!zeroDone && java.lang.Double.compare(h.v(i), 0.0) > 0) zero()
+      step(h.v(i), h.cnt(i), h.pos(i), h.nnz(i))
+    }
+    if (!zeroDone) zero()
+    Option(best)
+  }
+
+  /** Per-node arg-max order: gain desc, feature asc, value asc. */
+  private def better(a: Cand, b: Cand): Cand = {
+    val g = sqlCmp(a.gain, b.gain)
+    if (g > 0 || g == 0 && (a.feat < b.feat ||
+        a.feat == b.feat && sqlCmp(a.v, b.v) <= 0)) a else b
+  }
+
+  private def candidates(totals: Map[Int, Tot])(kh: (Long, Hist))
+      : Option[(Int, Cand)] = {
+    val node = (kh._1 >>> 32).toInt
+    bestSplit(totals(node), kh._1.toInt, kh._2).map(node -> _)
+  }
+
+  /** Bytes of active rows the driver may hold. */
+  private def localBudget(spark: SparkSession): Long = {
+    val cap = spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    math.min(if (cap > 0) cap / 2 else Long.MaxValue,
+      Runtime.getRuntime.maxMemory / 4)
   }
 
   /** Fit on `df(featuresCol: VectorUDT, labelCol ∈ {0, 1})`. */
@@ -69,184 +205,91 @@ object DeterministicCart {
       featuresCol: String,
       labelCol: String,
       maxDepth: Int = 8,
-      minInfoGain: Double = 0.0): DecisionTreeClassificationModel = {
-    val spark = df.sparkSession
-    import spark.implicits._
+      minInfoGain: Double = 0.0): DecisionTreeClassificationModel =
+    grow(df, featuresCol, labelCol, maxDepth, minInfoGain,
+      localBudget(df.sparkSession))._1
 
-    val numFeatures =
-      df.select(col(featuresCol)).head.getAs[Vector](0).size
-    var assign = df
-      .select(col(featuresCol).as("f"), col(labelCol).cast("long").as("y"),
-        lit(0).as("node"))
-      .cache()
-
-    // driver bookkeeping: exact (rows, positives) per node + split arcs
-    val counts = mutable.Map.empty[Int, (Long, Long)]
-    val splits = mutable.Map.empty[Int, (Int, Double, Int, Int)]
-    var nextId = 1
-    val rootRow = assign.agg(
-      count(lit(1)).cast("long"), sum(col("y")).cast("long")).head
-    counts(0) = (rootRow.getLong(0), rootRow.getLong(1))
-    def impure(id: Int): Boolean = {
-      val (n, p) = counts(id); p > 0L && p < n
-    }
-    var active: Seq[Int] = Seq(0).filter(impure)
-
-    var depth = 0
-    while (depth < maxDepth && active.nonEmpty) {
-      val totals = broadcast(
-        active.map(id => (id, counts(id)._1, counts(id)._2))
-          .toDF("node", "n", "p"))
-
-      val stats = assign
-        .filter(col("node").isInCollection(active))
-        .select(col("node"),
-          explode(graft.functions.vector_nonzeros(col("f"))).as("e"),
-          col("y"))
-        .groupBy(col("node"), col("e._1").as("feat"), col("e._2").as("v"))
-        .agg(count(lit(1)).cast("long").as("cnt"),
-          sum(col("y")).cast("long").as("pos"))
-      // Split search per (node, feature): the per-value stats of a
-      // group collapse into ONE sorted array row, and the prefix-sum
-      // + arg-max run as an in-array fold — where the previous
-      // formulation shuffled the full (node, feat, v) stats table a
-      // SECOND time for a window (plus a third for the node arg-max
-      // over every candidate), this one's second exchange carries
-      // one compact row per (node, feature) and the node arg-max
-      // sees ≤ |features| rows per node. Same candidate set (the
-      // implicit value-0 group is sorted into value order when the
-      // node has zero mass; the rightmost prefix nl = n is skipped),
-      // same gain doubles
-      // (the shared gini/gain expression tree), same total order
-      // (gain desc, then nv = -v within a feature, then nf = -feat
-      // across features — arg-max decomposes per feature), so the
-      // fitted tree is bit-identical (q_confusion + the brute-force
-      // spec pin it).
-      val bestStructType = "struct<gain:double,nv:double,v:double," +
-        "nl:bigint,pl:bigint>"
-      def gainOf(nl: Column, pl: Column): Column =
-        gini(col("n"), col("p")) -
-          nl.cast("double") / col("n").cast("double") * gini(nl, pl) -
-          (col("n") - nl).cast("double") / col("n").cast("double") *
-            gini(col("n") - nl, col("p") - pl)
-      val perNF = stats
-        .groupBy(col("node"), col("feat"))
-        .agg(sort_array(collect_list(
-            struct(col("v"), col("cnt"), col("pos")))).as("arr"),
-          sum(col("cnt")).as("nzc"), sum(col("pos")).as("nzp"))
-        .join(totals, "node")
-      // The implicit value-0 group must land at its SORTED position,
-      // not the front: features are arbitrary doubles (fit() is a
-      // public API over any VectorUDT column), and for a vector with
-      // negative nonzero values the zero group sits mid-array. Structs
-      // compare field-by-field and `v` is distinct per (node, feat)
-      // group (it was a groupBy key), so sort_array orders exactly by
-      // value; for non-negative data (count vectors) zero is the
-      // minimum and the array is bit-identical to the old prepend.
-      val arr0 = when(col("n") > col("nzc"),
-        sort_array(concat(col("arr"), array(struct(lit(0.0).as("v"),
-            (col("n") - col("nzc")).as("cnt"),
-            (col("p") - col("nzp")).as("pos"))))))
-        .otherwise(col("arr"))
-      val folded = aggregate(
-        arr0,
-        struct(lit(0L).as("nl"), lit(0L).as("pl"),
-          lit(null).cast(bestStructType).as("best")),
-        (acc, x) => {
-          val nl2 = acc.getField("nl") + x.getField("cnt")
-          val pl2 = acc.getField("pl") + x.getField("pos")
-          val cand = struct(gainOf(nl2, pl2).as("gain"),
-            (-x.getField("v")).as("nv"), x.getField("v").as("v"),
-            nl2.as("nl"), pl2.as("pl"))
-          val old = acc.getField("best")
-          val better = when(old.isNull, cand)
-            .otherwise(when(
-              struct(cand.getField("gain").as("gain"),
-                cand.getField("nv").as("nv")) >
-                struct(old.getField("gain").as("gain"),
-                  old.getField("nv").as("nv")), cand)
-              .otherwise(old))
-          struct(nl2.as("nl"), pl2.as("pl"),
-            // rightmost prefix (nl = n) is not a split
-            when(nl2 >= col("n"), old).otherwise(better).as("best"))
-        })
-      val best = perNF
-        .select(col("node"), col("feat"), col("n"), col("p"),
-          folded.getField("best").as("b"))
-        .filter(col("b").isNotNull)
-        .groupBy(col("node"))
-        .agg(max(struct(col("b.gain").as("gain"), (-col("feat")).as("nf"),
-          col("b.nv").as("nv"), col("feat"), col("b.v").as("v"),
-          col("b.nl").as("nl"), col("b.pl").as("pl"))).as("b"))
-        .select(col("node"), col("b.gain"), col("b.feat"), col("b.v"),
-          col("b.nl"), col("b.pl"))
-        .collect() // ≤ one row per active node (≤ 2^depth)
-
-      val accepted = best.toSeq
-        .map(r => (r.getInt(0), r.getDouble(1), r.getInt(2), r.getDouble(3),
-          r.getLong(4), r.getLong(5)))
-        .filter { case (_, g, _, _, _, _) => g > 0.0 && g >= minInfoGain }
-        .sortBy(_._1) // child-id assignment independent of collect order
-      if (accepted.isEmpty) {
-        active = Nil
-      } else {
-        val children = mutable.ArrayBuffer.empty[Int]
-        val levelSplits = mutable.Map.empty[Int, (Int, Double, Int, Int)]
-        accepted.foreach { case (id, _, feat, v, nl, pl) =>
-          val (n, p) = counts(id)
-          val (l, r) = (nextId, nextId + 1); nextId += 2
-          splits(id) = (feat, v, l, r)
-          levelSplits(id) = (feat, v, l, r)
-          counts(l) = (nl, pl)
-          counts(r) = (n - nl, p - pl)
-          children += l += r
-        }
-        // ONE map-literal lookup + ONE codegen'd vector element read
-        // per row (VERDICT r17 #7), fully inside whole-stage codegen:
-        // the r17 map-lookup UDF still paid a per-row VectorUDT
-        // deserialization (the whole indices/values payload copied
-        // into a SparseVector) plus the codegen fence; element_at on
-        // the driver-small split-table literal plus
-        // [[graft.functions.vector_at]] reads the single routed
-        // element straight from the unsafe row. The comparison is
-        // Spark SQL's `<=` (NaN greater than every double) — the
-        // ORIGINAL pre-r17 when-chain semantics, restored per ADVICE
-        // r17: the UDF's Scala `f(feat) <= thr` was IEEE-false on a
-        // NaN threshold where SQL routes left. Feature values derive
-        // from count vectors here (never NaN), so the fitted tree is
-        // bit-identical either way (q_confusion re-verifies).
-        val table = levelSplits.toMap
-        val m = typedLit(table.map { case (id, (feat, thr, l, r)) =>
-          id -> (feat, thr, l, r) })
-        val e = element_at(m, col("node"))
-        val routed = when(e.isNull, col("node"))
-          .otherwise(when(
-            graft.functions.vector_at(col("f"), e.getField("_1"))
-              <= e.getField("_2"),
-            e.getField("_3")).otherwise(e.getField("_4")))
-        val prev = assign
-        assign = assign
-          .withColumn("node", routed)
-          .cache()
-        assign.count()
-        prev.unpersist()
-        active = children.toSeq.filter(impure)
+  /** [[fit]] with the driver budget in bytes; also returns how many
+    * levels ran distributed (the rest grew on the driver).
+    */
+  private[graft] def grow(
+      df: DataFrame,
+      featuresCol: String,
+      labelCol: String,
+      maxDepth: Int,
+      minInfoGain: Double,
+      budget: Long): (DecisionTreeClassificationModel, Int) = {
+    val rows: RDD[Pt] = df
+      .select(col(labelCol).cast("long"), col(featuresCol)).rdd
+      .map { r =>
+        val v = r.getAs[Vector](1)
+        val sv = v.toSparse
+        Pt(r.getLong(0), v.size, sv.indices, sv.values)
       }
-      depth += 1
-    }
-    assign.unpersist()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (n, p, nnz, numFeatures) = rows.aggregate((0L, 0L, 0L, 0))(
+        (a, pt) => (a._1 + 1L, a._2 + pt.y, a._3 + pt.idx.length,
+          math.max(a._4, pt.size)),
+        (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3,
+          math.max(a._4, b._4)))
+      require(n > 0L, "DeterministicCart.fit: empty training input " +
+        s"(no rows in column '$featuresCol')")
 
-    def build(id: Int): Node = splits.get(id) match {
-      case Some((feat, thr, l, r)) =>
-        val (n, p) = counts(id)
-        TreeBridge.internalOf(Array((n - p).toDouble, p.toDouble),
-          build(l), build(r), feat, thr)
-      case None =>
-        val (n, p) = counts(id)
-        TreeBridge.leafOf(Array((n - p).toDouble, p.toDouble))
-    }
-    val model = TreeBridge.modelOf(build(0), numFeatures, numClasses = 2)
-    model.setFeaturesCol(featuresCol)
-    model
+      // driver bookkeeping: exact totals per node + split arcs
+      val totals = mutable.Map(0 -> Tot(n, p, nnz))
+      var splits = Map.empty[Int, Split]
+      var nextId = 1
+      var active = Seq(0).filter(totals(_).impure)
+      var local: Array[Pt] = null // the active rows, once they fit
+      var distributed = 0
+      var depth = 0
+      while (depth < maxDepth && active.nonEmpty) {
+        val (table, act) = (splits, active.toSet)
+        val tots = active.map(id => id -> totals(id)).toMap
+        if (local == null && tots.values.map(_.bytes).sum <= budget)
+          local = rows.filter(pt => act(route(table, pt))).collect()
+        val best: Seq[(Int, Cand)] =
+          if (local != null) {
+            local = local.filter(pt => act(route(table, pt)))
+            histograms(local.iterator, table, act)
+              .flatMap(candidates(tots)).toSeq
+              .groupMapReduce(_._1)(_._2)(better).toSeq
+          } else {
+            distributed += 1
+            rows.mapPartitions(histograms(_, table, act))
+              .reduceByKey(merge _)
+              .flatMap(candidates(tots))
+              .reduceByKey(better _)
+              .collect().toSeq // ≤ one row per active node
+          }
+        val accepted = best
+          .filter { case (_, c) => c.gain > 0.0 && c.gain >= minInfoGain }
+          .sortBy(_._1) // child-id assignment independent of collect order
+        val children = accepted.flatMap { case (id, c) =>
+          val t = totals(id)
+          val (l, r) = (nextId, nextId + 1); nextId += 2
+          splits += id -> Split(c.feat, c.v, l, r)
+          totals(l) = Tot(c.nl, c.pl, c.zl)
+          totals(r) = Tot(t.n - c.nl, t.p - c.pl, t.nnz - c.zl)
+          Seq(l, r)
+        }
+        active = children.filter(totals(_).impure)
+        depth += 1
+      }
+
+      def build(id: Int): Node = {
+        val t = totals(id)
+        val counts = Array((t.n - t.p).toDouble, t.p.toDouble)
+        splits.get(id) match {
+          case Some(s) => TreeBridge.internalOf(counts, build(s.left),
+            build(s.right), s.feat, s.thr)
+          case None => TreeBridge.leafOf(counts)
+        }
+      }
+      val model = TreeBridge.modelOf(build(0), numFeatures, numClasses = 2)
+      model.setFeaturesCol(featuresCol)
+      (model, distributed)
+    } finally rows.unpersist()
   }
 }

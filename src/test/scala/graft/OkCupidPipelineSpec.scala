@@ -30,25 +30,4 @@ class OkCupidPipelineSpec extends SparkSuite {
     assert(!vocab.contains("dancing"))
     assert(vocab.contains("code"))    // coding → code
   }
-
-  test("treePartitions never saturates the executor thread count: " +
-      "the cap is parallelism - 2 (the measured 52.9s cliff at 32 " +
-      "busy partitions on local[32]), growth below the cap follows " +
-      "rows/2048, and degenerate parallelism still yields >= 1") {
-    import OkCupidPipeline.treePartitions
-    // any corpus >= 63,488 rows used to select 32 partitions — the
-    // configuration the round-11 sweep measured at 52.9 s vs 8.5 s
-    // at 30; the clamp must keep 2 threads of headroom
-    assert(treePartitions(32, 63488L, 2048L) === 30)
-    assert(treePartitions(32, 10000000L, 2048L) === 30)
-    // below the cap: data-sized, ceil-ish (n/2048 + 1)
-    assert(treePartitions(32, 59946L, 2048L) === 30)
-    assert(treePartitions(32, 20480L, 2048L) === 11)
-    assert(treePartitions(32, 1L, 2048L) === 1)
-    // degenerate session widths never go to zero
-    assert(treePartitions(1, 100000L, 2048L) === 1)
-    assert(treePartitions(2, 100000L, 2048L) === 1)
-    assert(treePartitions(3, 100000L, 2048L) === 1)
-    assert(treePartitions(4, 100000L, 2048L) === 2)
-  }
 }
