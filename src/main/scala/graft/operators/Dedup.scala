@@ -66,22 +66,35 @@ object Dedup {
       shingles: DataFrame,
       minJaccard: Double,
       maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    // pinned eagerly (r20, the weightedJaccardPairs finding): three
-    // consumers (both pair-join sides + sizes) materialize
-    // concurrently under AQE and each re-ran the shingle pipeline
-    // (profiled: 3× ~0.4-0.7 s shingle stages on q_dedup_containment/
-    // q_dedup_sources). pinOnce skips inputs a caller already pinned.
-    val capped = pinOnce(maxShingleDocFreq match {
-      case Some(cap) =>
-        val hot = shingles.groupBy(col("shingle"))
-          .agg(count(lit(1)).as("df")).filter(col("df") > cap)
-          .select("shingle")
-        shingles.join(broadcast(hot), Seq("shingle"), "left_anti")
-      case None => shingles
-    })
+    val capped = cappedPinned(shingles, maxShingleDocFreq)
     jaccardOf(pairCounts(capped), sizesOf(capped))
       .filter(col("jaccard") >= minJaccard)
   }
+
+  /** The shingle frame every pair kernel reads, hot shingles (doc
+    * frequency above `maxShingleDocFreq`) dropped, pinned once.
+    *
+    * Pinned eagerly (r20, the weightedJaccardPairs finding): the
+    * kernels read it from three or four consumers (both pair-join
+    * sides, the size or weight passes), each with a DIFFERENT pruned
+    * column set, so their scan subtrees canonicalize differently and
+    * exchange reuse cannot dedupe them — profiled r20 as a full
+    * shingle-pipeline execution per consumer (3× ~0.4-0.7 s shingle
+    * stages on q_dedup_containment/q_dedup_sources). A lazy persist
+    * does NOT close the hole: AQE materializes the consumer stages
+    * concurrently, so each computes its own copy before any cached
+    * partition completes (measured flat). The eager localCheckpoint
+    * runs the pipeline exactly once, at the plan's own width, and its
+    * blocks are ContextCleaner-managed (CacheLifecycle scaladoc).
+    */
+  private def cappedPinned(
+      shingles: DataFrame, maxShingleDocFreq: Option[Int]): DataFrame =
+    pinOnce(maxShingleDocFreq.fold(shingles) { cap =>
+      val hot = shingles.groupBy(col("shingle"))
+        .agg(count(lit(1)).as("df")).filter(col("df") > cap)
+        .select("shingle")
+      shingles.join(broadcast(hot), Seq("shingle"), "left_anti")
+    })
 
   /** Eager localCheckpoint unless `df` is ALREADY a pinned leaf (a
     * LogicalRDD from a caller's checkpoint) — re-pinning a pinned
@@ -110,21 +123,8 @@ object Dedup {
       shingles: DataFrame,
       minContainment: Double,
       maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    // pinned eagerly — four consumers (both pair-join sides + two
-    // size joins); see the jaccardPairs note
-    val capped = pinOnce(maxShingleDocFreq match {
-      case Some(cap) =>
-        val hot = shingles.groupBy(col("shingle"))
-          .agg(count(lit(1)).as("df")).filter(col("df") > cap)
-          .select("shingle")
-        shingles.join(broadcast(hot), Seq("shingle"), "left_anti")
-      case None => shingles
-    })
-    pairCounts(capped)
-      .join(sizesOf(capped).withColumnRenamed("id", "id_a")
-        .withColumnRenamed("n", "na"), "id_a")
-      .join(sizesOf(capped).withColumnRenamed("id", "id_b")
-        .withColumnRenamed("n", "nb"), "id_b")
+    val capped = cappedPinned(shingles, maxShingleDocFreq)
+    withSizes(pairCounts(capped), sizesOf(capped))
       .select(col("id_a"), col("id_b"),
         round(col("i").cast("double") /
           least(col("na"), col("nb")).cast("double"), 6).as("containment"),
@@ -157,24 +157,8 @@ object Dedup {
       shingles: DataFrame,
       minWeightedJaccard: Double,
       maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    // Pinned EAGERLY: THREE consumers read this frame (docFreq,
-    // nDocs, the weighting join), each with a DIFFERENT pruned column
-    // set, so their scan subtrees canonicalize differently and
-    // exchange reuse cannot dedupe them — profiled r20 as three full
-    // shingle-pipeline executions per query. A lazy persist does NOT
-    // close the hole: AQE materializes the three consumer stages
-    // concurrently, so each computes its own copy before any cached
-    // partition completes (measured flat). The eager localCheckpoint
-    // runs the pipeline exactly once, at the plan's own width, and
-    // its blocks are ContextCleaner-managed (CacheLifecycle scaladoc).
-    val capped = (maxShingleDocFreq match {
-      case Some(cap) =>
-        val hot = shingles.groupBy(col("shingle"))
-          .agg(count(lit(1)).as("df")).filter(col("df") > cap)
-          .select("shingle")
-        shingles.join(broadcast(hot), Seq("shingle"), "left_anti")
-      case None => shingles
-    }).localCheckpoint(true)
+    // three consumers (docFreq, nDocs, the weighting join)
+    val capped = cappedPinned(shingles, maxShingleDocFreq)
     val docFreq = capped.groupBy(col("shingle"))
       .agg(count(lit(1)).as("__df"))
     val nDocs = capped.select(col("id")).distinct()
@@ -185,20 +169,16 @@ object Dedup {
       .select(col("id"), col("shingle"),
         round(log10(col("__n_docs").cast("double") /
           col("__df").cast("double")) * lit(1e6)).cast("long").as("__w"))
-    val wSizes = weighted.groupBy(col("id")).agg(sum(col("__w")).as("wt"))
+    val wSizes = weighted.groupBy(col("id")).agg(sum(col("__w")).as("n"))
     val wInter = weighted.as("a")
       .join(weighted.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(sum(col("a.__w")).as("iw"))
-    wInter
-      .join(wSizes.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("wt", "wa"), "id_a")
-      .join(wSizes.withColumnRenamed("id", "id_b")
-        .withColumnRenamed("wt", "wb"), "id_b")
+    withSizes(wInter, wSizes)
       .select(col("id_a"), col("id_b"),
         round(col("iw").cast("double") /
-          (col("wa") + col("wb") - col("iw")).cast("double"), 6)
+          (col("na") + col("nb") - col("iw")).cast("double"), 6)
           .as("weighted_jaccard"))
       .filter(col("weighted_jaccard") >= minWeightedJaccard)
   }
@@ -213,12 +193,19 @@ object Dedup {
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("i"))
 
-  private def jaccardOf(inter: DataFrame, sizes: DataFrame): DataFrame =
-    inter
+  /** Both endpoints' sizes on a pair frame: `sizes` holds one
+    * (id, n) row per doc, the result gains `na` for `id_a` and `nb`
+    * for `id_b`.
+    */
+  private def withSizes(pairs: DataFrame, sizes: DataFrame): DataFrame =
+    pairs
       .join(sizes.withColumnRenamed("id", "id_a")
         .withColumnRenamed("n", "na"), "id_a")
       .join(sizes.withColumnRenamed("id", "id_b")
         .withColumnRenamed("n", "nb"), "id_b")
+
+  private def jaccardOf(inter: DataFrame, sizes: DataFrame): DataFrame =
+    withSizes(inter, sizes)
       .select(col("id_a"), col("id_b"),
         (col("i").cast("double") /
           (col("na") + col("nb") - col("i")).cast("double")).as("jaccard"))
@@ -250,12 +237,7 @@ object Dedup {
     require(minExactPpm >= 0 && minExactPpm <= 1000000L,
       s"minExactPpm: $minExactPpm")
     val sh = shingles.localCheckpoint(true)
-    val sizes = sizesOf(sh)
-    val exact = pairCounts(sh)
-      .join(sizes.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("n", "na"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b")
-        .withColumnRenamed("n", "nb"), "id_b")
+    val exact = withSizes(pairCounts(sh), sizesOf(sh))
       .withColumn("exact_ppm",
         expr("(i * CAST(1000000 AS BIGINT)) div (na + nb - i)"))
       .filter(col("exact_ppm") >= minExactPpm)

@@ -2,7 +2,10 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
@@ -203,7 +206,15 @@ case class MsprtRow(
   * count) plus the monotone fold count for final-row selection.
   */
 case class EnState(
-    a: Map[Long, Long], bm: Map[Long, Long], eventsSeen: Long)
+    a: Map[Long, Long], bm: Map[Long, Long], eventsSeen: Long) {
+
+  /** Fold one observation of value `x` into cohort B (`b`) or A. */
+  def observe(b: Boolean, x: Long): EnState =
+    if (b) copy(bm = bm.updated(x, bm.getOrElse(x, 0L) + 1L),
+      eventsSeen = eventsSeen + 1L)
+    else copy(a = a.updated(x, a.getOrElse(x, 0L) + 1L),
+      eventsSeen = eventsSeen + 1L)
+}
 
 /** Exact integer energy-distance pair sums emitted per trigger by
   * [[StreamingOps.energyState]]. Long accumulation bounds the
@@ -284,11 +295,17 @@ case class CmhRow(group: String, n: Long, n1: Long, m1: Long, o: Long)
   * `mapGroupsWithState`. The reference has no streaming (SURVEY §2.10);
   * these are the engine's scale-path extensions.
   *
-  * Each helper runs `readStream` → transform → memory sink and blocks
-  * with `processAllAvailable()` so a bounded parquet input behaves as a
+  * Every history goes through ONE replay path: [[parquetStream]]
+  * reads the file as a stream, [[replay]] projects the event stream
+  * to the state function's row type and runs it, and [[drainToFrame]]
+  * starts it into a memory sink and blocks with
+  * `processAllAvailable()`, so a bounded parquet input behaves as a
   * deterministic one-batch stream (the pattern the driver harness can
-  * check against a batch oracle). On a real cluster the same plans run
-  * unbounded with kafka/file sources and checkpointed sinks.
+  * check against a batch oracle); update-mode histories keep the last
+  * snapshot per key through [[latestPerKey]]. Session conf the replay
+  * needs is set for its own duration only. On a real cluster the
+  * same plans run unbounded with kafka/file sources and checkpointed
+  * sinks.
   *
   * Restart recovery is proven, not assumed: CheckpointRestartSpec
   * kills and restarts a `mapGroupsWithState` query ([[ewmaState]])
@@ -301,97 +318,100 @@ object StreamingOps {
 
   private val nameCounter = new AtomicInteger(0)
 
-  /** Input bytes of the stream source feeding the NEXT drain on this
-    * thread — set explicitly by the two stream-stream join helpers
-    * (via [[hintStatefulWidth]]) just before their [[drainToFrame]]
-    * call, which consumes (and clears) it to right-size
-    * stateful-operator parallelism.
+  /** Run `body` with each `settings` key set, then put back what the
+    * session held before: the previous value, or no setting at all.
+    * Session conf is shared across threads — the engine's helpers
+    * drain synchronously on the calling thread and nothing else
+    * plans queries on this session concurrently (single-threaded
+    * assumption; a concurrent planner would see the settings for
+    * the body's duration).
+    */
+  private def withConf[A](spark: SparkSession, settings: (String, String)*)(
+      body: => A): A = {
+    val before = spark.conf.getAll
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally settings.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  /** Start `out` into a fresh memory sink, drain it once (the
+    * bounded-input one-pass pattern every replay here uses), stop,
+    * and return the sink contents pinned with an eager
+    * localCheckpoint — then DROP the sink table, also when the drain
+    * or the checkpoint throws. A named memory sink left registered
+    * retains its full result set in the driver for the life of the
+    * session (every replay × repeated bench/verify invocations grew
+    * monotonically); checkpoint blocks are ContextCleaner-managed and
+    * reclaimed once the returned frame is unreferenced.
     *
-    * Why: a streaming query's state-store partition count is frozen
-    * at query start from `spark.sql.shuffle.partitions` — AQE never
-    * coalesces stateful exchanges the way it does batch ones, so a
-    * bounded replay of a small input still opens, commits and
+    * `stateSource` right-sizes stateful-operator parallelism from the
+    * input size. A streaming query's state-store partition count is
+    * frozen at query start from `spark.sql.shuffle.partitions` — AQE
+    * never coalesces stateful exchanges the way it does batch ones,
+    * so a bounded replay of a small input still opens, commits and
     * snapshots `shuffle.partitions` state stores per stateful
     * operator per micro-batch (measured: the stream-stream left-join
     * bench entry spent most of its wall in 32-way state-store task
-    * overhead on a 2 MB input). The width is DERIVED FROM INPUT SIZE
-    * (~32 MB of source per state partition), clamped to the session's
-    * configured width: at production scale `bytes/32MB` exceeds any
-    * sane session setting, so the clamp returns the configured
-    * parallelism unchanged — a local constant is exactly what this
-    * is NOT (the round rule: derive, don't tune).
+    * overhead on a 2 MB input). Given the source path, the start and
+    * drain run at a width DERIVED FROM ITS SIZE (~32 MB of source per
+    * state partition), clamped to the session's configured width: at
+    * production scale `bytes/32MB` exceeds any sane session setting,
+    * so the clamp returns the configured parallelism unchanged — a
+    * local constant is exactly what this is NOT (derive, don't tune).
+    * A failing size probe keeps the session width.
     *
-    * Applied ONLY by the stream-stream join helpers: their per-batch
+    * Only the stream-stream join helpers pass it: their per-batch
     * cost is dominated by state-STORE lifecycle (each partition
     * opens, updates and commits FOUR stores — two per join side —
     * every micro-batch), which the input-derived width collapses;
-    * stateless and single-store helpers keep the session width,
+    * stateless and single-store replays keep the session width,
     * where the same measurement showed the narrower microbatch
     * shuffles LOSING more compute parallelism than the store
     * overhead they saved (12 small stream queries drifted 1.1-1.5×
-    * under a blanket hint; the join read 0.45×).
+    * under a blanket width; the join read 0.45×).
     */
-  private val statefulWidthHint = new ThreadLocal[java.lang.Long]
+  private def drainToFrame(
+      out: DataFrame,
+      mode: OutputMode,
+      stateSource: Option[String] = None): DataFrame = {
+    val spark = out.sparkSession
+    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
+    val confKey = "spark.sql.shuffle.partitions"
+    val width = stateSource.flatMap(sourceBytes(spark, _)).map { bytes =>
+      val orig = spark.conf.get(confKey).toLong
+      confKey ->
+        math.max(1L, math.min(orig, bytes / (32L << 20) + 1L)).toString
+    }
+    try {
+      // the width is read once, at query start: set it just for the
+      // start + drain
+      withConf(spark, width.toSeq: _*) {
+        val q = out.writeStream.outputMode(mode)
+          .format("memory").queryName(name)
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      spark.table(name).localCheckpoint(eager = true)
+    } finally spark.catalog.dropTempView(name)
+  }
 
-  private def hintStatefulWidth(spark: SparkSession, path: String): Unit =
+  /** Input bytes under `path`, or None when the probe fails. */
+  private def sourceBytes(spark: SparkSession, path: String): Option[Long] =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bytes = fs.getContentSummary(p).getLength
-      val prev = Option(statefulWidthHint.get).map(_.longValue).getOrElse(0L)
-      statefulWidthHint.set(math.max(prev, bytes))
+      Some(fs.getContentSummary(p).getLength)
     } catch {
       case scala.util.control.NonFatal(e) =>
         // fatal errors (OOM, interrupts) must propagate; a failing
         // size probe only disables the width optimization — say so
         System.err.println(
-          s"[graft] hintStatefulWidth: size probe for $path failed " +
+          s"[graft] drainToFrame: size probe for $path failed " +
             s"($e) - stream keeps the session shuffle width")
-        statefulWidthHint.remove()
+        None
     }
-
-  /** Start `out` into a fresh memory sink, drain it once (the
-    * bounded-input one-pass pattern every helper here uses), stop,
-    * and return the sink contents pinned with an eager
-    * localCheckpoint — then DROP the sink table. A named memory sink
-    * left registered retains its full result set in the driver for
-    * the life of the session (31 helpers × repeated bench/verify
-    * invocations grew monotonically); checkpoint blocks are
-    * ContextCleaner-managed and reclaimed once the returned frame is
-    * unreferenced.
-    */
-  private def drainToFrame(
-      out: DataFrame,
-      mode: org.apache.spark.sql.streaming.OutputMode): DataFrame = {
-    val spark = out.sparkSession
-    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    // state-partition right-sizing (see statefulWidthHint): the conf
-    // is read once, at query start, so set it just for the start +
-    // drain and restore afterwards. The override mutates SESSION
-    // conf, which is shared across threads — the engine's helpers
-    // drain synchronously on the calling thread and nothing else
-    // plans queries on this session concurrently (single-threaded
-    // assumption; a concurrent planner would inherit the narrowed
-    // width for the drain's duration)
-    val confKey = "spark.sql.shuffle.partitions"
-    val orig = spark.conf.get(confKey)
-    val target = Option(statefulWidthHint.get).map { bytes =>
-      math.max(1L, math.min(orig.toLong, bytes / (32L << 20) + 1L))
-    }
-    statefulWidthHint.remove()
-    try {
-      target.foreach(t => spark.conf.set(confKey, t.toString))
-      val q = out.writeStream.outputMode(mode)
-        .format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      if (target.isDefined) spark.conf.set(confKey, orig)
-    }
-    val result = spark.table(name).localCheckpoint(eager = true)
-    spark.catalog.dropTempView(name)
-    result
-  }
 
   /** The file stream source wants a directory; when given a single
     * file, stream its parent with a glob filter on the file name.
@@ -413,17 +433,78 @@ object StreamingOps {
     else (path, "*")
   }
 
-  /** Streaming read of the events parquet (nanos timestamps → µs;
-    * see Tables.events for the rationale).
+  /** The one parquet stream reader: the batch schema of `path`, then
+    * a file stream over it (see [[dirAndGlob]]).
     */
-  private def readEventStream(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def parquetStream(
+      spark: SparkSession, path: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val schema = spark.read.parquet(path).schema
     val (dir, glob) = dirAndGlob(spark, path)
-    graft.Tables.normalizeTs(
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob).parquet(dir))
+    val reader = spark.readStream.schema(schema)
+      .option("pathGlobFilter", glob)
+    maxFilesPerTrigger
+      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+      .parquet(dir)
   }
+
+  /** The one replay path over the events parquet: `build` turns the
+    * event stream into the frame to drain, calling its reader once per
+    * stream source it needs (nanos timestamps → µs; see Tables.events
+    * for the rationale). `nanosAsLong` is set for the schema read and
+    * the drain only, then the session's own setting comes back.
+    */
+  private[graft] def replayEvents(
+      spark: SparkSession, path: String, mode: OutputMode,
+      stateSource: Option[String] = None)(
+      build: (() => DataFrame) => DataFrame): DataFrame =
+    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      drainToFrame(
+        build(() => graft.Tables.normalizeTs(parquetStream(spark, path))),
+        mode, stateSource)
+    }
+
+  /** [[replayEvents]] for the stateful twins: the event stream
+    * projected by `proj` to `T`, then the `state` function.
+    */
+  private[graft] def replay[T <: Product : TypeTag](
+      spark: SparkSession, path: String, mode: OutputMode, proj: Column*)(
+      state: Dataset[T] => Dataset[_]): DataFrame =
+    replayEvents(spark, path, mode)(read =>
+      state(read().select(proj: _*).as(Encoders.product[T])).toDF())
+
+  /** Event projections several twins share: the change-log row, the
+    * measurement row, the (group, day) arrival and the cohort-tagged
+    * integer cents — each the SAME Spark expressions the batch query
+    * of its twin uses.
+    */
+  private val chgCols = Seq(col("user_id"), unix_micros(col("ts")).as("us"),
+    col("event_type"), col("event_id"))
+  private val measCols = Seq(col("user_id").as("key"),
+    unix_micros(col("ts")).as("us"), col("event_id").as("tie"),
+    col("value").as("v"))
+  private val dayCols = Seq(col("event_type").as("group"),
+    unix_micros(date_trunc("day", col("ts"))).as("di"))
+  private val cohortB = (pmod(col("user_id"), lit(2L)) === 1).as("b")
+  private val cohortCents = Seq(col("event_type").as("group"), cohortB,
+    round(col("value") * 100).cast("long").as("x"))
+
+  /** Keep the row with the largest `order` per `keys`: update-mode
+    * sinks append one snapshot per key per trigger, and the fold's
+    * monotone count picks the final one even if the file source
+    * happens to split the input into several micro-batches.
+    */
+  private[graft] def latestPerKey(
+      frame: DataFrame, keys: Seq[String], order: Column): DataFrame =
+    ranked(frame, keys, order).filter(col("__rn") === 1).drop("__rn")
+
+  /** `frame` with each row's 1-based rank within `keys` under
+    * `orders` in `__rn`.
+    */
+  private def ranked(
+      frame: DataFrame, keys: Seq[String], orders: Column*): DataFrame =
+    frame.withColumn("__rn", row_number().over(
+      Window.partitionBy(keys.map(col): _*).orderBy(orders: _*)))
 
   /** The windowed-aggregation transform itself, source-agnostic: a
     * watermarked hourly tumbling window with exact DECIMAL sums. Shared
@@ -510,14 +591,10 @@ object StreamingOps {
   def closedSessionSpans(
       spark: SparkSession,
       path: String,
-      gapSeconds: Long = 1800L): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("user_id"), unix_micros(col("ts")).as("us")).as[Ev]
-    val spans = sessionSpans(stream, gapSeconds)
-    val __sink = drainToFrame(spans.toDF(), OutputMode.Append)
-    __sink
-  }
+      gapSeconds: Long = 1800L): DataFrame =
+    replay[Ev](spark, path, OutputMode.Append,
+      col("user_id"), unix_micros(col("ts")).as("us"))(
+      sessionSpans(_, gapSeconds))
 
   /** Streaming SCD2: closed dimension-history intervals via
     * `flatMapGroupsWithState` — the streaming twin of
@@ -559,15 +636,8 @@ object StreamingOps {
   /** [[scd2Intervals]] over the events parquet (memory sink, append),
     * tracking event_type as the dimension attribute.
     */
-  def scd2History(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"), col("event_id")).as[Chg]
-    val out = scd2Intervals(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Append)
-    __sink
-  }
+  def scd2History(spark: SparkSession, path: String): DataFrame =
+    replay[Chg](spark, path, OutputMode.Append, chgCols: _*)(scd2Intervals)
 
   /** Streaming last-touch attribution: the batch `q_attribution`
     * window pass as `flatMapGroupsWithState` — state per user is ONE
@@ -605,15 +675,9 @@ object StreamingOps {
   }
 
   /** [[attributionStream]] over the events parquet (memory sink). */
-  def attributionHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"), col("event_id")).as[Chg]
-    val out = attributionStream(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Append)
-    __sink
-  }
+  def attributionHistory(spark: SparkSession, path: String): DataFrame =
+    replay[Chg](spark, path, OutputMode.Append, chgCols: _*)(
+      attributionStream)
 
   /** Streaming EWMA (α=1/2): the [[graft.operators.TimeSeries]]
     * recurrence as `mapGroupsWithState` — state per key is the ONE
@@ -646,26 +710,12 @@ object StreamingOps {
   /** [[ewmaState]] over the events parquet (memory sink, update
     * mode); output shape and rounding match the batch `q_ewma`.
     */
-  def ewmaHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("user_id").as("key"), unix_micros(col("ts")).as("us"),
-        col("event_id").as("tie"), col("value").as("v")).as[Meas]
-    val out = ewmaState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    // Update mode appends one row per key per trigger; keep only the
-    // LAST state per key (max n — n is monotone in the fold) so the
-    // result is one row per user even if the file source happens to
-    // split the input into several micro-batches.
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("n").desc)
-    __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+  def ewmaHistory(spark: SparkSession, path: String): DataFrame =
+    latestPerKey(
+      replay[Meas](spark, path, OutputMode.Update, measCols: _*)(ewmaState),
+      Seq("key"), col("n").desc)
       .select(col("key").as("user_id"), col("n"),
         round(col("ewma"), 6).as("ewma"))
-  }
 
   /** Streaming debounce: the q_debounce lag-comparison as
     * `flatMapGroupsWithState` keyed by (user, type) — state is ONE
@@ -699,16 +749,10 @@ object StreamingOps {
     * output shape matches the batch `q_debounce`.
     */
   def debounceHistory(
-      spark: SparkSession, path: String, gapUs: Long): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"), col("event_id")).as[Chg]
-    val out = debounceStream(stream, gapUs)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Append)
-    __sink
+      spark: SparkSession, path: String, gapUs: Long): DataFrame =
+    replay[Chg](spark, path, OutputMode.Append, chgCols: _*)(
+      debounceStream(_, gapUs))
       .select(col("event_id"), col("user_id"), col("event_type"))
-  }
 
   /** Streaming Holt (α=β=1/2): [[graft.operators.TimeSeries.holtHalf]]
     * as `mapGroupsWithState` — O(1) (level, trend) state per key where
@@ -742,24 +786,13 @@ object StreamingOps {
   /** [[holtState]] over the events parquet (memory sink, update mode);
     * output shape and rounding match the batch `q_holt`.
     */
-  def holtHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("user_id").as("key"), unix_micros(col("ts")).as("us"),
-        col("event_id").as("tie"), col("value").as("v")).as[Meas]
-    val out = holtState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    // last state per key only — see ewmaHistory
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("n").desc)
-    __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+  def holtHistory(spark: SparkSession, path: String): DataFrame =
+    latestPerKey(
+      replay[Meas](spark, path, OutputMode.Update, measCols: _*)(holtState),
+      Seq("key"), col("n").desc)
       .select(col("key").as("user_id"), col("n"),
         round(col("l"), 6).as("level"), round(col("b"), 6).as("trend"),
         round(col("l") + col("b"), 6).as("forecast"))
-  }
 
   /** Streaming Holt-Winters (period 4, α=β=γ=1/2): the
     * `TimeSeries.holtWintersHalf` recurrence as O(1)
@@ -809,19 +842,11 @@ object StreamingOps {
     * rounding match the batch `q_holt_winters` (memory sink, update
     * mode, last state per key by the monotone n).
     */
-  def holtWintersHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("user_id").as("key"), unix_micros(col("ts")).as("us"),
-        col("event_id").as("tie"), col("value").as("v")).as[Meas]
-    val out = holtWintersState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("n").desc)
-    __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+  def holtWintersHistory(spark: SparkSession, path: String): DataFrame =
+    latestPerKey(
+      replay[Meas](spark, path, OutputMode.Update, measCols: _*)(
+        holtWintersState),
+      Seq("key"), col("n").desc)
       .select(col("key").as("user_id"), col("n"),
         round(col("l"), 6).as("level"), round(col("b"), 6).as("trend"),
         round(col("s0"), 6).as("s0"), round(col("s1"), 6).as("s1"),
@@ -831,7 +856,6 @@ object StreamingOps {
             .when(pmod(col("n"), lit(4L)) === 1, col("s1"))
             .when(pmod(col("n"), lit(4L)) === 2, col("s2"))
             .otherwise(col("s3")), 6).as("forecast"))
-  }
 
   /** Streaming funnel state: earliest signup/view/click/purchase
     * µs per user as O(1) `mapGroupsWithState` — each event only
@@ -872,23 +896,14 @@ object StreamingOps {
     * bit-for-bit and shares its oracle.
     */
   def funnelHistogram(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"), col("event_id")).as[Chg]
-    val out = funnelState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("userId")).orderBy(col("n").desc)
     val stage = when(col("t1") === 0L, 0)
       .when(col("t2") === 0L || col("t2") <= col("t1"), 1)
       .when(col("t3") === 0L || col("t3") <= col("t2"), 2)
       .when(col("t4") === 0L || col("t4") <= col("t3"), 3)
       .otherwise(4)
-    __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+    latestPerKey(
+      replay[Chg](spark, path, OutputMode.Update, chgCols: _*)(funnelState),
+      Seq("userId"), col("n").desc)
       .select(stage.as("stage"))
       .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
       .orderBy(col("stage"))
@@ -950,21 +965,15 @@ object StreamingOps {
     * statistics — output shape matches `q_mann_kendall` and shares
     * its oracle.
     */
-  def mannKendallHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
+  def mannKendallHistory(spark: SparkSession, path: String): DataFrame =
+    latestPerKey(
+      replay[MkObs](spark, path, OutputMode.Update,
+        col("event_type").as("group"),
         datediff(to_date(col("ts")), to_date(lit("2024-01-01")))
           .cast("long").as("di"),
-        round(col("value") * 100).cast("long").as("cents")).as[MkObs]
-    val out = mannKendallState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group")).orderBy(col("events_seen").desc)
-    __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+        round(col("value") * 100).cast("long").as("cents"))(
+        mannKendallState(_)),
+      Seq("group"), col("events_seen").desc)
       .filter(col("var_num") > 0)
       .select(col("group").as("event_type"), col("n"), col("s_stat"),
         col("var_num"),
@@ -975,7 +984,6 @@ object StreamingOps {
           .otherwise(lit(0.0))
           / sqrt(col("var_num").cast("double") / lit(18.0)))
           * lit(1e6)).cast("long").as("z_micro"))
-  }
 
   /** Streaming Wilcoxon signed-rank as `mapGroupsWithState` — the
     * paired drift monitor: each arriving unit contributes one
@@ -1043,24 +1051,15 @@ object StreamingOps {
     * `q_wilcoxon_signed` and shares its oracle.
     */
   def wilcoxonHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(path).schema
-    val (dir, glob) = dirAndGlob(spark, path)
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
+    val stream = parquetStream(spark, path)
       .filter(col("n_chars").isNotNull && col("text").isNotNull)
       .select(col("source").as("group"),
         col("n_chars").cast("long").as("x"),
         (lit(5) * size(split(col("text"), " ")))
-          .cast("long").as("y")).as[WsrObs]
-    val out = wilcoxonState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group")).orderBy(col("events_seen").desc)
-    __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+          .cast("long").as("y")).as(Encoders.product[WsrObs])
+    latestPerKey(
+      drainToFrame(wilcoxonState(stream).toDF(), OutputMode.Update),
+      Seq("group"), col("events_seen").desc)
       .filter(col("var_num") > 0)
       .select(col("group").as("source"), col("n_pairs"),
         col("w2_plus"), col("e2"), col("var_num"),
@@ -1090,14 +1089,7 @@ object StreamingOps {
     def update(g: String, rows: Iterator[EnObs],
         state: GroupState[EnState]): PsiRow = {
       var st = state.getOption.getOrElse(EnState(Map.empty, Map.empty, 0L))
-      rows.foreach { o =>
-        st =
-          if (o.b) EnState(st.a,
-            st.bm.updated(o.x, st.bm.getOrElse(o.x, 0L) + 1L),
-            st.eventsSeen + 1L)
-          else EnState(st.a.updated(o.x, st.a.getOrElse(o.x, 0L) + 1L),
-            st.bm, st.eventsSeen + 1L)
-      }
+      rows.foreach { o => st = st.observe(o.b, o.x) }
       state.update(st)
       val bins = (st.a.keySet ++ st.bm.keySet).toSeq
       val nA = st.a.valuesIterator.sum
@@ -1124,28 +1116,18 @@ object StreamingOps {
     * exact column sequence over the emitted nano term sum. Output
     * shape matches `q_psi` and shares its oracle.
     */
-  def psiHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
-        (pmod(col("user_id"), lit(2L)) === 1).as("b"),
-        expr("CAST(ROUND(value * 100) AS BIGINT) div 1000")
-          .as("x")).as[EnObs]
-    val out = psiState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group"))
-      .orderBy((col("n_a") + col("n_b")).desc)
-    __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+  def psiHistory(spark: SparkSession, path: String): DataFrame =
+    latestPerKey(
+      replay[EnObs](spark, path, OutputMode.Update,
+        col("event_type").as("group"), cohortB,
+        expr("CAST(ROUND(value * 100) AS BIGINT) div 1000").as("x"))(
+        psiState),
+      Seq("group"), (col("n_a") + col("n_b")).desc)
       .filter(col("n_a") > 0 && col("n_b") > 0)
       .select(col("group").as("event_type"), col("n_a"), col("n_b"),
         col("n_bins"),
         round(col("tsum").cast("double") / lit(1e9) * lit(1e6))
           .cast("long").as("psi_micro"))
-  }
 
   /** Streaming mixture SPRT as `mapGroupsWithState` — always-valid
     * continuous-metric monitoring: like [[sprtState]], the whole
@@ -1186,21 +1168,10 @@ object StreamingOps {
   def msprtHistory(
       spark: SparkSession, path: String, tauMicro: Long,
       alphaPpm: Long = 50000L): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
-        (pmod(col("user_id"), lit(2L)) === 1).as("b"),
-        round(col("value") * 100).cast("long").as("x")).as[EnObs]
-    val out = msprtState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group"))
-      .orderBy((col("n_a") + col("n_b")).desc)
-    val last = __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    val last = latestPerKey(
+      replay[EnObs](spark, path, OutputMode.Update, cohortCents: _*)(
+        msprtState),
+      Seq("group"), (col("n_a") + col("n_b")).desc)
     graft.operators.AbTest.msprtDecision(
       last.withColumnRenamed("group", "event_type"), "event_type",
       tauMicro, alphaPpm)
@@ -1222,14 +1193,7 @@ object StreamingOps {
     def update(g: String, rows: Iterator[EnObs],
         state: GroupState[EnState]): EnRow = {
       var st = state.getOption.getOrElse(EnState(Map.empty, Map.empty, 0L))
-      rows.foreach { o =>
-        st =
-          if (o.b) EnState(st.a,
-            st.bm.updated(o.x, st.bm.getOrElse(o.x, 0L) + 1L),
-            st.eventsSeen + 1L)
-          else EnState(st.a.updated(o.x, st.a.getOrElse(o.x, 0L) + 1L),
-            st.bm, st.eventsSeen + 1L)
-      }
+      rows.foreach { o => st = st.observe(o.b, o.x) }
       state.update(st)
       val nA = st.a.valuesIterator.sum
       val nB = st.bm.valuesIterator.sum
@@ -1264,19 +1228,10 @@ object StreamingOps {
     * oracle.
     */
   def energyHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
-        (pmod(col("user_id"), lit(2L)) === 1).as("b"),
-        round(col("value") * 100).cast("long").as("x")).as[EnObs]
-    val out = energyState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group")).orderBy(col("events_seen").desc)
-    val last = __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+    val last = latestPerKey(
+      replay[EnObs](spark, path, OutputMode.Update, cohortCents: _*)(
+        energyState),
+      Seq("group"), col("events_seen").desc)
       .filter(col("n_a") > 0 && col("n_b") > 0)
     val mD = col("n_a").cast("double")
     val nD = col("n_b").cast("double")
@@ -1326,24 +1281,16 @@ object StreamingOps {
     */
   def sprtHistory(
       spark: SparkSession, path: String,
-      p0: Double, p1: Double): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
-        (col("value") > 50).as("ok")).as[SprtObs]
-    val out = sprtState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group")).orderBy(col("n").desc)
+      p0: Double, p1: Double): DataFrame =
     graft.operators.AbTest.sprtDecision(
-      __sink
-        .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-          .over(wLast))
-        .filter(col("__rn") === 1)
+      latestPerKey(
+        replay[SprtObs](spark, path, OutputMode.Update,
+          col("event_type").as("group"), (col("value") > 50).as("ok"))(
+          sprtState),
+        Seq("group"), col("n").desc)
         .select(col("group").as("event_type"), col("n"),
           col("successes")),
       "event_type", p0, p1)
-  }
 
   /** Streaming exact dedup with bounded state: the first row per key
     * passes through, later copies arriving within the watermark delay
@@ -1410,20 +1357,15 @@ object StreamingOps {
       minTokens: Int = 30,
       minUniqueRatio: Double = 0.3,
       minChars: Int = 200): DataFrame = {
-    val schema = spark.read.parquet(path).schema
-    val (dir, glob) = dirAndGlob(spark, path)
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
     val toks = split(col("text"), " ", -1)
-    val rejected = docs.select(col("doc_id"),
+    val rejected = parquetStream(spark, path).select(col("doc_id"),
         when(size(toks) < minTokens, "too_few_tokens")
           .when(size(array_distinct(toks)).cast("double")
             / size(toks).cast("double") < minUniqueRatio, "low_diversity")
           .when(length(col("text")) < minChars, "too_short")
           .as("failed_rule"))
       .where(col("failed_rule").isNotNull)
-    val __sink = drainToFrame(rejected, OutputMode.Append)
-    __sink
+    drainToFrame(rejected, OutputMode.Append)
   }
 
   /** Streaming model serving: classify each micro-batch of documents
@@ -1447,13 +1389,7 @@ object StreamingOps {
       model: graft.operators.NaiveBayes.Model,
       outDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(path).schema
-    val (dir, glob) = dirAndGlob(spark, path)
-    val reader = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob)
-    val docs = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(dir)
+    val docs = parquetStream(spark, path, maxFilesPerTrigger)
     // batch=<id> partition dirs + per-batch overwrite make the sink
     // IDEMPOTENT under foreachBatch's at-least-once contract: a
     // replayed micro-batch overwrites its own output instead of
@@ -1503,15 +1439,11 @@ object StreamingOps {
       path: String,
       groupCol: String,
       hashCols: Seq[String]): DataFrame = {
-    val schema = spark.read.parquet(path).schema
-    val (dir, glob) = dirAndGlob(spark, path)
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
     val d38 = DecimalType(38, 0)
     val rowHash = conv(substring(md5(concat_ws("\u0001",
       hashCols.map(c => col(c).cast("string")): _*)), 1, 15), 16, 10)
       .cast("long")
-    val agg = stream
+    val agg = parquetStream(spark, path)
       .select(col(groupCol), rowHash.as("__h"))
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_rows"),
@@ -1519,8 +1451,7 @@ object StreamingOps {
         pmod(sum(col("__h").cast(d38)),
           lit(2305843009213693952L).cast(d38))
           .cast("long").as("sum_sig"))
-    val __sink = drainToFrame(agg, OutputMode.Complete)
-    __sink
+    drainToFrame(agg, OutputMode.Complete)
   }
 
   /** Streaming percolation: every micro-batch of incoming docs is
@@ -1537,10 +1468,7 @@ object StreamingOps {
       queryIdCol: String,
       termCol: String,
       outDir: String): DataFrame = {
-    val schema = spark.read.parquet(path).schema
-    val (dir, glob) = dirAndGlob(spark, path)
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
+    val docs = parquetStream(spark, path)
     // same idempotent batch=<id> sink convention as
     // classifiedDocStream (replayed batches overwrite themselves)
     val q = docs.writeStream
@@ -1748,13 +1676,11 @@ object StreamingOps {
   def dedupedEventKeys(
       spark: SparkSession,
       path: String,
-      watermark: String = "1 hour"): DataFrame = {
-    val stream = readEventStream(spark, path)
-    val deduped =
-      dedupWithinWatermark(stream, Seq("user_id", "event_type"), "ts", watermark)
-    val __sink = drainToFrame(deduped, OutputMode.Append)
-    __sink.select(col("user_id"), col("event_type"))
-  }
+      watermark: String = "1 hour"): DataFrame =
+    replayEvents(spark, path, OutputMode.Append)(read =>
+      dedupWithinWatermark(
+        read(), Seq("user_id", "event_type"), "ts", watermark))
+      .select(col("user_id"), col("event_type"))
 
   /** Runs [[joinWithinInterval]] as a click-attribution stream: each
     * `convType` event joined to the same user's `clickType` events in
@@ -1771,22 +1697,22 @@ object StreamingOps {
       convType: String = "purchase",
       clickType: String = "click",
       windowSeconds: Long = 3600L,
-      watermark: String = "2 hours"): DataFrame = {
-    val conv = readEventStream(spark, path)
-      .filter(col("event_type") === convType)
-      .select(col("event_id").as("conv_id"),
-        col("user_id").as("conv_user"), col("ts").as("conv_ts"))
-    val clicks = readEventStream(spark, path)
-      .filter(col("event_type") === clickType)
-      .select(col("event_id").as("click_id"),
-        col("user_id").as("click_user"), col("ts").as("click_ts"))
-    val joined = joinWithinInterval(conv, clicks,
-      "conv_user", "click_user", "conv_ts", "click_ts",
-      watermark, windowSeconds)
-    hintStatefulWidth(spark, path) // 4 state stores per partition
-    val __sink = drainToFrame(joined, OutputMode.Append)
-    __sink.select(col("conv_id"), col("click_id"))
-  }
+      watermark: String = "2 hours"): DataFrame =
+    // 4 state stores per partition: width from the source size
+    replayEvents(spark, path, OutputMode.Append, stateSource = Some(path)) {
+      read =>
+        val conv = read()
+          .filter(col("event_type") === convType)
+          .select(col("event_id").as("conv_id"),
+            col("user_id").as("conv_user"), col("ts").as("conv_ts"))
+        val clicks = read()
+          .filter(col("event_type") === clickType)
+          .select(col("event_id").as("click_id"),
+            col("user_id").as("click_user"), col("ts").as("click_ts"))
+        joinWithinInterval(conv, clicks,
+          "conv_user", "click_user", "conv_ts", "click_ts",
+          watermark, windowSeconds)
+    }.select(col("conv_id"), col("click_id"))
 
   /** Stream-STATIC enrichment: each micro-batch of events joined to a
     * broadcast static dimension — the stateless lookup-join every
@@ -1802,15 +1728,11 @@ object StreamingOps {
       dim: DataFrame,
       streamKey: String,
       dimKey: String,
-      dimCols: Seq[String]): DataFrame = {
-    val stream = readEventStream(spark, path)
-    val joined = stream.join(broadcast(dim),
-      col(streamKey) === col(dimKey))
-      .select((col("event_id") +: col(streamKey).as("key") +:
-        dimCols.map(col)): _*)
-    val __sink = drainToFrame(joined, OutputMode.Append)
-    __sink
-  }
+      dimCols: Seq[String]): DataFrame =
+    replayEvents(spark, path, OutputMode.Append)(read =>
+      read().join(broadcast(dim), col(streamKey) === col(dimKey))
+        .select((col("event_id") +: col(streamKey).as("key") +:
+          dimCols.map(col)): _*))
 
   /** LEFT-OUTER streaming attribution: every conversion, matched to
     * same-user clicks in the preceding `windowSeconds` — or emitted
@@ -1839,27 +1761,27 @@ object StreamingOps {
       convType: String = "purchase",
       clickType: String = "click",
       windowSeconds: Long = 3600L,
-      watermark: String = "2 hours"): DataFrame = {
-    val conv = readEventStream(spark, path)
-      .filter(col("event_type") === convType)
-      .select(col("event_id").as("conv_id"),
-        col("user_id").as("conv_user"), col("ts").as("conv_ts"))
-      .withWatermark("conv_ts", watermark)
-    val clicks = readEventStream(spark, path)
-      .filter(col("event_type") === clickType)
-      .select(col("event_id").as("click_id"),
-        col("user_id").as("click_user"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
-    val joined = conv.join(clicks,
-      col("conv_user") === col("click_user") &&
-        col("click_ts") <= col("conv_ts") &&
-        col("click_ts") >= col("conv_ts") -
-          expr(s"INTERVAL $windowSeconds SECONDS"),
-      "left_outer")
-    hintStatefulWidth(spark, path) // 4 state stores per partition
-    val __sink = drainToFrame(joined, OutputMode.Append)
-    __sink.select(col("conv_id"), col("click_id"))
-  }
+      watermark: String = "2 hours"): DataFrame =
+    // 4 state stores per partition: width from the source size
+    replayEvents(spark, path, OutputMode.Append, stateSource = Some(path)) {
+      read =>
+        val conv = read()
+          .filter(col("event_type") === convType)
+          .select(col("event_id").as("conv_id"),
+            col("user_id").as("conv_user"), col("ts").as("conv_ts"))
+          .withWatermark("conv_ts", watermark)
+        val clicks = read()
+          .filter(col("event_type") === clickType)
+          .select(col("event_id").as("click_id"),
+            col("user_id").as("click_user"), col("ts").as("click_ts"))
+          .withWatermark("click_ts", watermark)
+        conv.join(clicks,
+          col("conv_user") === col("click_user") &&
+            col("click_ts") <= col("conv_ts") &&
+            col("click_ts") >= col("conv_ts") -
+              expr(s"INTERVAL $windowSeconds SECONDS"),
+          "left_outer")
+    }.select(col("conv_id"), col("click_id"))
 
   /** Hourly tumbling-window counts and exact sums per event_type.
     * Money-style sums run in DECIMAL for order-independence.
@@ -1877,15 +1799,13 @@ object StreamingOps {
   def eventWindowCounts(
       spark: SparkSession,
       path: String,
-      watermark: String = "1 hour"): DataFrame = {
-    val stream = readEventStream(spark, path)
-    val agg = windowedCounts(stream, watermark)
-    val __sink = drainToFrame(agg, OutputMode.Complete)
-    __sink.select(
-      unix_timestamp(col("window.start")).as("hour_start"),
-      col("event_type"), col("n"),
-      col("sum_value").cast("double").as("sum_value"))
-  }
+      watermark: String = "1 hour"): DataFrame =
+    replayEvents(spark, path, OutputMode.Complete)(read =>
+      windowedCounts(read(), watermark))
+      .select(
+        unix_timestamp(col("window.start")).as("hour_start"),
+        col("event_type"), col("n"),
+        col("sum_value").cast("double").as("sum_value"))
 
   /** Per-user event-type transitions as a stream: state = the ONE
     * last-seen event per user (O(1), the attribution/debounce bound),
@@ -1921,15 +1841,11 @@ object StreamingOps {
     * chain by construction and shares its oracle.
     */
   def transitionMatrixStream(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"), col("event_id")).as[Chg]
-    val pairs = transitionPairs(stream)
-    val __sink = drainToFrame(pairs.toDF(), OutputMode.Append)
-    val counts = __sink
-      .groupBy(col("from_state"), col("to_state"))
-      .agg(count(lit(1)).as("n"))
+    val counts =
+      replay[Chg](spark, path, OutputMode.Append, chgCols: _*)(
+        transitionPairs)
+        .groupBy(col("from_state"), col("to_state"))
+        .agg(count(lit(1)).as("n"))
     // fresh name on the totals key: both sides descend from the same
     // sink table, so joining on the original column is an ambiguous
     // self-join (the Skyline.frontier lesson)
@@ -1956,15 +1872,11 @@ object StreamingOps {
       k: Int = 3,
       watermark: String = "1 hour"): DataFrame = {
     require(k > 0, s"k: $k")
-    val counts = eventWindowCounts(spark, path, watermark)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("hour_start"))
-      .orderBy(col("n").desc, col("event_type"))
-    counts
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("hour_start"), col("rank"), col("event_type"),
-        col("n"))
+    ranked(eventWindowCounts(spark, path, watermark), Seq("hour_start"),
+        col("n").desc, col("event_type"))
+      .filter(col("__rn") <= k)
+      .select(col("hour_start"), col("__rn").as("rank"),
+        col("event_type"), col("n"))
   }
 
   /** Streaming twin of [[graft.operators.TimeSeries.anomalousCounts]]:
@@ -1983,14 +1895,13 @@ object StreamingOps {
       z: Int = 2,
       watermark: String = "1 hour"): DataFrame = {
     require(z > 0, s"z: $z")
-    val stream = readEventStream(spark, path)
-    val agg = windowedCounts(stream, watermark)
-    val __sink = drainToFrame(agg, OutputMode.Complete)
+    val sink = replayEvents(spark, path, OutputMode.Complete)(read =>
+      windowedCounts(read(), watermark))
     // every column re-aliased: the memory-sink view hands out FIXED
     // attribute ids (with watermark metadata), so a frame joined with
     // its own aggregate trips conflicting-reference resolution unless
     // each read mints fresh exprIds
-    def countsFrom: DataFrame = __sink.select(
+    def countsFrom: DataFrame = sink.select(
       col("event_type").as("event_type"),
       unix_timestamp(col("window.start")).as("hour_start"),
       col("n").as("n"))
@@ -2052,18 +1963,10 @@ object StreamingOps {
     */
   def dickeyFullerHistory(
       spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
-        unix_micros(date_trunc("day", col("ts"))).as("di")).as[DayObs]
-    val out = dickeyFullerState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group")).orderBy(col("events_seen").desc)
-    val per = __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+    val per = latestPerKey(
+      replay[DayObs](spark, path, OutputMode.Update, dayCols: _*)(
+        dickeyFullerState(_)),
+      Seq("group"), col("events_seen").desc)
       .select(col("group").as("event_type"), col("n"),
         col("su").as("__su"), col("sv").as("__sv"),
         col("suu").cast(DecimalType(38, 0)).as("__suu"),
@@ -2120,18 +2023,10 @@ object StreamingOps {
     * shape matches `q_adf` and shares its oracle.
     */
   def adfHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
-        unix_micros(date_trunc("day", col("ts"))).as("di")).as[DayObs]
-    val out = adfState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group")).orderBy(col("events_seen").desc)
-    val per = __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+    val per = latestPerKey(
+      replay[DayObs](spark, path, OutputMode.Update, dayCols: _*)(
+        adfState(_)),
+      Seq("group"), col("events_seen").desc)
       .select(col("group").as("event_type"), col("n"),
         col("sv").as("__sv"), col("sp").as("__sp"),
         col("sq").as("__sq"), col("svp").as("__svp"),
@@ -2179,19 +2074,10 @@ object StreamingOps {
     * matches `q_smd_balance` and shares its oracle.
     */
   def smdHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
-        (pmod(col("user_id"), lit(2L)) === 1).as("b"),
-        round(col("value") * 100).cast("long").as("x")).as[EnObs]
-    val out = smdState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group")).orderBy(col("events_seen").desc)
-    val per = __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+    val per = latestPerKey(
+      replay[EnObs](spark, path, OutputMode.Update, cohortCents: _*)(
+        smdState),
+      Seq("group"), col("events_seen").desc)
       .select(col("group").as("event_type"), col("n_a"),
         col("sxa").as("__sxa"),
         col("sxxa").cast(DecimalType(38, 0)).as("__sxxa"),
@@ -2239,18 +2125,10 @@ object StreamingOps {
     * oracle.
     */
   def dispersionHistory(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
-        unix_micros(date_trunc("day", col("ts"))).as("di")).as[DayObs]
-    val out = dispersionState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group")).orderBy(col("events_seen").desc)
-    val per = __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+    val per = latestPerKey(
+      replay[DayObs](spark, path, OutputMode.Update, dayCols: _*)(
+        dispersionState(_)),
+      Seq("group"), col("events_seen").desc)
       .select(col("group").as("event_type"), col("n"),
         col("s").as("__s"),
         col("sxx").cast(DecimalType(38, 0)).as("__sxx"))
@@ -2273,14 +2151,7 @@ object StreamingOps {
     def update(g: String, rows: Iterator[EnObs],
         state: GroupState[EnState]): WsRow = {
       var st = state.getOption.getOrElse(EnState(Map.empty, Map.empty, 0L))
-      rows.foreach { o =>
-        st =
-          if (o.b) EnState(st.a,
-            st.bm.updated(o.x, st.bm.getOrElse(o.x, 0L) + 1L),
-            st.eventsSeen + 1L)
-          else EnState(st.a.updated(o.x, st.a.getOrElse(o.x, 0L) + 1L),
-            st.bm, st.eventsSeen + 1L)
-      }
+      rows.foreach { o => st = st.observe(o.b, o.x) }
       state.update(st)
       val nA = st.a.valuesIterator.sum
       val nB = st.bm.valuesIterator.sum
@@ -2313,26 +2184,16 @@ object StreamingOps {
     * shares its oracle.
     */
   def wassersteinHistory(
-      spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
-        (pmod(col("user_id"), lit(2L)) === 1).as("b"),
-        round(col("value") * 100).cast("long").as("x")).as[EnObs]
-    val out = wassersteinState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group")).orderBy(col("events_seen").desc)
-    __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+      spark: SparkSession, path: String): DataFrame =
+    latestPerKey(
+      replay[EnObs](spark, path, OutputMode.Update, cohortCents: _*)(
+        wassersteinState),
+      Seq("group"), col("events_seen").desc)
       .filter(col("n_a") > 0 && col("n_b") > 0)
       .select(col("group").as("event_type"), col("n_a"), col("n_b"),
         round(col("num").cast(DecimalType(38, 0)).cast("double") /
           (col("n_a").cast("double") * col("n_b").cast("double")) *
           lit(1e6)).cast("long").as("w1_micro"))
-  }
 
   /** Streaming G-test cell accumulation as `mapGroupsWithState`
     * keyed by CONTINGENCY CELL: a cell's count is its complete
@@ -2366,21 +2227,14 @@ object StreamingOps {
     */
   def gtestHistory(
       spark: SparkSession, path: String, crit4: Long): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("a"),
-        pmod(col("user_id"), lit(3L)).as("c")).as[GtObs]
-    val out = gtestCellState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("a"), col("c")).orderBy(col("o").desc)
     // the combine margin-joins the cell table to itself; the memory
     // view's attributes collide across the self-join branches, so
     // pin the (tiny, cell-count-sized) table first
-    val cells = __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+    val cells = latestPerKey(
+      replay[GtObs](spark, path, OutputMode.Update,
+        col("event_type").as("a"), pmod(col("user_id"), lit(3L)).as("c"))(
+        gtestCellState),
+      Seq("a", "c"), col("o").desc)
       // "c" would collide with the combine's internal column-total
       // margin alias — hand over under neutral names
       .select(col("a").as("cat"), col("c").as("cohort"), col("o"))
@@ -2423,19 +2277,11 @@ object StreamingOps {
     */
   def cmhHistory(
       spark: SparkSession, path: String, crit4: Long): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("event_type").as("group"),
-        (pmod(col("user_id"), lit(2L)) === 1).as("b"),
-        (col("value") >= 100.0).as("y")).as[CmhObs]
-    val out = cmhState(stream)
-    val __sink = drainToFrame(out.toDF(), OutputMode.Update)
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group")).orderBy(col("n").desc)
-    val per = __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+    val per = latestPerKey(
+      replay[CmhObs](spark, path, OutputMode.Update,
+        col("event_type").as("group"), cohortB,
+        (col("value") >= 100.0).as("y"))(cmhState),
+      Seq("group"), col("n").desc)
       .select(col("n").as("__n"), col("n1").as("__n1"),
         col("m1").as("__m1"), col("o").as("__o"))
     graft.operators.AbTest.cmhFromCounts(per, crit4)
@@ -2448,23 +2294,11 @@ object StreamingOps {
   def sessionCounts(
       spark: SparkSession,
       path: String,
-      gapSeconds: Long = 1800L): DataFrame = {
-    import spark.implicits._
-    val stream = readEventStream(spark, path)
-      .select(col("user_id"), unix_micros(col("ts")).as("us")).as[Ev]
-    val sessions = sessionize(stream, gapSeconds)
-
-    val __sink = drainToFrame(sessions.toDF(), OutputMode.Update)
-    // update mode appends one row per user per trigger — keep only
-    // the LAST snapshot per user (n_events is monotone in the fold),
-    // the ewmaHistory guard, so a multi-micro-batch source split
-    // can't leave intermediate duplicates in the result
-    val wLast = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-    __sink
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number()
-        .over(wLast))
-      .filter(col("__rn") === 1)
+      gapSeconds: Long = 1800L): DataFrame =
+    latestPerKey(
+      replay[Ev](spark, path, OutputMode.Update,
+        col("user_id"), unix_micros(col("ts")).as("us"))(
+        sessionize(_, gapSeconds)),
+      Seq("user_id"), col("n_events").desc)
       .select(col("user_id"), col("n_events"), col("n_sessions"))
-  }
 }

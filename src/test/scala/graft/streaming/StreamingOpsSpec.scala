@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 class StreamingOpsSpec extends SparkSuite {
 
   /** Write an events parquet whose ts column is a LONG of epoch nanos —
-    * the same shape `readEventStream` handles for the driver's
+    * the same shape `StreamingOps.replayEvents` handles for the driver's
     * TIMESTAMP(NANOS) testdata (nanosAsLong → `timestamp_micros(ts div
     * 1000)`).
     */
@@ -1027,5 +1027,89 @@ class StreamingOpsSpec extends SparkSuite {
     assert(r.getLong(0) === 2L && r.getLong(1) === 6L)
     assert(r.getLong(4) === 3500000L && r.getString(5) === "independent",
       s"$r")
+  }
+
+  private val eventsPath = "/root/testdata/sf0.001/events.parquet"
+
+  private def streamTables: Seq[String] =
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_")).toSeq
+
+  test("a failed drain propagates and leaves no memory sink or width " +
+      "override behind") {
+    import org.apache.spark.sql.streaming.OutputMode
+    val widthKey = "spark.sql.shuffle.partitions"
+    val width = spark.conf.get(widthKey)
+    // the state function itself throws on the first row it folds
+    val e1 = intercept[Exception] {
+      StreamingOps.replay[Meas](spark, eventsPath, OutputMode.Update,
+        col("user_id").as("key"), unix_micros(col("ts")).as("us"),
+        col("event_id").as("tie"), col("value").as("v"))(
+        _.filter((_: Meas) => throw new IllegalStateException("fold boom")))
+    }
+    assert(Iterator.iterate[Throwable](e1)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("fold boom")), e1)
+    assert(streamTables.isEmpty, streamTables)
+    // the same failure under the stream-stream joins' input-sized
+    // width, which overrides shuffle.partitions for start + drain
+    val e2 = intercept[Exception] {
+      StreamingOps.replayEvents(spark, eventsPath, OutputMode.Append,
+          stateSource = Some(eventsPath)) { read =>
+        read().select(col("event_id"),
+          assert_true(col("event_id") < 0, lit("drain boom")).as("ok"))
+      }
+    }
+    assert(Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("drain boom")), e2)
+    assert(streamTables.isEmpty, streamTables)
+    assert(spark.conf.get(widthKey) === width)
+  }
+
+  test("stream replays leave the session conf as they found it") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    // getOption would report the default for an unset key
+    val before = spark.conf.getAll.get(key)
+    spark.conf.unset(key)
+    try {
+      Seq[(String, () => DataFrame)](
+        "ewmaHistory" -> (() => StreamingOps.ewmaHistory(spark, eventsPath)),
+        "holtHistory" -> (() => StreamingOps.holtHistory(spark, eventsPath)),
+        "scd2History" -> (() => StreamingOps.scd2History(spark, eventsPath)),
+        "transitionMatrixStream" ->
+          (() => StreamingOps.transitionMatrixStream(spark, eventsPath)),
+        "sessionCounts" ->
+          (() => StreamingOps.sessionCounts(spark, eventsPath)),
+        "attributedConversions" ->
+          (() => StreamingOps.attributedConversions(spark, eventsPath))
+      ).foreach { case (name, run) =>
+        val conf = spark.conf.getAll
+        assert(run().count() > 0L, name)
+        assert(spark.conf.getAll === conf, name)
+      }
+    } finally before.foreach(spark.conf.set(key, _))
+  }
+
+  test("latestPerKey keeps exactly the largest-order snapshot per key") {
+    import spark.implicits._
+    // update-mode sink shape: several snapshots per key, the fold's
+    // monotone count growing with each trigger, rows out of order
+    val snaps = Seq(
+      (1L, 1L, 10.0), (1L, 3L, 30.0), (1L, 2L, 20.0),
+      (2L, 2L, 21.0), (2L, 1L, 11.0),
+      (3L, 1L, 12.0),
+      (4L, 2L, 22.0), (4L, 3L, 32.0), (4L, 1L, 13.0))
+      .toDF("key", "n", "v")
+    val got = StreamingOps.latestPerKey(snaps, Seq("key"), col("n").desc)
+    assert(got.columns.toSeq === Seq("key", "n", "v"))
+    assert(got.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(_._1).toSeq ===
+      Seq((1L, 3L, 30.0), (2L, 2L, 21.0), (3L, 1L, 12.0), (4L, 3L, 32.0)))
+    // a two-column key partitions on both columns
+    val two = Seq((1L, "a", 1L), (1L, "a", 2L), (1L, "b", 5L), (2L, "a", 4L))
+      .toDF("k1", "k2", "o")
+    assert(StreamingOps.latestPerKey(two, Seq("k1", "k2"), col("o").desc)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .sortBy(r => (r._1, r._2)).toSeq ===
+      Seq((1L, "a", 2L), (1L, "b", 5L), (2L, "a", 4L)))
   }
 }
