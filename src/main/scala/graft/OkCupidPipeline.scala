@@ -3,6 +3,7 @@ package graft
 import graft.functions.TextFunctions
 import graft.operators._
 import org.apache.spark.ml.Pipeline
+import org.apache.spark.ml.classification.DecisionTreeClassificationModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,6 +25,11 @@ import org.apache.spark.sql.types._
   * number to beat.
   */
 object OkCupidPipeline {
+
+  /** Synthetic shard count of the stratified split, fixed so the split
+    * is a function of (seed, data) alone at any shuffle width.
+    */
+  private val SplitShards = 64
 
   /** The 31-column okcupid_profiles.csv schema (FIXTURES.md §1). */
   val schema: StructType = {
@@ -132,6 +138,27 @@ object OkCupidPipeline {
       maxDepth: Int = 8,
       seed: Long = 32984L,
       cp: Double = 0.02): (DataFrame, Double, Seq[(String, Double)]) = {
+    val o = run(profiles, minDocFreq, minTermFreq, maxDepth, seed, cp)
+    (o.confusion, o.accuracy, o.stages)
+  }
+
+  /** What one [[trainAndEvaluateTimed]] pass produced, with the fitted
+    * vocabulary and the pruned tree kept for specs that pin them.
+    */
+  private[graft] final case class Outcome(
+      confusion: DataFrame,
+      accuracy: Double,
+      stages: Seq[(String, Double)],
+      vocabulary: Array[String],
+      tree: DecisionTreeClassificationModel)
+
+  private[graft] def run(
+      profiles: DataFrame,
+      minDocFreq: Int,
+      minTermFreq: Int,
+      maxDepth: Int,
+      seed: Long,
+      cp: Double): Outcome = {
     val essays = withEssays(profiles)
       .withColumn("label", (col("sex") === "m").cast("double"))
     // Evaluate the text chain ONCE: run the transformer prefix of the
@@ -149,34 +176,40 @@ object OkCupidPipeline {
     // not leave 60k-row caches stranded in the block manager (the
     // bench keeps the JVM alive across queries)
     try {
-      val features = stages.last.asInstanceOf[TrimmedCountVectorizer]
-        .fit(tokens).transform(tokens)
+      val vectorizer = stages.last.asInstanceOf[TrimmedCountVectorizer]
+        .fit(tokens)
+      val features = vectorizer.transform(tokens)
         .select(col("label"), col("features"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         features.count() // forces the whole featurize chain
         val featurizeSec = (System.nanoTime() - tFeat0) / 1e9
-        val (confusion, acc, fitSec, pruneEvalSec) =
+        val (confusion, acc, tree, fitSec, pruneEvalSec) =
           trainOnFeatures(features, profiles, maxDepth, seed, cp)
-        (confusion, acc, Seq(
+        Outcome(confusion, acc, Seq(
           "featurize" -> featurizeSec,
           "fit" -> fitSec,
-          "prune_eval" -> pruneEvalSec))
+          "prune_eval" -> pruneEvalSec), vectorizer.vocabulary, tree)
       } finally features.unpersist()
     } finally tokens.unpersist()
   }
 
   /** Split + train + evaluate on a persisted (label, features) frame.
-    * Returns (confusion, accuracy, fit seconds, prune+eval seconds).
+    * Returns (confusion, accuracy, pruned tree, fit seconds, prune+eval
+    * seconds).
     */
   private def trainOnFeatures(
       features: DataFrame,
       profiles: DataFrame,
       maxDepth: Int,
       seed: Long,
-      cp: Double): (DataFrame, Double, Double, Double) = {
+      cp: Double): (DataFrame, Double, DecisionTreeClassificationModel,
+        Double, Double) = {
     val tFit0 = System.nanoTime()
-    val (train, test) = StratifiedSplit.split(features, "label", 0.7, seed)
+    // shards pinned, as q_confusion does: split membership (and so the
+    // tree) must not follow the session's shuffle width
+    val (train, test) = StratifiedSplit.split(features, "label", 0.7, seed,
+      shards = SplitShards)
     val grown = DeterministicCart.fit(train, "features", "label", maxDepth)
     val fitSec = (System.nanoTime() - tFit0) / 1e9
     val tEval0 = System.nanoTime()
@@ -204,6 +237,6 @@ object OkCupidPipeline {
           StructField("label", DoubleType, nullable = false),
           StructField("n", LongType, nullable = false))))
     val pruneEvalSec = (System.nanoTime() - tEval0) / 1e9
-    (confusion, correct.toDouble / total, fitSec, pruneEvalSec)
+    (confusion, correct.toDouble / total, model, fitSec, pruneEvalSec)
   }
 }
