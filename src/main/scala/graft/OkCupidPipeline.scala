@@ -7,6 +7,9 @@ import org.apache.spark.ml.classification.DecisionTreeClassificationModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+
+import scala.jdk.CollectionConverters._
 
 /** End-to-end replication of the reference pipeline
   * (`/root/reference/Week5_datingNLP.R`) on the real corpus schema:
@@ -103,14 +106,15 @@ object OkCupidPipeline {
     * the earlier fixed depth-3 approximated). Returns the confusion
     * matrix (prediction × label counts) and accuracy.
     *
-    * The transformed corpus is projected down to (label, features) and
-    * persisted before the split: the text chain (clean → tokenize →
-    * stop → stem → vectorize) is array-valued per row and evaluates
-    * interpreted, so letting the split window, the tree fit, and each
-    * evaluation action re-derive it from raw essays — while also
-    * shuffling every intermediate column — multiplies the most
-    * expensive stage of the whole pipeline by the number of downstream
-    * actions (~6× measured at 60k docs).
+    * Two frames are persisted, each projected down to the columns
+    * downstream reads: (label, tokens) after the text chain (clean →
+    * tokenize → stop → stem), which the vocabulary fit and the
+    * vectorizer both read, and (label, features, is_train) after the
+    * split, which the tree fit and the evaluation both read. Letting
+    * each action re-derive the array-valued text chain from raw
+    * essays, while also shuffling every intermediate column,
+    * multiplied the most expensive stage of the pipeline by the number
+    * of downstream actions (~6× measured at 60k docs).
     */
   def trainAndEvaluate(
       profiles: DataFrame,
@@ -126,10 +130,11 @@ object OkCupidPipeline {
   }
 
   /** [[trainAndEvaluate]] plus per-stage wall seconds — featurize
-    * (token chain + vectorizer fit/transform, forced by the row
-    * count), fit (stratified split + exact CART grow), prune_eval (cp
-    * prune + predict + confusion) — so a bench regression is
-    * attributable to a stage instead of a coin flip on the total.
+    * (token chain + vocabulary fit), fit (vectorizer transform +
+    * stratified split, materialized once, + exact CART grow),
+    * prune_eval (cp prune + predict + confusion) — so a bench
+    * regression is attributable to a stage instead of a coin flip on
+    * the total.
     */
   def trainAndEvaluateTimed(
       profiles: DataFrame,
@@ -171,72 +176,66 @@ object OkCupidPipeline {
     val tokens = new Pipeline().setStages(stages.init)
       .fit(essays).transform(essays)
       .select(col("label"), col("tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // try/finally from the FIRST persist: a mid-pipeline failure must
     // not leave 60k-row caches stranded in the block manager (the
     // bench keeps the JVM alive across queries)
     try {
+      // the vocabulary fit is the action that materializes `tokens`
       val vectorizer = stages.last.asInstanceOf[TrimmedCountVectorizer]
         .fit(tokens)
-      val features = vectorizer.transform(tokens)
-        .select(col("label"), col("features"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val featurizeSec = (System.nanoTime() - tFeat0) / 1e9
+      val tFit0 = System.nanoTime()
+      // The split flag is persisted, not the bare features: train and
+      // test are both filters of this one frame, so its counts, quota
+      // and window jobs run once, and the sparse vectors are built once
+      // for the tree fit and the evaluation.
+      val flagged = StratifiedSplit.withSplitFlag(
+          vectorizer.transform(tokens).select(col("label"), col("features")),
+          "label", 0.7, seed, shards = SplitShards)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        features.count() // forces the whole featurize chain
-        val featurizeSec = (System.nanoTime() - tFeat0) / 1e9
-        val (confusion, acc, tree, fitSec, pruneEvalSec) =
-          trainOnFeatures(features, profiles, maxDepth, seed, cp)
+        val train = flagged.filter(col("is_train")).drop("is_train")
+        val test = flagged.filter(!col("is_train")).drop("is_train")
+        val grown = DeterministicCart.fit(train, "features", "label", maxDepth)
+        val fitSec = (System.nanoTime() - tFit0) / 1e9
+        val tEval0 = System.nanoTime()
+        // rpart's capacity control: weakest-link prune at cp (driver-side
+        // over the node tree; the model is already driver-resident)
+        val model = if (cp > 0) TreePruning.pruneCp(grown, cp) else grown
+        val (confusion, acc) = evaluate(model.transform(test), profiles.sparkSession)
+        val pruneEvalSec = (System.nanoTime() - tEval0) / 1e9
         Outcome(confusion, acc, Seq(
           "featurize" -> featurizeSec,
           "fit" -> fitSec,
-          "prune_eval" -> pruneEvalSec), vectorizer.vocabulary, tree)
-      } finally features.unpersist()
+          "prune_eval" -> pruneEvalSec), vectorizer.vocabulary, model)
+      } finally flagged.unpersist()
     } finally tokens.unpersist()
   }
 
-  /** Split + train + evaluate on a persisted (label, features) frame.
-    * Returns (confusion, accuracy, pruned tree, fit seconds, prune+eval
-    * seconds).
+  /** Confusion matrix (prediction × label counts, in (prediction,
+    * label) order) and accuracy from one aggregation over the
+    * predictions. The ≤ 4 cells are sorted on the driver and returned
+    * as a local relation, so collecting the matrix starts no job.
     */
-  private def trainOnFeatures(
-      features: DataFrame,
-      profiles: DataFrame,
-      maxDepth: Int,
-      seed: Long,
-      cp: Double): (DataFrame, Double, DecisionTreeClassificationModel,
-        Double, Double) = {
-    val tFit0 = System.nanoTime()
-    // shards pinned, as q_confusion does: split membership (and so the
-    // tree) must not follow the session's shuffle width
-    val (train, test) = StratifiedSplit.split(features, "label", 0.7, seed,
-      shards = SplitShards)
-    val grown = DeterministicCart.fit(train, "features", "label", maxDepth)
-    val fitSec = (System.nanoTime() - tFit0) / 1e9
-    val tEval0 = System.nanoTime()
-    // rpart's capacity control: weakest-link prune at cp (driver-side
-    // over the node tree; the model is already driver-resident)
-    val model = if (cp > 0) TreePruning.pruneCp(grown, cp) else grown
-    val predictions = model.transform(test)
-      .select(col("prediction"), col("label"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val confusionRows = predictions
+  private def evaluate(
+      predictions: DataFrame,
+      spark: SparkSession): (DataFrame, Double) = {
+    val cells = predictions
       .groupBy(col("prediction"), col("label"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("prediction"), col("label"))
       .collect()
-    val total = confusionRows.map(_.getAs[Long]("n")).sum
-    val correct = confusionRows
-      .filter(r => r.getDouble(0) == r.getDouble(1))
-      .map(_.getAs[Long]("n")).sum
-    predictions.unpersist()
-    val confusion = profiles.sparkSession
-      .createDataFrame(
-        profiles.sparkSession.sparkContext.parallelize(confusionRows.toSeq, 1),
-        StructType(Seq(
-          StructField("prediction", DoubleType, nullable = false),
-          StructField("label", DoubleType, nullable = false),
-          StructField("n", LongType, nullable = false))))
-    val pruneEvalSec = (System.nanoTime() - tEval0) / 1e9
-    (confusion, correct.toDouble / total, model, fitSec, pruneEvalSec)
+      .sortBy(r => (r.getDouble(0), r.getDouble(1)))(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering,
+          Ordering.Double.TotalOrdering))
+    val total = cells.map(_.getLong(2)).sum
+    val correct = cells.filter(r => r.getDouble(0) == r.getDouble(1))
+      .map(_.getLong(2)).sum
+    val confusion = spark.createDataFrame(cells.toSeq.asJava,
+      StructType(Seq(
+        StructField("prediction", DoubleType, nullable = false),
+        StructField("label", DoubleType, nullable = false),
+        StructField("n", LongType, nullable = false))))
+    (confusion, correct.toDouble / total)
   }
 }

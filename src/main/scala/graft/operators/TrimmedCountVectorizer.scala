@@ -6,8 +6,12 @@ import org.apache.spark.ml.linalg.SQLDataTypes
 import org.apache.spark.ml.param.{IntParam, Param, ParamMap, ParamValidators}
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable, Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** Bag-of-words vectorizer with the reference's `dfm_trim` semantics
   * (`Week5_datingNLP.R:92,105`): keep a term iff document-frequency ≥
@@ -15,12 +19,17 @@ import org.apache.spark.sql.types._
   * `CountVectorizer.setMinDF` covers only the first condition (SURVEY
   * A3), hence this custom estimator.
   *
-  * Scale design: one explode + two-level hash aggregation computes both
-  * frequencies in a single shuffle; the surviving vocabulary (ordered by
-  * corpus frequency desc, term asc, like CountVectorizer) is broadcast
-  * to executors for the transform. At 100 TB the aggregation is
-  * map-side-combined on (doc_id, term) then (term); only the vocab —
-  * bounded by the trim — ever reaches the driver.
+  * Scale design: the fit runs one job with one shuffle. Each document
+  * counts its own terms in a local map and emits one `(term, (1,
+  * count))` pair per distinct term; `reduceByKey` combines the pairs
+  * map-side (Spark's spillable `ExternalAppendOnlyMap`, so a
+  * partition's raw vocabulary need not fit in memory) and sums them
+  * into (document frequency, term frequency) by term, and the trim is
+  * applied on the reduce side. Only the survivors reach the driver,
+  * which orders them by corpus frequency desc, then term asc in
+  * UTF-8 byte order (Spark's `StringType` order, like CountVectorizer);
+  * with `maxVocabSize` set, `takeOrdered` keeps that collect bounded.
+  * The vocabulary is then shipped to executors for the transform.
   */
 class TrimmedCountVectorizer(override val uid: String)
     extends Estimator[TrimmedCountVectorizerModel]
@@ -54,31 +63,21 @@ class TrimmedCountVectorizer(override val uid: String)
   def setMaxVocabSize(v: Int): this.type = set(maxVocabSize, v)
 
   override def fit(ds: Dataset[_]): TrimmedCountVectorizerModel = {
-    val spark = ds.sparkSession
-    // per-(doc,term) counts with a synthetic doc id local to this fit;
-    // monotonically_increasing_id is safe here because it only needs to
-    // be distinct, not dense or stable across jobs.
-    val byDocTerm = ds.toDF()
-      .select(monotonically_increasing_id().as("__doc"),
-        col($(inputCol)).as("__tokens"))
-      .select(col("__doc"), explode(col("__tokens")).as("__term"))
-      .groupBy(col("__doc"), col("__term"))
-      .agg(count(lit(1)).as("__cnt"))
-    // The (tf desc, term asc) order doubles as the deterministic
-    // maxVocabSize tie-break; limit() plans TakeOrderedAndProject (k
-    // rows per partition, k at the driver), so the collect is bounded
-    // by construction, not by hoping the trim thresholds are high.
-    val survivors = byDocTerm
-      .groupBy(col("__term"))
-      .agg(count(lit(1)).as("__df"), sum(col("__cnt")).as("__tf"))
-      .filter(col("__df") >= $(minDocFreq) && col("__tf") >= $(minTermFreq))
-      .orderBy(desc("__tf"), asc("__term"))
-      .select(col("__term"))
-    val vocabRows =
-      (if ($(maxVocabSize) == Int.MaxValue) survivors
-       else survivors.limit($(maxVocabSize)))
-        .collect()
-    val vocab = vocabRows.map(_.getString(0))
+    val minDf = $(minDocFreq).toLong
+    val minTf = $(minTermFreq).toLong
+    val survivors = ds.toDF().select(col($(inputCol)))
+      .queryExecution.toRdd
+      .flatMap(TrimmedCountVectorizer.termCounts)
+      .reduceByKey((a, b) => (a._1 + b._1, a._2 + b._2))
+      .filter { case (_, (df, tf)) => df >= minDf && tf >= minTf }
+      .map { case (term, (_, tf)) => (term, tf) }
+    import TrimmedCountVectorizer.VocabOrder
+    val top =
+      if ($(maxVocabSize) == Int.MaxValue) survivors.collect().sorted(VocabOrder)
+      else survivors.takeOrdered($(maxVocabSize))(VocabOrder)
+    val vocab = top.map { case (term, _) =>
+      if (term == null) null else term.toString
+    }
     copyValues(new TrimmedCountVectorizerModel(uid, vocab).setParent(this))
   }
 
@@ -95,7 +94,44 @@ class TrimmedCountVectorizer(override val uid: String)
 }
 
 object TrimmedCountVectorizer
-    extends DefaultParamsReadable[TrimmedCountVectorizer]
+    extends DefaultParamsReadable[TrimmedCountVectorizer] {
+
+  /** One document's `(term, (1, count))` pairs, one per distinct term.
+    * A null or empty token array contributes nothing and a null token
+    * is a term of its own, as `explode` + `groupBy(term)` would have
+    * it. Keys are copied out of the row, whose buffer is reused.
+    */
+  private def termCounts(row: InternalRow)
+      : Iterator[(UTF8String, (Long, Long))] =
+    if (row.isNullAt(0)) Iterator.empty
+    else {
+      val tokens = row.getArray(0)
+      val counts = new java.util.HashMap[UTF8String, Array[Long]]()
+      var i = 0
+      while (i < tokens.numElements()) {
+        val term = if (tokens.isNullAt(i)) null else tokens.getUTF8String(i)
+        val c = counts.get(term)
+        if (c != null) c(0) += 1L
+        else counts.put(if (term == null) null else term.copy(), Array(1L))
+        i += 1
+      }
+      counts.entrySet.iterator.asScala
+        .map(e => (e.getKey, (1L, e.getValue()(0))))
+    }
+
+  /** Corpus frequency desc, then term asc in UTF-8 byte order with the
+    * null term first: Spark's `orderBy(desc(tf), asc(term))`.
+    */
+  private object VocabOrder extends Ordering[(UTF8String, Long)] {
+    def compare(a: (UTF8String, Long), b: (UTF8String, Long)): Int = {
+      val byTf = java.lang.Long.compare(b._2, a._2)
+      if (byTf != 0) byTf
+      else if (a._1 == null) { if (b._1 == null) 0 else -1 }
+      else if (b._1 == null) 1
+      else a._1.binaryCompare(b._1)
+    }
+  }
+}
 
 /** Fitted model: vocabulary → sparse count vectors. */
 class TrimmedCountVectorizerModel(

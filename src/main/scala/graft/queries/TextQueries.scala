@@ -349,8 +349,10 @@ object TextQueries {
 
     // A3 — vocabulary trim, reference thresholds (dfm_trim R:105):
     // keep terms with doc-frequency ≥ 25 AND corpus term-frequency ≥ 35.
-    // One aggregation pass computes both frequencies (the custom
-    // TrimmedCountVectorizer estimator uses this same plan).
+    // One aggregation pass computes both frequencies. The
+    // TrimmedCountVectorizer estimator reaches the same words through
+    // per-document term counts and one map-side-combined reduceByKey
+    // (TrimmedCountVectorizerSpec checks the two agree).
     QueryDef(
       "q_vocab_trim",
       (s, dir) =>

@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.util.hashing.MurmurHash3
 
+import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** End-to-end reference-pipeline replication on the fixture corpus:
@@ -95,5 +99,31 @@ class OkCupidPipelineSpec extends SparkSuite {
     assert(e.getMessage.contains("empty training input"))
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
+  }
+
+  // 10 jobs with one vocabulary shuffle, one split materialization and
+  // one confusion aggregation (25 when the vocabulary fit took two
+  // shuffles and a sort, the split ran twice and the confusion matrix
+  // was persisted, sorted and re-parallelized). A stage that adds a
+  // job back fails here.
+  test("a flagship pass starts at most 10 jobs") {
+    val profiles = Bench.syntheticProfiles(spark, 600L).persist()
+    try {
+      profiles.count()
+      val sc = spark.sparkContext
+      val jobs = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      ListenerDrain.waitUntilEmpty(sc, 30000L)
+      sc.addSparkListener(listener)
+      try {
+        val (confusion, _, _) = OkCupidPipeline.trainAndEvaluateTimed(profiles)
+        confusion.collect()
+        ListenerDrain.waitUntilEmpty(sc, 30000L)
+      } finally sc.removeSparkListener(listener)
+      assert(jobs.get <= 10, s"${jobs.get} jobs")
+    } finally profiles.unpersist()
   }
 }
