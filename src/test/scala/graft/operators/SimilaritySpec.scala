@@ -169,6 +169,87 @@ class SimilaritySpec extends SparkSuite {
       }
   }
 
+  /** 200 vectors in 16 dims with two labels. Rows 180–199 are exact
+    * copies of rows 0, 9, …, 171; row 5 copies row 2 and row 7 is
+    * row 4 doubled (both inside the 16-row sampled codebook), so the
+    * rounded cosines, the distances and the cell assignments all tie.
+    */
+  private def goldenCorpus = {
+    val r = new Random(97)
+    val base = (0 until 180).map(_ => randVec(r, 16)).toArray
+    base(5) = base(2).clone()
+    base(7) = base(4).map(_ * 2.0f)
+    val rows = base.indices.map(i => (i.toLong, base(i), i % 2)) ++
+      (0 until 20).map(j => (180L + j, base(j * 9).clone(), (j / 2) % 2))
+    rows.toDF("vec_id", "embedding", "label")
+  }
+
+  /** Every row of `df` ordered by (query_id, rank): the row count and
+    * the ordered hash of the rows' string forms.
+    */
+  private def pinned(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val rows = df.orderBy($"query_id", $"rank").collect().map(_.toString)
+    (rows.length, scala.util.hashing.MurmurHash3.orderedHash(rows.toSeq))
+  }
+
+  test("every cosine and euclidean top-k path is pinned at shuffle " +
+      "widths 1 and 4") {
+    val corpus = goldenCorpus
+    val queries = corpus.filter($"vec_id" < 24)
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    val dir = java.nio.file.Files.createTempDirectory("golden-ivf")
+    try {
+      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", 16,
+        dir.toString)
+      def run(): Map[String, (Int, Int)] = Map(
+        "bruteForceTopK" -> pinned(Similarity.bruteForceTopK(
+          queries, corpus, "vec_id", "embedding", 5)),
+        "hardNegatives" -> pinned(Similarity.hardNegatives(
+          queries, corpus, "vec_id", "embedding", "label", 5)),
+        "euclideanKnn" -> pinned(Similarity.euclideanKnn(
+          corpus, "vec_id", "embedding", 3)),
+        "euclideanTopK" -> pinned(Similarity.euclideanTopK(
+          queries, corpus, "vec_id", "embedding", 5)),
+        "cellBlockedTopK/8" -> pinned(Similarity.cellBlockedTopK(
+          corpus, "vec_id", "embedding", 3, nlist = 8)),
+        "cellBlockedTopK/derived" -> pinned(Similarity.cellBlockedTopK(
+          corpus, "vec_id", "embedding", 3, targetCellRows = 8L)),
+        "lshTopK" -> pinned(Similarity.lshTopK(
+          queries, corpus, "vec_id", "embedding", 5, bits = 4,
+          tables = 8)),
+        "ivfTopKSampledCodebook" -> pinned(
+          Similarity.ivfTopKSampledCodebook(
+            queries, corpus, "vec_id", "embedding", 5, nprobe = 4)),
+        "ivfTopKFromIndex" -> pinned(Similarity.ivfTopKFromIndex(
+          queries, "vec_id", "embedding", 5, 4, dir.toString)))
+      val golden = Map(
+        "bruteForceTopK" -> (120, 1626392213),
+        "hardNegatives" -> (120, 87072208),
+        "euclideanKnn" -> (600, 484704010),
+        "euclideanTopK" -> (120, -1819085480),
+        "cellBlockedTopK/8" -> (600, -1234326609),
+        "cellBlockedTopK/derived" -> (596, 843713359),
+        "lshTopK" -> (120, 231692862),
+        "ivfTopKSampledCodebook" -> (120, 1687499030),
+        "ivfTopKFromIndex" -> (120, 1687499030))
+      // the fixture does tie: some query has two neighbors at one
+      // rounded cosine, so the neighbor-id tie-break is exercised
+      assert(Similarity.bruteForceTopK(
+          queries, corpus, "vec_id", "embedding", 5)
+        .groupBy($"query_id", $"cosine").count()
+        .filter($"count" > 1).count() > 0)
+      Seq(1, 4).foreach { w =>
+        spark.conf.set(key, w.toString)
+        val got = run()
+        assert(got == golden, s"width $w: $got")
+      }
+    } finally {
+      spark.conf.set(key, saved)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   test("derivedNlist pins expected cell population at any corpus " +
       "size; auto mode matches the derived explicit call") {
     // The scale rule itself: mean cell population n/nlist never
