@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.ml.classification.DecisionTreeClassifier
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,7 +8,9 @@ import org.apache.spark.sql.functions._
   * the reference's `createMultiFolds(labels, k=10, times=3)` +
   * `trainControl(method="repeatedcv")` (`Week5_datingNLP.R:158-166`,
   * SURVEY §2.8 M2; the reference never wires it to a trainer — §8 Q1
-  * — so this is the honored intent, not replicated dead code).
+  * — so this is the honored intent, not replicated dead code). Only
+  * the fold assignment lives here, and `q_cv_folds` pins
+  * [[exactFolds]]: the reference trains nothing on its folds.
   *
   * Two fold-assignment strategies:
   *
@@ -27,13 +28,6 @@ import org.apache.spark.sql.functions._
   *    bucket of (id, rep). No exchange at all; per-class balance is
   *    only statistical (±O(√n)), which is what a 100-TB validation
   *    split actually needs.
-  *
-  * [[crossValidateTree]] then runs the full repeated-CV protocol:
-  * for each (rep, fold) it trains a decision tree on the other k−1
-  * folds and scores the held-out fold, returning the per-fold
-  * accuracy table a `trainControl` summary prints. The k·times fits
-  * run as a driver loop over Spark jobs (each fit is distributed;
-  * the LOOP is inherently sequential model selection).
   */
 object CrossValidation {
 
@@ -71,46 +65,5 @@ object CrossValidation {
         (floor(CorpusMixing.hashFraction(
           concat(col(idCol).cast("string"), lit("#"),
             col("rep").cast("string"))) * k) + 1).cast("int"))
-  }
-
-  /** Repeated-CV decision-tree evaluation over pre-assigned folds
-    * (from [[exactFolds]]/[[hashFolds]]): for each (rep, fold),
-    * train on the complement, score the held-out fold. Returns
-    * (rep, fold, n_test, accuracy) — k·times rows, driver-resident
-    * by construction.
-    *
-    * `labelIdxCol` must be a numeric 0-based class index and
-    * `featuresCol` an ML vector (the caller owns featurization —
-    * [[OkCupidPipeline]] shows the text path).
-    */
-  def crossValidateTree(
-      folds: DataFrame, labelIdxCol: String, featuresCol: String,
-      k: Int, times: Int, maxDepth: Int = 5, seed: Long = 32984L)
-      : DataFrame = {
-    val spark = folds.sparkSession
-    import spark.implicits._
-    val base = folds.select(col("rep"), col("fold"),
-      col(labelIdxCol).cast("double").as("label"),
-      col(featuresCol).as("features")).persist()
-    try {
-      base.count() // materialize once; every fit reuses the cache
-      val rows = for (r <- 1 to times; f <- 1 to k) yield {
-        val train = base.filter(col("rep") === r && col("fold") =!= f)
-        val test = base.filter(col("rep") === r && col("fold") === f)
-        val model = new DecisionTreeClassifier()
-          .setLabelCol("label").setFeaturesCol("features")
-          .setMaxDepth(maxDepth).setSeed(seed)
-          .fit(train)
-        val scored = model.transform(test)
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("prediction") === col("label"), 1L)
-              .otherwise(0L)).as("hits"))
-          .collect()(0)
-        val n = scored.getLong(0)
-        val acc = if (n == 0) 0.0 else scored.getLong(1).toDouble / n
-        (r, f, n, acc)
-      }
-      rows.toDF("rep", "fold", "n_test", "accuracy")
-    } finally { base.unpersist(); () }
   }
 }

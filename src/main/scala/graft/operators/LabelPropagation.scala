@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: edges are built by whatever candidate generator fits
   * the corpus — the brute-force path here for driver-sized fixtures,
-  * [[Similarity.lshTopK]]/[[Similarity.ivfTopK]] at 100 TB — and the
-  * iteration itself never touches vectors again: it is k·|V| edges
-  * joined to a |V|-sized label table, both hash-partitioned on the
-  * join id, per round. Labels stay distributed (no driver collect);
+  * [[Similarity.lshTopK]]/[[Similarity.ivfTopKSampledCodebook]] at
+  * 100 TB — and the iteration itself never touches vectors again: it
+  * is k·|V| edges joined to a |V|-sized label table, both
+  * hash-partitioned on the join id, per round. Labels stay distributed (no driver collect);
   * rounds are a fixed small count, so lineage stays shallow without
   * checkpointing.
   */

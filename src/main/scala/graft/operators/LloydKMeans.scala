@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * on an exact integer lattice, and a fixed iteration count unrolls
   * into DuckDB CTEs (the q_coreset/q_pagerank generated-iteration
   * precedent), so cluster sizes AND training cost hash-match across
-  * engines. MLlib's seeded k-means|| ([[KMeansBestOfSeeds]]) remains
-  * the nstart-fidelity path; this operator is the one a correctness
-  * gate can pin.
+  * engines. It is the engine's only k-means: `q_kmeans_cost` runs it
+  * for the reference's `kmeans(nstart=50)`, trading the best-of-50
+  * random restarts for one init that a correctness gate can pin.
   *
   * Lattice: each coordinate snaps to micro (x·10⁶, exact in double),
   * distances are exact integer Σ(xm−cm)² in micro² units (≤ 64 dims

@@ -2,23 +2,32 @@ package graft.operators
 
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two paths:
-  *  - [[bruteForceTopK]] — exact: broadcast the (small) query set,
-  *    score every corpus row, per-query top-k via window rank. The
-  *    corpus is never shuffled — one scan, map-side scoring, and the
-  *    only exchange carries `queries×corpus` scored rows reduced by
-  *    the rank filter. Baseline and ground truth.
-  *  - [[lshTopK]] — the scale path: random-hyperplane LSH buckets
-  *    (sign bits of seeded pseudo-random projections), candidates =
-  *    same bucket in any of `tables` independent hashings, exact
-  *    cosine re-rank within candidates. Sub-linear candidate counts;
-  *    recall tunable via bits/tables (an IVF analogue without a
-  *    trained codebook, so it needs no fit step).
+  * Every per-query top-k here is a candidate generator feeding one
+  * ranker. The generators:
+  *  - broadcast cross join — [[bruteForceTopK]] (exact; the ground
+  *    truth), [[hardNegatives]] (cross-label candidates only) and the
+  *    L2 pair [[euclideanKnn]]/[[euclideanTopK]]: the bounded query
+  *    side is broadcast, the corpus is scanned once and scored
+  *    map-side, never shuffled;
+  *  - same-cell self-join — [[cellBlockedTopK]]: corpus×corpus kNN
+  *    inside the cells of the deterministic sampled codebook;
+  *  - probe join — [[ivfTopKSampledCodebook]]/[[ivfTopKFromIndex]]:
+  *    each query searches its `nprobe` nearest cells;
+  *  - bucket join — [[lshTopK]]: random-hyperplane LSH buckets, an
+  *    IVF analogue with no codebook at all.
+  *
+  * The ranker is the bounded per-query top-k aggregate
+  * ([[topKPerQuery]]); the cosine generators reach it through
+  * `rankCosine` (self-pairs dropped, cosine rounded to 6 decimals),
+  * the L2 ones with a negated distance as the score. Ties break by
+  * neighbor id, so every ranking is a total order that a DuckDB
+  * oracle replays. The pair operators ([[topSimilarPairs]],
+  * [[nearDupPairsIvf]], [[semanticDedup]]) rank pairs, not per-query
+  * lists.
   *
   * Cosine math is `zip_with`/`aggregate` in double (VectorFunctions) —
   * codegen'd, no UDF.
@@ -48,6 +57,19 @@ object Similarity {
         col("col.score").as("cosine"),
         (col("pos") + 1).as("rank"))
   }
+
+  /** The cosine ranker of every cosine top-k here: drops self-pairs,
+    * scores the 6-decimal rounded cosine and keeps each query's top k
+    * ([[topKPerQuery]]). `pairs` = (query_id, qv, neighbor_id, cv)
+    * from any candidate generator.
+    */
+  private def rankCosine(pairs: DataFrame, k: Int): DataFrame =
+    topKPerQuery(
+      pairs.filter(col("query_id") =!= col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          round(VectorFunctions.cosine(col("qv"), col("cv")), 6)
+            .as("cosine")),
+      k)
 
   /** Exact top-k cosine neighbors for each query row.
     * Output: (query_id, neighbor_id, cosine) with rank ≤ k, ties on
@@ -88,11 +110,7 @@ object Similarity {
         "(IVF-cell-blocked kNN) or ivfTopKSampledCodebook.")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("cv")), 6).as("cosine"))
-    topKPerQuery(scored, k)
+    rankCosine(c.crossJoin(broadcast(q)), k)
   }
 
   /** Corpus×corpus kNN WITHOUT the broadcast: top-k cosine neighbors
@@ -131,14 +149,12 @@ object Similarity {
         corpus.select(col(idCol)).count(), targetCellRows)
     val assigned = assignCellsSampledCodebook(corpus, idCol, vecCol, nl)
       .localCheckpoint(true)
-    val scored = assigned
-      .select(col("cell"), col("id").as("query_id"), col("cv").as("qv"))
-      .join(assigned.select(col("cell"), col("id").as("neighbor_id"),
-        col("cv")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("cv")), 6).as("cosine"))
-    topKPerQuery(scored, k)
+    rankCosine(
+      assigned
+        .select(col("cell"), col("id").as("query_id"), col("cv").as("qv"))
+        .join(assigned.select(col("cell"), col("id").as("neighbor_id"),
+          col("cv")), Seq("cell")),
+      k)
   }
 
   /** Exact k-nearest-neighbor graph of a (bounded) point set by
@@ -182,12 +198,8 @@ object Similarity {
       col(vecCol).as("qv"), col(labelCol).as("ql"))
     val c = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("cv"), col(labelCol).as("cl"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id") &&
-        !(col("ql") <=> col("cl")))
-      .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("cv")), 6).as("cosine"))
-    topKPerQuery(scored, k)
+    rankCosine(
+      c.crossJoin(broadcast(q)).filter(!(col("ql") <=> col("cl"))), k)
   }
 
   /** Bucket ids for all hash tables at once: `bits` sign bits of
@@ -212,77 +224,11 @@ object Similarity {
     val qb = bucketed(queries, "query_id", "qv")
     val cb = bucketed(corpus, "neighbor_id", "cv")
     val cands = cb.join(broadcast(qb), Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("qv"), col("neighbor_id"), col("cv"))
       .distinct()
-    topKPerQuery(
-      cands.select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("cv")), 6).as("cosine")),
-      k)
+    rankCosine(cands, k)
   }
 
-  /** IVF-style approximate top-k: fit a k-means codebook (nlist
-    * centroids) over the corpus embeddings, assign every corpus row to
-    * its nearest centroid (inverted lists), then search each query
-    * only in its `nprobe` nearest cells with exact cosine re-ranking.
-    *
-    * The scale path with a trained codebook (vs the training-free LSH
-    * variant): corpus assignment is one MLlib transform; the probe
-    * join broadcasts (query, cell) pairs so the corpus shuffles only
-    * on its cell id. Deterministic for a fixed seed.
-    */
-  def ivfTopK(
-      queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 4,
-      seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    val corpusVec = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("cv"), graft.functions.vector_from_floats(col(vecCol)).as("mlv"))
-    val km = new KMeans().setK(nlist).setSeed(seed)
-      .setFeaturesCol("mlv").setPredictionCol("cell")
-    val model = km.fit(corpusVec)
-    val assigned = model.transform(corpusVec)
-      .select(col("neighbor_id"), col("cv"), col("cell"))
-    // nprobe nearest cells per query, via a broadcast centroid table
-    val centroids = model.clusterCenters.zipWithIndex.map {
-      case (c, i) => (i, c.toArray.map(_.toFloat))
-    }.toSeq
-    val centDf = queries.sparkSession.createDataFrame(centroids)
-      .toDF("cell", "centroid")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(desc("csim"), asc("cell"))
-    val probes = q.crossJoin(broadcast(centDf))
-      .withColumn("csim",
-        VectorFunctions.cosine(col("qv"), col("centroid")))
-      .withColumn("prank", row_number().over(probeW))
-      .filter(col("prank") <= nprobe)
-      .select(col("query_id"), col("qv"), col("cell"))
-    topKPerQuery(
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          round(VectorFunctions.cosine(col("qv"), col("cv")), 6).as("cosine")),
-      k)
-  }
-
-  /** IVF top-k with a DETERMINISTIC corpus-sampled codebook: the
-    * centroids are the `nlist` corpus rows with the smallest ids (no
-    * k-means fit, no seed). Same plumbing as [[ivfTopK]] — cell
-    * assignment, multi-cell probing, candidate join, exact re-rank —
-    * but every step is a pure function of the data, so the whole
-    * search (and its recall against [[bruteForceTopK]]) is
-    * SQL-expressible and oracle-checkable; `q_ann_recall` pins it.
-    *
-    * Plan shape is the scale shape: the codebook is broadcast (nlist
-    * rows), corpus assignment is one map-side cross-join + partial
-    * `max_by` aggregate (shuffle carries ONE row per corpus vector,
-    * not nlist), probes broadcast, and the candidate join shuffles the
-    * corpus only on its cell id. Cosines are rounded to 6 decimals
-    * BEFORE every argmax/rank so tie-breaks (asc cell / asc neighbor)
-    * are reproducible across engines.
-    */
   /** Codebook size from a corpus count: max(16, ceil(n /
     * targetCellRows)) — the scale rule behind [[cellBlockedTopK]]'s
     * auto mode. Pure arithmetic (callers supply the count), so specs
@@ -446,7 +392,23 @@ object Similarity {
           .as("mean_silhouette"))
   }
 
-  /** `nlist = 0` (the default) DERIVES the codebook size from the
+  /** IVF top-k with a DETERMINISTIC corpus-sampled codebook: the
+    * centroids are the `nlist` corpus rows with the smallest ids (no
+    * k-means fit, no seed). Cell assignment, multi-cell probing,
+    * candidate join and exact re-rank are each a pure function of the
+    * data, so the whole search (and its recall against
+    * [[bruteForceTopK]]) is SQL-expressible and oracle-checkable;
+    * `q_ann_recall` pins it.
+    *
+    * Plan shape is the scale shape: the codebook is broadcast (nlist
+    * rows), corpus assignment is one map-side cross-join + partial
+    * `max_by` aggregate (shuffle carries ONE row per corpus vector,
+    * not nlist), probes broadcast, and the candidate join shuffles the
+    * corpus only on its cell id. Cosines are rounded to 6 decimals
+    * BEFORE every argmax/rank so tie-breaks (asc cell / asc neighbor)
+    * are reproducible across engines.
+    *
+    * `nlist = 0` (the default) DERIVES the codebook size from the
     * corpus count via [[derivedNlist]] — the kNN-family scale rule:
     * a fixed nlist makes per-query candidate lists grow linearly
     * with cell size (n/nlist), defeating the population bound.
@@ -471,37 +433,40 @@ object Similarity {
       k, nprobe)
   }
 
+  /** Each row's `nprobe` nearest cells of the codebook `centDf`
+    * (cell, centroid): the bounded top-k aggregate over the 6-dp
+    * rounded cosine, in the (csim desc, cell asc) order a rank window
+    * would give. `rows` = (idCol, vecCol) with unique ids; output =
+    * (idCol, vecCol, cell), one row per probed cell.
+    */
+  private def probeCells(
+      rows: DataFrame, idCol: String, vecCol: String,
+      centDf: DataFrame, nprobe: Int): DataFrame =
+    rows.crossJoin(broadcast(centDf))
+      .withColumn("csim",
+        round(VectorFunctions.cosine(col(vecCol), col("centroid")), 6))
+      .groupBy(col(idCol))
+      .agg(graft.functions.top_k_by(col("csim"), col("cell"), nprobe)
+          .as("top"),
+        first(col(vecCol)).as(vecCol))
+      .select(col(idCol), col(vecCol), explode(col("top")).as("probe"))
+      .select(col(idCol), col(vecCol), col("probe.id").as("cell"))
+
   /** The IVF probe-and-rerank tail, shared by the live path and the
-    * persisted-index path: nprobe nearest cells per query via the
-    * bounded top-k aggregate (same (csim desc, cell asc) order a rank
-    * window would give), candidate join on the cell id, exact cosine
+    * persisted-index path: nprobe nearest cells per query
+    * ([[probeCells]]), candidate join on the cell id, exact cosine
     * re-rank. `assigned` = (neighbor_id, cell, cv); `centDf` =
     * (cell, centroid), broadcast-sized.
     */
   private def ivfSearch(
       assigned: DataFrame, centDf: DataFrame,
       q: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val probes = q.crossJoin(broadcast(centDf))
-      .withColumn("csim",
-        round(VectorFunctions.cosine(col("qv"), col("centroid")), 6))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.top_k_by(col("csim"), col("cell"), nprobe)
-          .as("top"),
-        first(col("qv")).as("qv"))
-      .select(col("query_id"), col("qv"),
-        explode(col("top")).as("probe"))
-      .select(col("query_id"), col("qv"), col("probe.id").as("cell"))
+    val probes = probeCells(q, "query_id", "qv", centDf, nprobe)
     // `probes` is queries×nprobe rows — broadcastable because ANN
     // queries are a workload, not the corpus. If queries ever became
     // corpus-sized (all-pairs search), drop the hint and shuffle the
     // join on `cell` instead.
-    topKPerQuery(
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          round(VectorFunctions.cosine(col("qv"), col("cv")), 6)
-            .as("cosine")),
-      k)
+    rankCosine(assigned.join(broadcast(probes), Seq("cell")), k)
   }
 
   /** Persist the IVF index — codebook (nlist rows) and cell-assigned
@@ -538,11 +503,6 @@ object Similarity {
       k, nprobe)
   }
 
-  /** Per-query recall@k of an approximate top-k result against the
-    * exact one: |approx ∩ exact| / |exact| per query id. Both inputs
-    * are (query_id, neighbor_id, ...) frames as produced by the topK
-    * methods here.
-    */
   /** Exact L2 top-k of `queries` against `corpus` — the ground truth
     * the PQ/ADC path is measured against. Distances snap to the
     * micro lattice before ranking (the [[ProductQuantization]]
@@ -559,19 +519,18 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.dist2(col("qv"), col("cv")) * lit(1e6))
-          .cast("long").as("dist_micro"))
-    scored
-      .groupBy(col("query_id"))
-      .agg(graft.functions.top_k_by(
-        negate(col("dist_micro")).cast("double"), col("neighbor_id"), k)
-        .as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.id").as("neighbor_id"),
-        negate(col("col.score")).cast("long").as("dist_micro"),
-        (col("pos") + 1).as("rank"))
+        negate(round(VectorFunctions.dist2(col("qv"), col("cv")) * lit(1e6))
+          .cast("long")).cast("double").as("cosine"))
+    topKPerQuery(scored, k)
+      .select(col("query_id"), col("neighbor_id"),
+        negate(col("cosine")).cast("long").as("dist_micro"), col("rank"))
   }
 
+  /** Per-query recall@k of an approximate top-k result against the
+    * exact one: |approx ∩ exact| / |exact| per query id. Both inputs
+    * are (query_id, neighbor_id, ...) frames as produced by the topK
+    * methods here.
+    */
   def recallAtK(exact: DataFrame, approx: DataFrame): DataFrame =
     exact.select(col("query_id"), col("neighbor_id"))
       .join(approx.select(col("query_id"), col("neighbor_id"))
@@ -648,10 +607,11 @@ object Similarity {
     * path for embedding near-dup detection (vs [[topSimilarPairs]]'
     * all-pairs cross-join):
     *
-    *  1. fit a k-means codebook (`nlist` centroids) over the corpus;
-    *  2. replicate each vector into its `nprobe` nearest cells
-    *     (multi-probe indexing: a pair is a candidate when the two
-    *     probe sets share a cell);
+    *  1. take the deterministic sampled codebook ([[sampledCodebook]]:
+    *     the `nlist` smallest ids' vectors — no k-means fit, no seed);
+    *  2. replicate each vector into its `nprobe` nearest cells by
+    *     6-dp cosine, ties to the smaller cell (multi-probe indexing:
+    *     a pair is a candidate when the two probe sets share a cell);
     *  3. self-join *within cells only* (the shuffle key is the cell
     *     id — the corpus is never cross-joined or driver-broadcast),
     *     exact cosine re-rank, partial per-partition top-N
@@ -661,45 +621,28 @@ object Similarity {
     * `nlist` with the corpus keeps g — and so per-task work — bounded.
     * Recall: a top pair is missed only if its two probe sets are
     * disjoint; at the default 6-of-16 probes this is vanishing for
-    * genuinely near vectors (verified against [[topSimilarPairs]] on
-    * the testdata, where even the statistical-extreme pairs at cosine
-    * ≈0.43 are all recalled). Exact global top-N over *unstructured*
+    * genuinely near vectors (`q_dedup_embedding`, whose oracle is the
+    * exact all-pairs answer, matches it at sf0.001, sf0.01 and sf0.1,
+    * where even the statistical-extreme pairs at cosine ≈0.43 are all
+    * recalled). Exact global top-N over *unstructured*
     * dense vectors has no sub-quadratic algorithm; for corpora with
     * real near-dup structure the probe sets of a dup pair share their
     * nearest cell almost surely.
     */
   def nearDupPairsIvf(
       df: DataFrame, idCol: String, vecCol: String, topN: Int,
-      nlist: Int = 0, nprobe: Int = 6, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
+      nlist: Int = 0, nprobe: Int = 6): DataFrame = {
     val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     // nlist = 0 derives k from the corpus count (the cellBlockedTopK
     // scale rule): fixed k makes the within-cell self-join quadratic
     // at 100x; derived k pins expected cell population instead.
     val nl = if (nlist > 0) nlist
       else derivedNlist(df.select(col(idCol)).count())
-    val km = new KMeans().setK(nl).setSeed(seed)
-      .setFeaturesCol("mlv").setPredictionCol("cell")
-    val model = km.fit(base.select(graft.functions.vector_from_floats(col("v")).as("mlv")))
-    val centroids = model.clusterCenters.zipWithIndex.map {
-      case (c, i) => (i, c.toArray.map(_.toFloat))
-    }.toSeq
-    val centDf = df.sparkSession.createDataFrame(centroids)
-      .toDF("cell", "centroid")
-    // nprobe nearest cells per vector (broadcast centroid table —
-    // nlist rows, bounded by construction)
-    val probeW = Window.partitionBy(col("id"))
-      .orderBy(desc("csim"), asc("cell"))
-    // Both sides of the within-cell self-join read `probed` — pinned
-    // EAGERLY so the scan + probe ranking runs once: the self-join's
-    // two map stages materialize concurrently under AQE, so a lazy
-    // persist lets each compute its own copy before any cached
-    // partition lands (the r20 minhash finding). Blocks are
-    // ContextCleaner-managed once the sealed result drops them.
+    val centDf = sampledCodebook(df, idCol, vecCol, nl)
     // Both sides of the within-cell self-join read `probed` — the
     // LAZY persist is deliberate and r20-measured, unlike the minhash
     // sites: the duplication it pays (crossJoin-broadcast + probe
-    // window, concurrently materialized by both join sides) is cheap,
+    // ranking, concurrently materialized by both join sides) is cheap,
     // while the cached plan's exemption from AQE partition coalescing
     // keeps the CPU-heavy within-cell pair stage at the session width
     // for free. Both eager variants measured net-negative: a plain
@@ -709,10 +652,7 @@ object Similarity {
     // wider layout weakens the distinct's map-side collapse, 43→67 MB
     // shuffled). The tiny top-N result is sealed eagerly and the
     // probe cache released before returning (CacheLifecycle).
-    val probed = base.crossJoin(broadcast(centDf))
-      .withColumn("csim", VectorFunctions.cosine(col("v"), col("centroid")))
-      .withColumn("prank", row_number().over(probeW))
-      .filter(col("prank") <= nprobe)
+    val probed = probeCells(base, "id", "v", centDf, nprobe)
       .select(col("cell"), col("id"), col("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val top = probed

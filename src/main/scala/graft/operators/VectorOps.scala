@@ -1,11 +1,6 @@
 package graft.operators
 
 import org.apache.spark.ml.feature.VectorSlicer
-import org.apache.spark.ml.classification.DecisionTreeClassifier
-import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
-import org.apache.spark.ml.param.ParamMap
-import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel}
-import org.apache.spark.sql.Dataset
 
 /** Vector-column helpers for the reference's intended-but-buggy ops. */
 object VectorOps {
@@ -25,32 +20,5 @@ object VectorOps {
     new VectorSlicer()
       .setInputCol(inputCol).setOutputCol(outputCol)
       .setIndices(kept.toArray)
-  }
-
-  /** The reference's `createMultiFolds(k=10, times=3)` + trainControl
-    * intent (`R:158-166`) — dead code there (quirk Q1: `labels` is
-    * undefined and `cv.cntrl` never reaches a trainer); offered here
-    * as a working opt-in: k-fold CV over a decision tree's depth.
-    */
-  def crossValidatedTree(
-      data: Dataset[_],
-      labelCol: String,
-      featuresCol: String,
-      depths: Seq[Int] = Seq(3, 5, 8),
-      numFolds: Int = 10,
-      seed: Long = 32984L): CrossValidatorModel = {
-    val dt = new DecisionTreeClassifier()
-      .setLabelCol(labelCol).setFeaturesCol(featuresCol).setSeed(seed)
-    val grid = depths.map { d =>
-      ParamMap(dt.maxDepth -> d)
-    }.toArray
-    new CrossValidator()
-      .setEstimator(dt)
-      .setEvaluator(new MulticlassClassificationEvaluator()
-        .setLabelCol(labelCol).setMetricName("accuracy"))
-      .setEstimatorParamMaps(grid)
-      .setNumFolds(numFolds)
-      .setSeed(seed)
-      .fit(data)
   }
 }

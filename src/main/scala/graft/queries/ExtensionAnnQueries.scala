@@ -356,10 +356,8 @@ private[queries] object ExtensionAnnQueries {
     // so DuckDB replays cell assignment, probing, candidate join,
     // and the exact cosine re-rank (same derived-codebook chain
     // q_ann_recall pins; this exposes the ranked neighbor list
-    // itself). The seeded MLlib-k-means codebook variant
-    // (Similarity.ivfTopK) keeps its coverage spec-side in
-    // AnnRecallSpec — a trained codebook is inherently
-    // non-replayable in SQL.
+    // itself). The engine has no trained-codebook variant: a seeded
+    // k-means codebook is not replayable in SQL.
     QueryDef(
       "q_ann_ivf",
       (s, dir) => {
@@ -429,8 +427,8 @@ private[queries] object ExtensionAnnQueries {
     // the exact brute-force top-5 — the whole approximate search is a
     // pure function of the data, so the recall number itself is
     // oracle-checked end to end (cell assignment, probing, candidate
-    // join, re-rank). The seeded kmeans/LSH variants share this exact
-    // plumbing; their recall floors are pinned by AnnRecallSpec.
+    // join, re-rank). The LSH variant shares the exact re-rank; the
+    // recall floors of both are pinned by SimilaritySpec.
     QueryDef(
       "q_ann_recall",
       (s, dir) => {

@@ -282,8 +282,8 @@ object MLQueries {
     // training cost hash-match a generated-CTE DuckDB replay (the
     // q_coreset/q_pagerank unroll precedent — this was a no_oracle
     // row through r12). The reference's nstart=50 best-of-restarts
-    // intent stays available via graft.operators.KMeansBestOfSeeds
-    // (seeded MLlib k-means||, spec-pinned).
+    // is served by this one deterministic init: 50 seeded restarts
+    // could not be replayed by the oracle.
     QueryDef(
       "q_kmeans_cost",
       (s, dir) =>

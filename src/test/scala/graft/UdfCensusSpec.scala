@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * verdicts each had to re-grep this census by hand and caught it
   * silently drifting once — so it is pinned here: adding a UDF
   * without updating this allowlist (and writing down why the new site
-  * can't be an expression) fails the suite.
+  * can't be an expression) fails the suite. The second census keeps
+  * MLlib model fitting (clustering, tuning) out of `src/main`.
   */
 class UdfCensusSpec extends AnyFunSuite {
 
@@ -57,5 +58,36 @@ class UdfCensusSpec extends AnyFunSuite {
         "be a native expression; prefer graft.functions.* kernels " +
         "(vector_at, euclidean_dist2, ...) or a new Catalyst " +
         "Expression with doGenCode.")
+  }
+
+  // MLlib model fitting left src/main once every query ran the exact,
+  // oracle-replayable operators instead (DeterministicCart for the
+  // tree, LloydKMeans and the sampled codebook for k-means,
+  // CrossValidation.exactFolds for the folds). A clustering or tuning
+  // import brings back a seeded fit that no DuckDB oracle can replay.
+  private val mlModelImport =
+    """org\.apache\.spark\.ml\.(clustering|tuning)""".r
+
+  test("no MLlib clustering or tuning code in src/main") {
+    val root = Paths.get("src/main/scala")
+    assume(Files.isDirectory(root), "run from the repo root")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
+      .flatMap { p: Path =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if !isComment(l) &&
+              mlModelImport.findFirstIn(l).isDefined =>
+            s"${root.relativize(p)}:${i + 1}"
+        }
+      }
+      .toSeq.sorted
+    assert(hits.isEmpty,
+      s"\nMLlib clustering/tuning code is back in src/main: $hits")
+  }
+
+  /** Scaladoc and line comments may name what they replaced. */
+  private def isComment(l: String): Boolean = {
+    val t = l.trim
+    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
   }
 }

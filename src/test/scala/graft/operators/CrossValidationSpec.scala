@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSuite
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.functions._
 
 class CrossValidationSpec extends SparkSuite {
@@ -37,21 +36,5 @@ class CrossValidationSpec extends SparkSuite {
     assert(folds.count() === 300)
     val plan = folds.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), "hashFolds must be row-local")
-  }
-
-  test("crossValidateTree recovers a separable rule on every fold") {
-    // label is a deterministic function of the single feature
-    val data = (1L to 120L).map { i =>
-      val x = (i % 10).toDouble
-      (i, if (x < 5) 0L else 1L, Vectors.dense(x))
-    }.toDF("id", "y", "features")
-    val folds = CrossValidation.exactFolds(data, "y", "id", k = 3,
-      times = 2)
-    val out = CrossValidation.crossValidateTree(folds, "y", "features",
-      k = 3, times = 2, maxDepth = 2)
-    val rows = out.collect()
-    assert(rows.length === 6)
-    assert(rows.forall(_.getDouble(3) === 1.0))
-    assert(rows.map(_.getLong(2)).sum === 240L)
   }
 }
