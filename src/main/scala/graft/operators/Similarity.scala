@@ -624,10 +624,10 @@ object Similarity {
     * genuinely near vectors (`q_dedup_embedding`, whose oracle is the
     * exact all-pairs answer, matches it at sf0.001, sf0.01 and sf0.1,
     * where even the statistical-extreme pairs at cosine ≈0.43 are all
-    * recalled). Exact global top-N over *unstructured*
-    * dense vectors has no sub-quadratic algorithm; for corpora with
-    * real near-dup structure the probe sets of a dup pair share their
-    * nearest cell almost surely.
+    * recalled). Exact global top-N over *unstructured* dense vectors
+    * has no sub-quadratic algorithm; for corpora with real near-dup
+    * structure the probe sets of a dup pair share their nearest cell
+    * almost surely.
     */
   def nearDupPairsIvf(
       df: DataFrame, idCol: String, vecCol: String, topN: Int,
@@ -653,7 +653,6 @@ object Similarity {
     // shuffled). The tiny top-N result is sealed eagerly and the
     // probe cache released before returning (CacheLifecycle).
     val probed = probeCells(base, "id", "v", centDf, nprobe)
-      .select(col("cell"), col("id"), col("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val top = probed
       .select(col("cell"), col("id").as("id_a"), col("v").as("va"))
