@@ -28,7 +28,7 @@ object Explain {
       .foreach { case (name, fn) =>
         println(s"\n===== $name =====")
         try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable =>
+        catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[explain] $name failed: ${e.getMessage}")
         }
       }

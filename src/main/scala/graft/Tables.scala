@@ -27,10 +27,20 @@ object Tables {
     * them to session-zone µs TimestampType so every downstream query
     * and its DuckDB oracle (which truncates to µs identically) see the
     * same values regardless of the generator's choice.
+    *
+    * The schema is read with `nanosAsLong` scoped to the read. Only
+    * the nanos flavor (`ts` arrives as `LongType`) leaves it set on
+    * the session: the scan reads the conf again when it executes, so
+    * restoring it here would break every later action on the frame.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(apply(spark, dir, "events"))
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val raw = graft.operators.Par.withConf(spark, nanos -> "true") {
+      apply(spark, dir, "events")
+    }
+    if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      spark.conf.set(nanos, "true")
+    normalizeTs(raw)
   }
 
   /** Shared `ts` normalization for batch AND streaming events readers

@@ -26,7 +26,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -64,7 +64,7 @@ object Verify {
           val rc = pb.start().waitFor()
           if (rc != 0)
             System.err.println(s"[verify] correctness_json.py rc=$rc")
-        } catch { case e: Throwable =>
+        } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(
             s"[verify] correctness.json emit skipped: ${e.getMessage}")
         }

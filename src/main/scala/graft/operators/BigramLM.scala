@@ -83,7 +83,7 @@ object BigramLM {
     val c12 = transitions(docs, idCol, textCol)
       .groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val c1 = c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
     val c2 = c12.groupBy(col("w2")).agg(sum(col("c12")).as("c2"))
     val n = c12.agg(sum(col("c12")).as("n12"))
@@ -114,7 +114,7 @@ object BigramLM {
     // both read this (bigram-vocab-sized) frame, not the corpus.
     val c12 = trans.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val c1 = c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
 
     // Unigram backoff distribution over the FULL token stream
@@ -122,7 +122,7 @@ object BigramLM {
     val toks = docs.select(
       explode(split(col(textCol), " ", -1)).as("w2"))
     val c2 = toks.groupBy(col("w2")).agg(count(lit(1)).as("c2"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val total = c2.agg(sum(col("c2")).cast("double").as("tot"))
 
     // p̂ with explicit parenthesization mirrored in the SQL oracles:
@@ -185,7 +185,7 @@ object BigramLM {
     val trans = transitions(docs, idCol, textCol)
     val c12 = trans.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     // all three marginals derive from the counts frame, not the corpus
     val left = c12.groupBy(col("w1"))
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1plus_fwd"))

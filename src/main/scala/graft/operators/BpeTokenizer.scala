@@ -154,7 +154,7 @@ object BpeTokenizer {
     * collect + one localCheckpoint per merge (2 driver jobs/merge).
     * This is the SEMANTIC DEFINITION of the ledger; kept as the
     * equivalence-spec twin of [[trainLedgerBatched]], which must be
-    * ledger-EQUAL on every corpus. Per-iteration localCheckpoint
+    * ledger-EQUAL on every corpus. Per-iteration [[Par.pin]]
     * truncation: merge k would otherwise replay all k−1 prior HOF
     * rewrites per pass.
     */
@@ -162,7 +162,7 @@ object BpeTokenizer {
       docs: DataFrame, textCol: String, nMerges: Int,
       minCount: Long = 2L): Seq[(Int, String, String, Long)] = {
     var symbols = initialSymbols(wordCounts(docs, textCol))
-      .select(col("freq"), col("syms")).localCheckpoint()
+      .select(col("freq"), col("syms")).transform(Par.pin)
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var continue = true
     var i = 0
@@ -176,7 +176,7 @@ object BpeTokenizer {
           merges += ((i + 1, l, r, row.getLong(2)))
           symbols = symbols
             .withColumn("syms", applyMerge(col("syms"), l, r))
-            .localCheckpoint()
+            .transform(Par.pin)
         case None => continue = false
       }
       i += 1
@@ -241,7 +241,7 @@ object BpeTokenizer {
 
   /** [[trainLedgerBatched]] plus the number of scan rounds it took —
     * the jobs-per-merge accounting (each round is one collect + one
-    * localCheckpoint; the sequential loop spends one round per
+    * pin; the sequential loop spends one round per
     * merge).
     */
   def trainLedgerBatchedWithRounds(
@@ -250,7 +250,7 @@ object BpeTokenizer {
       batchSize: Int = 32): (Seq[(Int, String, String, Long)], Int) = {
     require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
     var symbols = initialSymbols(wordCounts(docs, textCol))
-      .select(col("freq"), col("syms")).localCheckpoint()
+      .select(col("freq"), col("syms")).transform(Par.pin)
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var step = 0
     var rounds = 0
@@ -318,7 +318,7 @@ object BpeTokenizer {
             batch.map { case (l, r, _) => (l, r) }))
         pending += batch.length
         if (pending >= CheckpointEvery) {
-          symbols = symbols.localCheckpoint()
+          symbols = Par.pin(symbols)
           pending = 0
         }
       }

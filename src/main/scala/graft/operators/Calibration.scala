@@ -49,7 +49,7 @@ object Calibration {
       col(nCol).cast("long").as("__n"),
       col(posCol).cast("long").as("__pos"))
       .filter(col("__n") > 0)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val oversized = bins.groupBy(col("__g"))
       .agg(count(lit(1)).as("__c"))
       .filter(col("__c") > maxBins)

@@ -96,7 +96,7 @@ object CorpusMixing {
     val u = df.groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
       .select(col(keyCol), col("__n"),
         round(sqrt(col("__n").cast("double")), 9).as("__u"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val tot = u.agg(
       sum(col("__u").cast(org.apache.spark.sql.types.DecimalType(38, 12)))
         .cast("double").as("__su"))

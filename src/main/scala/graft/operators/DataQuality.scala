@@ -140,7 +140,7 @@ object DataQuality {
     val cells = df
       .groupBy((quasiCols :+ sensitiveCol).map(col): _*)
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val groupTot = cells.groupBy(quasiCols.map(col): _*)
       .agg(sum(col("__c")).as("__ng"))
     val domTot = cells.groupBy(col(sensitiveCol))

@@ -62,12 +62,12 @@ object Dbscan {
       .select(least(col(aCol), col(bCol)).as("__u"),
         greatest(col(aCol), col(bCol)).as("__v"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val und = e.union(e.select(col("__v").as("__u"), col("__u").as("__v")))
     val deg = und.groupBy(col("__u").as("__id"))
       .agg(count(lit(1)).as("__d"))
     val cores = deg.filter(col("__d") >= minPts).select(col("__id"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val coreEdges = e
       .join(cores.withColumnRenamed("__id", "__u"), Seq("__u"), "left_semi")
       .join(cores.withColumnRenamed("__id", "__v"), Seq("__v"), "left_semi")
@@ -77,7 +77,7 @@ object Dbscan {
     val coreLabels = cores.select(col("__id").cast("long").as("id"))
       .join(comp, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val borderLabels = und
       .join(coreLabels.withColumnRenamed("id", "__v"), Seq("__v"))
       .select(col("__u").cast("long").as("id"), col("label"))

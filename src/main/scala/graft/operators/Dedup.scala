@@ -74,37 +74,22 @@ object Dedup {
   /** The shingle frame every pair kernel reads, hot shingles (doc
     * frequency above `maxShingleDocFreq`) dropped, pinned once.
     *
-    * Pinned eagerly (r20, the weightedJaccardPairs finding): the
-    * kernels read it from three or four consumers (both pair-join
-    * sides, the size or weight passes), each with a DIFFERENT pruned
-    * column set, so their scan subtrees canonicalize differently and
-    * exchange reuse cannot dedupe them — profiled r20 as a full
-    * shingle-pipeline execution per consumer (3× ~0.4-0.7 s shingle
-    * stages on q_dedup_containment/q_dedup_sources). A lazy persist
-    * does NOT close the hole: AQE materializes the consumer stages
-    * concurrently, so each computes its own copy before any cached
-    * partition completes (measured flat). The eager localCheckpoint
-    * runs the pipeline exactly once, at the plan's own width, and its
-    * blocks are ContextCleaner-managed (CacheLifecycle scaladoc).
+    * Pinned (r20, the weightedJaccardPairs finding): the kernels read
+    * it from three or four consumers (both pair-join sides, the size
+    * or weight passes), each with a DIFFERENT pruned column set, so
+    * their scan subtrees canonicalize differently and exchange reuse
+    * cannot dedupe them — profiled r20 as a full shingle-pipeline
+    * execution per consumer (3× ~0.4-0.7 s shingle stages on
+    * q_dedup_containment/q_dedup_sources).
     */
   private def cappedPinned(
       shingles: DataFrame, maxShingleDocFreq: Option[Int]): DataFrame =
-    pinOnce(maxShingleDocFreq.fold(shingles) { cap =>
+    Par.pin(maxShingleDocFreq.fold(shingles) { cap =>
       val hot = shingles.groupBy(col("shingle"))
         .agg(count(lit(1)).as("df")).filter(col("df") > cap)
         .select("shingle")
       shingles.join(broadcast(hot), Seq("shingle"), "left_anti")
     })
-
-  /** Eager localCheckpoint unless `df` is ALREADY a pinned leaf (a
-    * LogicalRDD from a caller's checkpoint) — re-pinning a pinned
-    * frame copies its blocks for nothing.
-    */
-  private def pinOnce(df: DataFrame): DataFrame =
-    df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => df
-      case _ => df.localCheckpoint(true)
-    }
 
   /** Asymmetric near-SUBSET pairs: containment |A∩B| / min(|A|,|B|)
     * ≥ `minContainment`. Jaccard alone misses the
@@ -236,7 +221,7 @@ object Dedup {
     require(numHashes >= 1 && numHashes <= 512, s"numHashes: $numHashes")
     require(minExactPpm >= 0 && minExactPpm <= 1000000L,
       s"minExactPpm: $minExactPpm")
-    val sh = shingles.localCheckpoint(true)
+    val sh = Par.pin(shingles)
     val exact = withSizes(pairCounts(sh), sizesOf(sh))
       .withColumn("exact_ppm",
         expr("(i * CAST(1000000 AS BIGINT)) div (na + nb - i)"))
@@ -335,18 +320,13 @@ object Dedup {
   def minhashCandidatePairs(
       shingles: DataFrame, bands: Int, rowsPerBand: Int,
       maxBucketSize: Int = 100): DataFrame = {
-    // Three consumers (hot-bucket agg + both self-join sides) —
-    // pinned EAGERLY so the signature pipeline runs exactly once: a
-    // lazy persist does NOT dedupe it, because AQE materializes the
-    // consumer stages concurrently and each computes its own copy
-    // before any cached partition completes (the r20
-    // weightedJaccardPairs finding; profiled here as twin ~900 ms
-    // signatureFold stages on q_dedup_incremental). Checkpoint blocks
-    // are ContextCleaner-managed (CacheLifecycle scaladoc).
+    // three consumers (hot-bucket agg + both self-join sides):
+    // pinned so the signature pipeline runs once (profiled r20 as
+    // twin ~900 ms signatureFold stages on q_dedup_incremental)
     val buckets = minhashBuckets(shingles, bands, rowsPerBand)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val (cool, _) = cooledBuckets(buckets, maxBucketSize)
-    CacheLifecycle.sealAndRelease(bucketPairs(cool), buckets)
+    Par.sealAndRelease(bucketPairs(cool), buckets)
   }
 
   /** The hot-bucket split shared by every banding consumer: `(cool
@@ -387,18 +367,16 @@ object Dedup {
   def minhashCandidateLedger(
       shingles: DataFrame, bands: Int, rowsPerBand: Int,
       maxBucketSize: Int = 100): DataFrame = {
-    // eager pin, not lazy persist: four consumers (ledger count, hot
-    // agg, both pair-join sides) would each run the signature
-    // pipeline under AQE's concurrent stage materialization (see
-    // minhashCandidatePairs note)
+    // pinned: four consumers (ledger count, hot agg, both pair-join
+    // sides) would each run the signature pipeline
     val buckets = minhashBuckets(shingles, bands, rowsPerBand)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val (cool, hot) = cooledBuckets(buckets, maxBucketSize)
     val pairs = bucketPairs(cool)
     val ledger = buckets.agg(count(lit(1)).as("n_bucket_rows"))
       .crossJoin(hot.agg(count(lit(1)).as("n_hot_buckets")))
       .crossJoin(pairs.agg(count(lit(1)).as("n_candidates")))
-    CacheLifecycle.sealAndRelease(ledger, buckets)
+    Par.sealAndRelease(ledger, buckets)
   }
 
   /** MinHash dedup, verified: LSH candidates re-checked with exact
@@ -411,16 +389,12 @@ object Dedup {
       df: DataFrame, idCol: String, tokensCol: String,
       shingleK: Int, bands: Int, rowsPerBand: Int,
       minJaccard: Double): DataFrame = {
-    // The shingle set feeds four consumers (signatures, both sides of
-    // the verification join, sizes); pinned EAGERLY so the shingling
-    // runs once — a lazy persist lets AQE's concurrently materialized
-    // consumer stages each compute their own copy (r20
-    // weightedJaccardPairs finding). Blocks are ContextCleaner-managed
-    // once the sealed result drops the reference.
+    // the shingle set feeds four consumers (signatures, both sides of
+    // the verification join, sizes): pinned so the shingling runs once
     val sh = shingleSets(df, idCol, tokensCol, shingleK)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val cands = minhashCandidatePairs(sh, bands, rowsPerBand)
-    CacheLifecycle.sealAndRelease(
+    Par.sealAndRelease(
       verifiedJaccard(cands, sh).filter(col("jaccard") >= minJaccard), sh)
   }
 
@@ -447,16 +421,14 @@ object Dedup {
       corpus: DataFrame, newIds: DataFrame, idCol: String, tokensCol: String,
       shingleK: Int, bands: Int, rowsPerBand: Int, minJaccard: Double,
       maxBucketSize: Int = 100): DataFrame = {
-    // both pinned EAGERLY (not lazily persisted): sh feeds the bucket
-    // build + three verification consumers, buckets feeds the hot agg
-    // + both cool-join sides — under AQE each lazy-cache consumer
-    // materializes concurrently and recomputes the pipeline (profiled
-    // r20: twin ~900 ms signatureFold stages and twin ~700 ms shingle
-    // stages on q_dedup_incremental)
+    // both pinned: sh feeds the bucket build + three verification
+    // consumers, buckets feeds the hot agg + both cool-join sides
+    // (profiled r20 unpinned: twin ~900 ms signatureFold stages and
+    // twin ~700 ms shingle stages on q_dedup_incremental)
     val sh = shingleSets(corpus, idCol, tokensCol, shingleK)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val buckets = minhashBuckets(sh, bands, rowsPerBand)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val hot = buckets.groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("sz")).filter(col("sz") > maxBucketSize)
       .select(col("band"), col("key"))
@@ -473,7 +445,7 @@ object Dedup {
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
       .distinct()
-    CacheLifecycle.sealAndRelease(
+    Par.sealAndRelease(
       verifiedJaccard(cands, sh).filter(col("jaccard") >= minJaccard),
       sh, buckets)
   }
@@ -513,11 +485,11 @@ object Dedup {
       newIds.select(col(idCol)), Seq(idCol), "left_semi")
     val nb = newBuckets.getOrElse(minhashBuckets(
       shingleSets(newDocs, idCol, tokensCol, shingleK), bands, rowsPerBand))
-    // eager pin (see incrementalMinhashPairs note): hot agg + both
-    // cool-join sides would otherwise recompute the union per consumer
+    // pinned: hot agg + both cool-join sides would otherwise
+    // recompute the union per consumer
     val buckets = store.select(col("id"), col("band"), col("key"))
       .unionByName(nb)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val hot = buckets.groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("sz")).filter(col("sz") > maxBucketSize)
       .select(col("band"), col("key"))
@@ -533,7 +505,7 @@ object Dedup {
       .distinct()
       // pinned: consumed by the candidate-id semi-join below AND as
       // the verify join's left side; batch-bounded by construction
-      .localCheckpoint(true)
+      .transform(Par.pin)
     // Exact-Jaccard verification only ever touches candidate ids, so
     // shingle THE CANDIDATES, not the corpus (r20; previously this
     // re-shingled the ENTIRE corpus per ingest — O(corpus) signature
@@ -545,10 +517,10 @@ object Dedup {
     val sh = shingleSets(
       corpus.join(candIds, Seq(idCol), "left_semi"),
       idCol, tokensCol, shingleK)
-      // eager: three verification consumers (both join sides, sizes)
-      // would re-shingle under a lazy cache (see the pins above)
-      .localCheckpoint(true)
-    CacheLifecycle.sealAndRelease(
+      // pinned: three verification consumers (both join sides,
+      // sizes) would each re-shingle
+      .transform(Par.pin)
+    Par.sealAndRelease(
       verifiedJaccard(cands, sh).filter(col("jaccard") >= minJaccard),
       sh, buckets)
   }
@@ -764,7 +736,7 @@ object Dedup {
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
       .select(col("h"))
-    CacheLifecycle.sealAndRelease(
+    Par.sealAndRelease(
       spans.join(hot, "h").select(col("doc_id"), col("pos"), col("h")), spans)
   }
 
@@ -843,7 +815,7 @@ object Dedup {
       .join(benchSpans, Seq("h"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hits"), min(col("pos")).as("first_pos"))
-    CacheLifecycle.sealAndRelease(result, benchSpans)
+    Par.sealAndRelease(result, benchSpans)
   }
 
   /** Connected components over near-duplicate pairs: every document
@@ -869,7 +841,7 @@ object Dedup {
     *
     * Scale notes: per-round cost is one shuffle join keyed by node
     * id (plus the labels⋈labels hop once halving engages); lineage
-    * is truncated with `localCheckpoint` every few rounds so the
+    * is truncated with a [[Par.pin]] every round so the
     * plan doesn't deepen unboundedly (the classic driver-loop
     * trap); `maxIter` bounds adversarial inputs.
     */
@@ -927,21 +899,18 @@ object Dedup {
     // AQE's small-partition coalescing — same regression. The
     // single-step loop with an unpartitioned cache measures fastest
     // at every tested scale.
-    // eager checkpoint, not persist (r20): cached plans materialize
-    // without AQE partition coalescing, so the edge cache was stored
-    // session-shuffle-width wide and every round's join ran that many
-    // near-empty map tasks; the checkpoint stores at the adaptive
-    // width (wide edges at scale keep their width — see the stepped
-    // checkpoint note below).
+    // pinned, not persisted (r20): the persisted edge cache was
+    // stored session-shuffle-width wide and every round's join ran
+    // that many near-empty map tasks
     val edges = pairs
       .select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
       .union(pairs
         .select(col(idB).cast("long").as("src"), col(idA).cast("long").as("dst")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Par.pin)
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     // explicit broadcast of the node-sized frames when the node count
     // fits the §3.1 envelope (the PageRank.run note): AQE's runtime
     // BHJ conversion executes the EDGE side's shuffle map stage every
@@ -982,20 +951,11 @@ object Dedup {
           .select(col("id"), col("__old"),
             least(col("label"), coalesce(col("__ll"), col("label")))
               .as("label"))
-      // localCheckpoint EVERY round (r20, measured): a plain persist
-      // materializes the CACHED plan, and cached plans skip AQE
-      // partition coalescing by default
-      // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning) —
-      // so every round's labels were stored at the FULL session
-      // shuffle width and each subsequent round ran
-      // shuffle-partition-many near-empty tasks per stage (the
-      // profiled q_dbscan CC loop: dozens of 32-task stages over
-      // ~0.06 MB). The eager checkpoint materializes the ADAPTIVE
-      // plan, so tiny rounds store at AQE's byte-coalesced width and
-      // a 100-TB round keeps its full width — scale-adaptive by
-      // construction, identical label dynamics and round count
-      // (DedupGroupsSpec pins exact rounds against the closed form).
-      val stepped = next.localCheckpoint(true)
+      // pinned EVERY round (r20, measured): with a persist instead,
+      // the profiled q_dbscan CC loop ran dozens of 32-task stages
+      // over ~0.06 MB; identical label dynamics and round count
+      // (DedupGroupsSpec pins exact rounds against the closed form)
+      val stepped = Par.pin(next)
       changed = stepped.filter(col("label") =!= col("__old")).count()
       labels = stepped.select(col("id"), col("label"))
       iter += 1
@@ -1038,16 +998,14 @@ object Dedup {
       maxHamming: Int, maxBucketSize: Int = 1000): DataFrame = {
     val hashed = df.select(col(idCol).as("id"),
       simhash64(col(tokensCol)).as("simhash"))
-    // Three consumers (hot-bucket agg + both self-join sides) —
-    // pinned eagerly so the per-row simhash kernel runs once (a lazy
-    // persist recomputes it per concurrently-materialized consumer
-    // stage; see the minhashCandidatePairs note).
+    // three consumers (hot-bucket agg + both self-join sides):
+    // pinned so the per-row simhash kernel runs once
     val banded = hashed.select(col("id"), col("simhash"),
       posexplode(array((0 until 4).map { b =>
         shiftright(col("simhash"), b * 16).bitwiseAND(lit(0xFFFFL))
       }: _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val hot = banded.groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("sz")).filter(col("sz") > maxBucketSize)
       .select(col("band"), col("key"))
@@ -1061,6 +1019,6 @@ object Dedup {
           col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-    CacheLifecycle.sealAndRelease(pairs, banded)
+    Par.sealAndRelease(pairs, banded)
   }
 }

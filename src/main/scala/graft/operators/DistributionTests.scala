@@ -393,7 +393,7 @@ object DistributionTests {
       .where(col(sampleCol).isNotNull && col(valueCol).isNotNull)
       .select(col(groupCol), col(sampleCol).as("__s"),
         col(valueCol).cast("long").as("__x"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val pooled = base.groupBy(col(groupCol), col("__x"))
       .agg(count(lit(1)).as("__l"))
       .withColumn("__c", sum(col("__l")).over(
@@ -445,7 +445,7 @@ object DistributionTests {
       // group-count-sized; pinned against sort-sampling re-execution
       // of the pooled/per-sample window grid (the energyDistance
       // note — measured r20: q_ad_test's grid ran twice, 1.1 + 0.7 s)
-      .localCheckpoint(true)
+      .transform(Par.pin)
   }
 
   /** Stuart-Maxwell test of marginal homogeneity for THREE paired
@@ -1224,6 +1224,6 @@ object DistributionTests {
       // re-execute the O(N log N) window chain through its
       // range-partitioner sampling pass (the theilSen note — measured
       // r20: the q_energy_test window stage ran twice, 1.7 s + 0.8 s)
-      .localCheckpoint(true)
+      .transform(Par.pin)
   }
 }

@@ -54,12 +54,12 @@ object FeatureSelection {
       .agg(count(lit(1)).as("__nc"))
     // ONE corpus-sized pass: (term, class) doc counts — the presence
     // frame is already distinct on (doc, class, term), so a plain
-    // count is the distinct-doc count. Pinned eagerly (vocab × classes
+    // count is the distinct-doc count. Pinned (vocab × classes
     // rows) because two consumers derive from it and Catalyst would
     // otherwise replay the corpus distinct per consumer.
     val byTermClass = presence.groupBy(col("__w"), col("__c"))
       .agg(count(lit(1)).as("__ntc"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     // Classes partition documents, so per-term doc counts are the
     // class-sums — no second pass over the corpus.
     val byTerm = byTermClass.groupBy(col("__w"))

@@ -84,7 +84,7 @@ object GlobalIds {
 
     val local = Window.partitionBy(col("__pid")).orderBy(keys.map(col): _*)
     val numbered = ranged.withColumn("__rn", row_number().over(local))
-      .localCheckpoint(true)
+      .transform(Par.pin)
 
     // Partition counts -> exclusive prefix sum. #partitions rows: the
     // window here runs over a metadata-sized frame, not the data.

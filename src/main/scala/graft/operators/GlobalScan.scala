@@ -83,7 +83,7 @@ object GlobalScan {
       case (d, ((valueCol, _), i)) =>
         d.withColumn(s"__lps$i",
           coalesce(sum(col(valueCol)).over(local), lit(0L)))
-    }.localCheckpoint(true)
+    }.transform(Par.pin)
 
     // #partitions rows: metadata-sized window, not the data.
     val totals = sums.zipWithIndex.map { case ((valueCol, _), i) =>

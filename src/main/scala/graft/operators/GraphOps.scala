@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * spread probe). Both are rounds of node-keyed joins and
   * aggregations: the graph is partitioned by node id throughout, no
   * round ever materializes more than the current edge set, and
-  * lineage is truncated per round with an edge-sized localCheckpoint
+  * lineage is truncated per round with an edge-sized [[Par.pin]]
   * (the [[Dedup]] label-propagation discipline — without it Catalyst
   * replans round i as a replay of rounds 1..i−1).
   */
@@ -23,7 +23,7 @@ object GraphOps {
       .select(least(col(srcCol), col(dstCol)).as("__u"),
         greatest(col(srcCol), col(dstCol)).as("__v"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Par.pin)
 
   /** Vertices surviving `rounds` peels at threshold `k`, with their
     * residual degree — the classic k-core peel (Seidman 1983)
@@ -57,7 +57,7 @@ object GraphOps {
       e = e
         .join(keep.withColumnRenamed("__n", "__u"), Seq("__u"), "left_semi")
         .join(keep.withColumnRenamed("__n", "__v"), Seq("__v"), "left_semi")
-        .localCheckpoint(true)
+        .transform(Par.pin)
       r += 1
     }
     e.select(explode(array(col("__u"), col("__v"))).as("id"))
@@ -89,7 +89,7 @@ object GraphOps {
     var visited = seeds
       .select(col(seedCol).as("id")).where(col("id").isNotNull).distinct()
       .withColumn("hop", lit(0))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     var frontier = visited
     var h = 1
     while (h <= maxHops) {
@@ -99,8 +99,8 @@ object GraphOps {
         .distinct()
         .join(visited.select(col("id")), Seq("id"), "left_anti")
         .withColumn("hop", lit(h))
-        .localCheckpoint(true)
-      visited = visited.union(next).localCheckpoint(true)
+        .transform(Par.pin)
+      visited = visited.union(next).transform(Par.pin)
       frontier = next
       h += 1
     }

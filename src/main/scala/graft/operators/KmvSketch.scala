@@ -64,7 +64,7 @@ object KmvSketch {
     val w = Window.partitionBy(col("__g")).orderBy(col("__h"))
     val sk = hashes.withColumn("__r", row_number().over(w))
       .filter(col("__r") <= k)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     def estOf(m: Column, hk: Column): Column =
       when(m < k, m)
         .otherwise(expr(

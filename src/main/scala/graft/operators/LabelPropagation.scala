@@ -62,15 +62,11 @@ object LabelPropagation {
       emb: DataFrame, idCol: String, vecCol: String, labelCol: String,
       seedPred: org.apache.spark.sql.Column, k: Int, iters: Int): DataFrame = {
     Reserved.check("emb" -> emb)
-    // eager checkpoints, not per-round persist+count (r20, the ccLoop
-    // lesson): a cached plan materializes WITHOUT AQE partition
-    // coalescing, so every round's small label frame was stored at
-    // the session shuffle width and each subsequent round ran that
-    // many near-empty tasks per stage; the checkpoint stores at the
-    // adaptive width (a production-scale frame keeps its width) and
-    // its blocks are ContextCleaner-managed — no unpersist dance.
+    // pinned, not per-round persist+count (r20, the ccLoop lesson):
+    // the persisted label frames made each round run
+    // session-shuffle-width many near-empty tasks per stage
     val edges = knnEdges(emb, idCol, vecCol, k)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val ids = emb.select(col(idCol).as("id"))
     var labels = emb.filter(seedPred)
       .select(col(idCol).as("id"), col(labelCol).as("label"),
@@ -90,11 +86,11 @@ object LabelPropagation {
           lit(s"iter$t").as("origin"))
         .join(labels.select(col("id")), Seq("id"), "left_anti")
       labels = labels.unionByName(winners)
-        .localCheckpoint(true) // bound lineage, free votes, adaptive width
+        .transform(Par.pin) // bound lineage, free votes, adaptive width
     }
     ids.join(labels, Seq("id"), "left")
       .select(col("id"), col("label"),
         coalesce(col("origin"), lit("none")).as("origin"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
   }
 }

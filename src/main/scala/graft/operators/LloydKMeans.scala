@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
   * centroid table against the exploded (id, dim, xm) corpus with a
   * map-side-combined (id, cell) distance aggregate, one argmin
   * aggregate, one (cell, dim) mean aggregate — no windows over the
-  * corpus, no corpus² joins; the centroid table is localCheckpointed
-  * per iteration so the plan never grows with T. The exploded corpus
-  * is persisted once and reused by all iterations.
+  * corpus, no corpus² joins; the centroid table is pinned
+  * ([[Par.pin]]) per iteration so the plan never grows with T. The
+  * exploded corpus is pinned once and reused by all iterations.
   *
   * Output: (cluster, size, cost_micro2) — per final cluster, member
   * count and exact integer Σ distance² in micro² units, the
@@ -50,21 +50,16 @@ object LloydKMeans {
       .select(col("__id"), col("__i"),
         round(col("__x").cast("double") * lit(1e6)).cast("long")
           .as("__xm"))
-      // eager pin, not lazy persist (r20): each iteration reads this
-      // frame from TWO stages (assignment + the centroid update's
-      // join), which materialize concurrently under AQE and would
-      // each compute their own copy; a cached plan also stores at
-      // the session shuffle width (no AQE coalescing), inflating
-      // every iteration's task count. Checkpoint blocks free via
-      // ContextCleaner when the returned frame drops them.
-      .localCheckpoint(true)
+      // pinned (r20): each iteration reads this frame from TWO
+      // stages (assignment + the centroid update's join)
+      .transform(Par.pin)
     locally {
       val init = dims
         .join(broadcast(
           emb.select(col(idCol).cast("long").as("__id"))
             .orderBy(col("__id")).limit(k)), "__id")
         .select(col("__id").as("cell"), col("__i"), col("__xm").as("__cm"))
-      var cent = init.localCheckpoint(true)
+      var cent = Par.pin(init)
 
       def assignTo(c: DataFrame): DataFrame = dims
         .join(broadcast(c), "__i")
@@ -86,7 +81,7 @@ object LloydKMeans {
         cent = cent.join(updated, Seq("cell", "__i"), "left")
           .select(col("cell"), col("__i"),
             coalesce(col("__cm2"), col("__cm")).as("__cm"))
-          .localCheckpoint(true)
+          .transform(Par.pin)
       }
 
       assignTo(cent)
@@ -97,7 +92,7 @@ object LloydKMeans {
           col("cost_micro2"))
         // the final aggregate is cluster-sized; materialize so the
         // exploded-corpus checkpoint blocks can be GC-reclaimed
-        .localCheckpoint(true)
+        .transform(Par.pin)
     }
   }
 }

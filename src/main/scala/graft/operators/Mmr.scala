@@ -62,8 +62,8 @@ object Mmr {
             (col("rel_nano") - col("__lo")).cast("double") * lit(1e6) /
               (col("__hi") - col("__lo")).cast("double")).cast("long"))
           .as("rel_micro"))
-      .localCheckpoint() // candidates are bounded; pin them — every
-                         // stage below reuses this frame
+      .transform(Par.pin) // candidates are bounded; pin them — every
+                          // stage below reuses this frame
 
     // pairwise candidate Jaccard, relationally: distinct (doc, token)
     // restricted to candidate docs, |∩| by token join, |∪| by
@@ -73,7 +73,7 @@ object Mmr {
       .join(candDocs, "doc_id")
       .select(col("doc_id"), explode(col("tokens")).as("tok"))
       .distinct()
-      .localCheckpoint()
+      .transform(Par.pin)
     val sizes = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val inter = toks.as("a")
       .join(toks.as("b"), col("a.tok") === col("b.tok"))
@@ -90,7 +90,7 @@ object Mmr {
     // symmetrize; pairs with empty intersection are absent (Jaccard 0)
     val sims = simHalf.unionByName(
       simHalf.select(col("d2").as("d1"), col("d1").as("d2"),
-        col("sim_micro"))).localCheckpoint()
+        col("sim_micro"))).transform(Par.pin)
 
     // greedy unroll: k stages of (remaining ⟕ sims-to-selected) → argmax
     def argmax(scored: DataFrame): DataFrame = scored

@@ -71,9 +71,9 @@ object ModalAlign {
       else Similarity.derivedNlist(union.select(col(idCol)).count())
     val centDf = Similarity.sampledCodebook(union, idCol, vecCol, nl)
     val la = Similarity.assignCellsTo(left, idCol, vecCol, centDf)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val ra = Similarity.assignCellsTo(right, idCol, vecCol, centDf)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val scored = la
       .select(col("cell"), col("id").as("left_id"), col("cv").as("lv"))
       .join(ra.select(col("cell"), col("id").as("right_id"),
@@ -81,7 +81,7 @@ object ModalAlign {
       .select(col("left_id"), col("right_id"),
         round(graft.functions.VectorFunctions
           .cosine(col("lv"), col("rv")), 6).as("cosine"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val l2r = Similarity.topKPerQuery(
         scored.select(col("left_id").as("query_id"),
           col("right_id").as("neighbor_id"), col("cosine")), 1)

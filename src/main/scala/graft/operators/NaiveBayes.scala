@@ -71,11 +71,11 @@ object NaiveBayes {
       explode(split(col(textCol), " ", -1)).as("term"))
 
     // One corpus pass; every derived frame below is vocab-sized.
-    // Pinned eagerly so the class totals, vocab size, and term rows
+    // Pinned so the class totals, vocab size, and term rows
     // don't each replan a corpus scan (the UnigramLM pattern).
     val cnt = toks.groupBy(col("label"), col("term"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
 
     val totC = cnt.groupBy(col("label")).agg(sum(col("cnt")).as("tot"))
     val vocab = cnt.agg(countDistinct(col("term")).as("v"))
@@ -87,7 +87,7 @@ object NaiveBayes {
     // used to pay for one number is gone.
     val nDocs = train.groupBy(col(labelCol).as("label"))
       .agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val n = nDocs.agg(sum(col("n_docs")).as("n"))
 
     val classes = nDocs

@@ -70,7 +70,7 @@ object NonParametric {
     val rows = df.select(col(groupCol).as("__g"),
       col(idxCol).cast("long").as("__i"),
       col(valueCol).cast("long").as("__x"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val oversized = rows.groupBy(col("__g"))
       .agg(count(lit(1)).as("__n"), countDistinct(col("__i")).as("__d"),
         sum(when(col("__i").isNull || col("__x").isNull, 1L)
@@ -177,7 +177,7 @@ object NonParametric {
       col(seasonCol).as("__season"),
       col(idxCol).cast("long").as("__i"),
       col(valueCol).cast("long").as("__x"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val oversized = rows.groupBy(col("__g"), col("__season"))
       .agg(count(lit(1)).as("__n"), countDistinct(col("__i")).as("__d"),
         sum(when(col("__i").isNull || col("__x").isNull, 1L)
@@ -227,7 +227,7 @@ object NonParametric {
     val rows = df.select(col(groupCol).as("__g"), treatCol.as("__t"),
       col(valueCol).cast("long").as("__x"))
       .filter(col("__t").isNotNull)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val oversized = rows.groupBy(col("__g"), col("__t"))
       .agg(count(lit(1)).as("__n"),
         sum(when(col("__x").isNull, 1L).otherwise(0L)).as("__nulls"))
@@ -733,7 +733,7 @@ object NonParametric {
     val rows = df.select(col(partCol).as("__p"),
       col(ordCol).cast("long").as("__o"),
       col(valueCol).cast("long").as("__x"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val oversized = rows.groupBy(col("__p"))
       .agg(count(lit(1)).as("__n"),
         sum(when(col("__o").isNull || col("__x").isNull, 1L)
@@ -1239,7 +1239,7 @@ object NonParametric {
     val rows = df.select(col(groupCol).as("__g"), treatCol.as("__t"),
       col(valueCol).cast("long").as("__x"))
       .filter(col("__t").isNotNull && col("__x").isNotNull)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val oversized = rows.groupBy(col("__g"), col("__t"))
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > maxGroupRows)
@@ -1311,7 +1311,7 @@ object NonParametric {
     Reserved.check("input" -> df)
     val rows = df.select(col(idCol).as("__id"),
       col(zMicroCol).cast("long").as("__z"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val bad = rows.agg(count(lit(1)).as("__n"),
       sum(when(col("__z").isNull, 1L).otherwise(0L)).as("__nulls"))
       .filter(col("__n") > maxTests || col("__nulls") > 0)

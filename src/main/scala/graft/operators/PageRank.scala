@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * Per iteration: one shuffle of the edge list on `src` (join ranks),
   * one aggregation shuffle on `dst` — the textbook distributed PR
-  * shape. Edges and degrees are persisted once and reused; the rank
-  * frame is eagerly localCheckpoint'ed every third iteration so
+  * shape. Edges and degrees are pinned once and reused; the rank
+  * frame is pinned ([[Par.pin]]) every third iteration so
   * lineage stays O(1) instead of O(iterations) (the
   * connectedComponents lesson) WITHOUT paying a blocking
   * materialization job per step — between checkpoints the plan
@@ -46,24 +46,20 @@ object PageRank {
       iterations: Int = 10): DataFrame = {
     require(iterations >= 1 && iterations <= 100,
       s"iterations must be in [1,100]: $iterations")
-    // eager checkpoint, not persist (r20, the ccLoop lesson): a
-    // cached plan materializes WITHOUT AQE partition coalescing, so
-    // a small edge list was stored session-shuffle-width wide and
-    // every one of the 10 iterations ran that many near-empty tasks
-    // per stage; the checkpoint stores at the adaptive width (a
-    // production-scale edge list keeps its width). Checkpoint blocks
-    // are ContextCleaner-managed once `out` drops the reference.
+    // pinned, not persisted (r20, the ccLoop lesson): the persisted
+    // edge list made every one of the 10 iterations run
+    // session-shuffle-width many near-empty tasks per stage
     val e = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .localCheckpoint(eager = true)
+      .transform(Par.pin)
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .distinct()
-      .localCheckpoint(eager = true)
+      .transform(Par.pin)
     val deg = e.groupBy(col("src"))
       .agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = true)
+      .transform(Par.pin)
     val n = nodes.count()
     val init = Mass / n
     val base = (Mass * 15L / 100L) / n
@@ -90,11 +86,11 @@ object PageRank {
         .select(col("id"),
           (lit(base) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("rank"))
       // truncate lineage every 3rd step (and on the last, so callers
-      // never inherit a multi-iteration plan) — each eager checkpoint
+      // never inherit a multi-iteration plan) — each pin
       // is a blocking job, and per-step checkpoints made overhead,
       // not compute, the cost floor at small graph sizes
       if (i % 3 == 0 || i == iterations)
-        ranks = ranks.localCheckpoint(eager = true)
+        ranks = Par.pin(ranks)
     }
     ranks
   }

@@ -110,7 +110,7 @@ object RankCorrelation {
     }
     val rows = df.select(col(groupCol).as("__g"),
       col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val oversized = rows.groupBy(col("__g"))
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > maxGroupRows)

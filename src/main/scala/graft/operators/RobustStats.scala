@@ -173,7 +173,7 @@ object RobustStats {
     val rows = Par.widen(
       df.select(col(groupCol).as("__g"), col(idCol).as("__id"),
         col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
-        .localCheckpoint(true))
+        .transform(Par.pin))
     val oversized = rows.groupBy(col("__g"))
       .agg(count(lit(1)).as("__n")).filter(col("__n") > maxGroupRows)
       .limit(1).collect()
@@ -220,7 +220,7 @@ object RobustStats {
       // sort cannot re-execute the O(n²/group) slope windows through
       // its range-partitioner sampling pass (measured: the full
       // 65 MB window chain ran twice per query before this)
-      .localCheckpoint(true)
+      .transform(Par.pin)
   }
 
   /** Exact WEIGHTED quantiles per group — "the median document by

@@ -148,7 +148,7 @@ object Similarity {
       else derivedNlist(
         corpus.select(col(idCol)).count(), targetCellRows)
     val assigned = assignCellsSampledCodebook(corpus, idCol, vecCol, nl)
-      .localCheckpoint(true)
+      .transform(Par.pin)
     rankCosine(
       assigned
         .select(col("cell"), col("id").as("query_id"), col("cv").as("qv"))
@@ -248,10 +248,17 @@ object Similarity {
   def sampledCodebook(
       corpus: DataFrame, idCol: String, vecCol: String, nlist: Int)
       : DataFrame =
-    broadcast(
-      corpus.select(col(idCol).cast("long").as("cell"),
-          col(vecCol).as("centroid"))
-        .orderBy(col("cell")).limit(nlist))
+    broadcast(codebookRows(corpus, idCol, vecCol, nlist))
+
+  /** [[sampledCodebook]] without its broadcast hint, for writing: a
+    * hint outside a join logs Spark's HintErrorLogger warning.
+    */
+  private def codebookRows(
+      corpus: DataFrame, idCol: String, vecCol: String, nlist: Int)
+      : DataFrame =
+    corpus.select(col(idCol).cast("long").as("cell"),
+        col(vecCol).as("centroid"))
+      .orderBy(col("cell")).limit(nlist)
 
   /** Nearest-centroid cell assignment against the deterministic
     * sampled codebook: (id, cell, vec) per corpus row. Ties go to the
@@ -478,7 +485,7 @@ object Similarity {
   def writeIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, dir: String): Unit = {
-    sampledCodebook(corpus, idCol, vecCol, nlist)
+    codebookRows(corpus, idCol, vecCol, nlist)
       .write.mode("overwrite").parquet(s"$dir/codebook")
     assignCellsSampledCodebook(corpus, idCol, vecCol, nlist)
       .write.mode("overwrite").parquet(s"$dir/assignments")
@@ -651,7 +658,7 @@ object Similarity {
     // ~25% behind the cache (2.88 vs 2.23 s matched benches — the
     // wider layout weakens the distinct's map-side collapse, 43→67 MB
     // shuffled). The tiny top-N result is sealed eagerly and the
-    // probe cache released before returning (CacheLifecycle).
+    // probe cache released before returning (Par.sealAndRelease).
     val probed = probeCells(base, "id", "v", centDf, nprobe)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val top = probed
@@ -664,7 +671,7 @@ object Similarity {
       .distinct() // a pair may share several probe cells
       .orderBy(desc("cosine"), asc("id_a"), asc("id_b"))
       .limit(topN)
-    graft.operators.CacheLifecycle.sealAndRelease(top, probed)
+    Par.sealAndRelease(top, probed)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023):
@@ -705,16 +712,14 @@ object Similarity {
       else derivedNlist(df.select(col(idCol)).count())
     val centDf = sampledCodebook(df, idCol, vecCol, nl)
     // (id, cell, cv, csim): assignment + cosine to the OWN centroid.
-    // Three consumers (both self-join sides + the final verdict join)
-    // — pinned eagerly so assignment runs once (a lazy persist
-    // recomputes it per concurrently-materialized consumer stage;
-    // the r20 minhash finding).
+    // three consumers (both self-join sides + the final verdict
+    // join): pinned so assignment runs once
     val assigned = assignCellsSampledCodebook(df, idCol, vecCol, nl)
       .join(broadcast(centDf), Seq("cell"))
       .withColumn("csim",
         round(VectorFunctions.cosine(col("cv"), col("centroid")), 6))
       .select(col("id"), col("cell"), col("cv"), col("csim"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val pairs = assigned
       .select(col("cell"), col("id").as("id_a"), col("cv").as("va"),
         col("csim").as("ca"))
@@ -735,6 +740,6 @@ object Similarity {
       .select(col("id"), col("cell"), col("csim"),
         coalesce(col("__hit"), lit(false)).as("dropped"))
       .orderBy(col("id"))
-    CacheLifecycle.sealAndRelease(out, assigned)
+    Par.sealAndRelease(out, assigned)
   }
 }

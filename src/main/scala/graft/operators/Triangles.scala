@@ -30,13 +30,12 @@ object Triangles {
   def enumerate(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     enumerateCanonical(canonicalEdges(edges, srcCol, dstCol))
 
-  /** Canonical undirected edge set `(__u < __v)`, deduped, pinned
-    * eagerly: the edge set feeds the degree aggregation AND the
-    * orientation join, and Catalyst plans each consumer as its own
-    * full upstream recompute (for a kNN input that means re-scoring
-    * the whole similarity graph per reference). The edge-sized
-    * localCheckpoint (executor-local blocks, ContextCleaner-managed —
-    * see CacheLifecycle) caps the input pipeline at ONE execution.
+  /** Canonical undirected edge set `(__u < __v)`, deduped, pinned:
+    * the edge set feeds the degree aggregation AND the orientation
+    * join, and Catalyst plans each consumer as its own full upstream
+    * recompute (for a kNN input that means re-scoring the whole
+    * similarity graph per reference). The edge-sized [[Par.pin]] caps
+    * the input pipeline at ONE execution.
     * Shared by [[enumerate]] / [[clusteringCoefficient]] /
     * [[degreeAssortativity]] so composite graph metrics evaluate the
     * (possibly expensive) edge input exactly once.
@@ -50,7 +49,7 @@ object Triangles {
       .select(least(col(srcCol), col(dstCol)).as("__u"),
         greatest(col(srcCol), col(dstCol)).as("__v"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Par.pin)
   }
 
   private def enumerateCanonical(e: DataFrame): DataFrame = {
@@ -70,7 +69,7 @@ object Triangles {
         when(uFirst, col("__u")).otherwise(col("__v")).as("__s"),
         when(uFirst, col("__v")).otherwise(col("__u")).as("__t"),
         when(uFirst, col("__dv")).otherwise(col("__du")).as("__dt"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
 
     // Wedges (s; t1, t2) with (d(t1), t1) < (d(t2), t2): the closing
     // edge, if present, is oriented exactly t1 → t2, so one equi-join

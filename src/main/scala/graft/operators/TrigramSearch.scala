@@ -78,7 +78,7 @@ object TrigramSearch {
     val idx = Par.widenBy(
       index(docs, idCol, textCol)
         .select(col(idCol).as("__d"), col("trigram").as("__t"))
-        .localCheckpoint(true),
+        .transform(Par.pin),
       col("__d"))
     val hot = idx.groupBy(col("__t")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxDocFreq)

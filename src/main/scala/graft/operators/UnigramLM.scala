@@ -45,14 +45,12 @@ object UnigramLM {
     maxVocab.foreach(n => require(n > 0, s"maxVocab: $n"))
 
     val toks = docs.select(col(idCol), explode(split(col(textCol), " ", -1)).as("word"))
-    // Pinned eagerly: total, the vocab cap, and the model all derive
-    // from the counts, and Catalyst plans each branch as its own
-    // corpus scan + re-aggregation. Checkpointing the VOCAB-sized
-    // frame (executor-local blocks, ContextCleaner-managed — see
-    // CacheLifecycle) caps the operator at two corpus passes: one to
-    // fit the model, one to score against it.
+    // Pinned: total, the vocab cap, and the model all derive from the
+    // counts, and Catalyst plans each branch as its own corpus scan +
+    // re-aggregation. Pinning the VOCAB-sized frame caps the operator
+    // at two corpus passes: one to fit the model, one to score.
     val counts = toks.groupBy("word").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     // Total stays the FULL corpus mass even when the vocab is capped,
     // so capping changes only which words take the OOV floor, not the
     // probabilities of the words that survive.
@@ -111,7 +109,7 @@ object UnigramLM {
       .select(col(groupCol).as("g"),
         explode(split(col(textCol), " ", -1)).as("w"))
       .groupBy(col("g"), col("w")).agg(count(lit(1)).as("cgw"))
-      .localCheckpoint(true)
+      .transform(Par.pin)
     val cw = cg.groupBy(col("w")).agg(sum(col("cgw")).as("cw"))
     val tg = cg.groupBy(col("g")).agg(sum(col("cgw")).as("tg"))
     val tot = cg.agg(sum(col("cgw")).as("t"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.multimodal.Multimodal
-import graft.operators.{AsOfJoin, RangeJoin}
+import graft.operators.{AsOfJoin, Par, RangeJoin}
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -334,8 +334,7 @@ private[queries] object EventStreamQueries {
     // VERDICT r18 #3 closed the per-rep leak).
     QueryDef(
       "q_stream_dedup_ingest",
-      (s, dir) => graft.operators.CacheLifecycle
-          .withTempStore("graft_ingest_q") { root =>
+      (s, dir) => Par.withTempStore("graft_ingest_q") { root =>
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), split(col("text"), " ").as("tokens"))
         val in = s"$root/in"

@@ -3,7 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.QueryDef.sqlList
 import graft.functions.{TextAnalysis, TextFunctions}
-import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
+import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, Par, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -157,7 +157,7 @@ private[queries] object ExtensionAnnQueries {
         Bm25.scoreTopK(
             graft.operators.Par.widenBy(
               Bm25.postings(docs, "doc_id", "tokens")
-                .localCheckpoint(true),
+                .transform(Par.pin),
               col("doc_id")),
             Bm25.totals(docs, "doc_id", "tokens"),
             queryTerms, k = 10)
@@ -241,7 +241,7 @@ private[queries] object ExtensionAnnQueries {
         // collapse intact (the q_rbo diagnosis) while parallelizing
         // the scoring map exactly as the r19 widen did
         val index = graft.operators.Par.widenBy(
-          Bm25.postings(docs, "doc_id", "tokens").localCheckpoint(true),
+          Bm25.postings(docs, "doc_id", "tokens").transform(Par.pin),
           col("doc_id"))
         val totals = Bm25.totals(docs, "doc_id", "tokens")
         val q0 = retrievalQueryTerms(docs)

@@ -3,7 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.QueryDef.sqlList
 import graft.functions.{TextAnalysis, TextFunctions}
-import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
+import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, Par, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1558,14 +1558,14 @@ private[queries] object ExtensionCurationQueries {
           .orderBy(col("df").desc, col("term"))
           .limit(200)
         // 200 rows: the empty-partition-spec window is bounded here.
-        // Pinned eagerly — ids feeds the token join AND the final
+        // Pinned — ids feeds the token join AND the final
         // name join, and PageRank already runs jobs at build time, so
         // the checkpoint costs nothing extra and saves two replays of
         // the vocabulary aggregation.
         val ids = vocab.select(col("term"),
           row_number().over(Window.orderBy(col("term"))).cast("long")
             .as("id"))
-          .localCheckpoint(true)
+          .transform(Par.pin)
         // pinned (r20, profiled): vt feeds BOTH sides of BOTH
         // distance joins (4 references), and the posexplode+join
         // subtree ran three times (triple identical 3 MB exchange
@@ -1574,7 +1574,7 @@ private[queries] object ExtensionCurationQueries {
         // deployment.
         val vt = toks.join(broadcast(ids), "term")
           .select(col("doc_id"), col("pos"), col("id"))
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val und = Seq(1, 2).map { d =>
           vt.select(col("doc_id"), col("pos"), col("id").as("src"))
             .join(vt.select(col("doc_id"), (col("pos") - lit(d)).as("pos"),
@@ -1582,7 +1582,7 @@ private[queries] object ExtensionCurationQueries {
             .select(col("src"), col("dst"))
         }.reduce(_ union _).filter(col("src") =!= col("dst"))
           // pinned: referenced twice by the symmetrizing union
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val edges = und
           .union(und.select(col("dst").as("src"), col("src").as("dst")))
           .distinct()

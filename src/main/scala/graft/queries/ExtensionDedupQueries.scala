@@ -3,7 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.QueryDef.sqlList
 import graft.functions.{TextAnalysis, TextFunctions}
-import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
+import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, Par, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -278,13 +278,13 @@ private[queries] object ExtensionDedupQueries {
         // its whole shingle self-join ran twice (duplicate 9.4 MB
         // stages in the r20 profile). Group-membership-sized.
         val pairs = Dedup.jaccardPairs(sh, 0.8)
-          .select(col("id_a"), col("id_b")).localCheckpoint(true)
+          .select(col("id_a"), col("id_b")).transform(Par.pin)
         // pinned: three consumers below (census + both cross-split
         // joins) would re-run the label join per consumer; a split
         // assignment is materialized once in any deployment anyway
         val assigned = Dedup.leakageSafeSplit(
           Tables.documents(s, dir), "doc_id", pairs, trainPermille = 800)
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val census = assigned.groupBy(col("split"))
           .agg(count(lit(1)).as("n_docs"),
             countDistinct(col("unit")).as("n_units"),
@@ -350,8 +350,7 @@ private[queries] object ExtensionDedupQueries {
     // the store's pair set equals the exact list at this margin.
     QueryDef(
       "q_leakage_split_incremental",
-      (s, dir) => graft.operators.CacheLifecycle
-          .withTempStore("graft_leak_inc") { root =>
+      (s, dir) => Par.withTempStore("graft_leak_inc") { root =>
         val docs = Tables.documents(s, dir)
         val toks = docs
           .select(col("doc_id"), split(col("text"), " ").as("tokens"))
@@ -370,7 +369,7 @@ private[queries] object ExtensionDedupQueries {
         // pinned like q_leakage_safe_split's: three consumers below
         val assigned = Dedup.leakageSafeSplitFromStore(
           docs, "doc_id", s"$root/pairs", trainPermille = 800)
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val pairs = s.read.parquet(s"$root/pairs")
           .select(col("id_a"), col("id_b"))
         val census = assigned.groupBy(col("split"))
@@ -649,11 +648,10 @@ private[queries] object ExtensionDedupQueries {
       "q_dedup_minhash_scale",
       (s, dir) => {
         val toks = ExtensionQueries.dedupScaleTokens(s, dir)
-        // eager pin (r20): verifiedJaccard reads sh from three
-        // concurrently-materialized stages — a lazy persist let each
-        // re-shingle the scale corpus (the minhash operator finding)
+        // pinned (r20): verifiedJaccard reads sh from three stages,
+        // which each re-shingled the scale corpus
         val sh = Dedup.shingleSets(toks, "doc_id", "tokens", 3)
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val nDocs = toks.count()
         // sealed (localCheckpointed) by the operator, so count() +
         // the verification join below reuse one materialization
@@ -669,7 +667,7 @@ private[queries] object ExtensionDedupQueries {
             lit(nDocs * (nDocs - 1L) / 2L).as("all_pairs"),
             col("n_pairs"), col("pair_checksum"),
             lit(nCand <= budget).as("cand_linear_ok"))
-        graft.operators.CacheLifecycle.sealAndRelease(out, sh)
+        Par.sealAndRelease(out, sh)
       },
       Some(s"""
         WITH expanded AS (

@@ -519,8 +519,7 @@ private[queries] object ExtensionGovernanceQueries {
     // scores are integer-lattice (see StreamingOps.classifiedDocStream).
     QueryDef(
       "q_stream_classify",
-      (s, dir) => graft.operators.CacheLifecycle
-          .withTempStore("graft_stream_nb") { out =>
+      (s, dir) => graft.operators.Par.withTempStore("graft_stream_nb") { out =>
         val docs = Tables.documents(s, dir)
         val model = graft.operators.NaiveBayes.fit(
           docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0), "text", "lang")
@@ -1012,8 +1011,7 @@ private[queries] object ExtensionGovernanceQueries {
     // (FormatRoundtrip scaladoc).
     QueryDef(
       "q_format_roundtrip",
-      (s, dir) => graft.operators.CacheLifecycle
-          .withTempStore("graft_fmt_rt") { base =>
+      (s, dir) => graft.operators.Par.withTempStore("graft_fmt_rt") { base =>
         graft.sources.FormatRoundtrip.roundtripFingerprints(
             s, Tables.documents(s, dir), base,
             Seq("doc_id", "text", "lang", "source", "n_chars"))

@@ -3,7 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.QueryDef.sqlList
 import graft.functions.{TextAnalysis, TextFunctions}
-import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
+import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, Par, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -139,7 +139,7 @@ private[queries] object ExtensionGraphStatsQueries {
         // contrib map parallelizes (profiled 2.8 s + 1.8 s
         // single-task over the 1-partition pin before this)
         val index = graft.operators.Par.widenBy(
-          Bm25.postings(docs, "doc_id", "tokens").localCheckpoint(true),
+          Bm25.postings(docs, "doc_id", "tokens").transform(Par.pin),
           col("doc_id"))
         val qt = retrievalQueryTerms(docs)
         val bm = Bm25.scoreTopK(
@@ -217,8 +217,7 @@ private[queries] object ExtensionGraphStatsQueries {
     // stream equals the batch answer and shares its oracle.
     QueryDef(
       "q_stream_percolate",
-      (s, dir) => graft.operators.CacheLifecycle
-          .withTempStore("graft_stream_perc") { out =>
+      (s, dir) => Par.withTempStore("graft_stream_perc") { out =>
         val docs = docTokens(s, dir)
         graft.streaming.StreamingOps.percolateStream(
             s, s"$dir/documents.parquet",
@@ -507,7 +506,7 @@ private[queries] object ExtensionGraphStatsQueries {
           emb.select(col("vec_id")).count())
         val assigned = Similarity.assignCellsSampledCodebook(
             emb, "vec_id", "embedding", nlist = nl)
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val pairs = assigned
           .select(col("cell"), col("id").as("id_a"), col("cv").as("va"))
           .join(assigned.select(col("cell"), col("id").as("id_b"),
@@ -638,7 +637,7 @@ private[queries] object ExtensionGraphStatsQueries {
           .limit(200)
           .select(col("term"))
         val vt = toks.join(broadcast(vocab), "term")
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val nDocs = Tables.documents(s, dir)
           .agg(countDistinct(col("doc_id")).as("__n"))
         val ca = vt.groupBy(col("term")).agg(count(lit(1)).as("__c"))
@@ -952,7 +951,7 @@ private[queries] object ExtensionGraphStatsQueries {
       "q_lsh_operating_point",
       (s, dir) => {
         val sh = Dedup.shingleSets(docTokens(s, dir), "doc_id", "tokens", 3)
-          .localCheckpoint(true)
+          .transform(Par.pin)
         // md5-lattice signatures, 16 hashes (the calibration kernel):
         // the SAME Dedup.md5LatticeSignatures single definition the
         // calibration query folds through — bit-identical band keys,
@@ -972,10 +971,10 @@ private[queries] object ExtensionGraphStatsQueries {
               col("x.id") < col("y.id"))
           .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
           .distinct()
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val truth = Dedup.jaccardPairs(sh, 0.7)
           .select(col("id_a"), col("id_b"))
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val tp = cand.join(truth, Seq("id_a", "id_b"), "left_semi")
         val counts = cand.agg(count(lit(1)).as("n_candidates"))
           .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
@@ -1108,7 +1107,7 @@ private[queries] object ExtensionGraphStatsQueries {
         val e = knn
           .select(least(col("query_id"), col("neighbor_id")).as("u"),
             greatest(col("query_id"), col("neighbor_id")).as("v"))
-          .distinct().localCheckpoint(true)
+          .distinct().transform(Par.pin)
         val und = e.union(e.select(col("v").as("u"), col("u").as("v")))
         val deg = und.groupBy(col("u").as("z"))
           .agg(count(lit(1)).as("dz"))
@@ -1179,7 +1178,7 @@ private[queries] object ExtensionGraphStatsQueries {
         val parts = Tables(s, dir, "part")
         val nameIds = parts.groupBy(col("p_name"))
           .agg(min(col("p_partkey")).as("nid"))
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val pairs = FuzzyJoin.similarPairs(
             parts.select(col("p_name")), "p_name", maxDist = 2)
           .join(nameIds.select(col("p_name").as("name_a"),
@@ -1475,7 +1474,7 @@ private[queries] object ExtensionGraphStatsQueries {
       "q_coreset",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-          .select(col("vec_id"), col("embedding")).localCheckpoint(true)
+          .select(col("vec_id"), col("embedding")).transform(Par.pin)
         val k = 6
         val first = emb.agg(min(col("vec_id"))).collect().head.getLong(0)
         var picks = Seq((first, 1, Option.empty[Double]))

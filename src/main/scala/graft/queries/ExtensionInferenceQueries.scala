@@ -3,7 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.QueryDef.sqlList
 import graft.functions.{TextAnalysis, TextFunctions}
-import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
+import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, Par, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -953,7 +953,7 @@ private[queries] object ExtensionInferenceQueries {
         // 4-5× by defeating it; profiled 4.7 s + 3.1 s single-task
         // contrib stages over the 1-partition pin)
         val index = graft.operators.Par.widenBy(
-          Bm25.postings(docs, "doc_id", "tokens").localCheckpoint(true),
+          Bm25.postings(docs, "doc_id", "tokens").transform(Par.pin),
           col("doc_id"))
         val qt = retrievalQueryTerms(docs)
         val bm = Bm25.scoreTopK(
@@ -1421,7 +1421,7 @@ private[queries] object ExtensionInferenceQueries {
         import graft.operators.BpeTokenizer
         val syms = BpeTokenizer.initialSymbols(
           BpeTokenizer.wordCounts(Tables.documents(s, dir), "text"))
-          .select(col("freq"), col("syms")).localCheckpoint(true)
+          .select(col("freq"), col("syms")).transform(Par.pin)
         val (l, r, _) = BpeTokenizer.topPair(syms).get
         BpeTokenizer.pairStats(BpeTokenizer.mergePair(syms, l, r))
           .select(col("left").as("lhs"), col("right").as("rhs"), col("cnt"))
@@ -1586,8 +1586,7 @@ private[queries] object ExtensionInferenceQueries {
     // VERDICT r18 #3 closed the per-rep leak).
     QueryDef(
       "q_bpe_roundtrip",
-      (s, dir) => graft.operators.CacheLifecycle
-          .withTempStore("graft_bpe_store") { store =>
+      (s, dir) => Par.withTempStore("graft_bpe_store") { store =>
         import graft.operators.BpeTokenizer
         val docs = Tables.documents(s, dir)
         val ledger = BpeTokenizer.trainLedger(docs, "text", nMerges = 4,

@@ -3,7 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.QueryDef.sqlList
 import graft.functions.{TextAnalysis, TextFunctions}
-import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
+import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, Par, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ private[queries] object ExtensionNonparamQueries {
       "q_ngram_novelty",
       (s, dir) => {
         val sh = Dedup.shingleSets(docTokens(s, dir), "doc_id", "tokens", 3)
-          .localCheckpoint(true)
+          .transform(Par.pin)
         val firstSeen = sh.groupBy(col("shingle"))
           .agg(min(col("id")).as("first_id"))
         sh.join(firstSeen, "shingle")

@@ -419,7 +419,7 @@ object RelationalQueries {
           .select(col("o_orderpriority"), col("o_orderkey"),
             sum(col("o_totalprice").cast(dec)).over(w)
               .cast("double").as("trailing_sum"))
-          .localCheckpoint(true)
+          .transform(graft.operators.Par.pin)
           .orderBy(col("o_orderpriority"), col("o_orderkey"))
       },
       Some("""

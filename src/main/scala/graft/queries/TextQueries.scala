@@ -247,7 +247,7 @@ object TextQueries {
           .filter(!col("t").isin(snowballStopWords: _*))
           .select(col("doc_id"), graft.functions.stem(col("t")).as("token"))
           .filter(!(col("token") rlike "^[a-z]$"))
-          .localCheckpoint(true)
+          .transform(graft.operators.Par.pin)
           .orderBy(col("doc_id"), col("token"))
       },
       Some(s"""

@@ -318,33 +318,13 @@ object StreamingOps {
 
   private val nameCounter = new AtomicInteger(0)
 
-  /** Run `body` with each `settings` key set, then put back what the
-    * session held before: the previous value, or no setting at all.
-    * Session conf is shared across threads — the engine's helpers
-    * drain synchronously on the calling thread and nothing else
-    * plans queries on this session concurrently (single-threaded
-    * assumption; a concurrent planner would see the settings for
-    * the body's duration).
-    */
-  private def withConf[A](spark: SparkSession, settings: (String, String)*)(
-      body: => A): A = {
-    val before = spark.conf.getAll
-    settings.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally settings.foreach { case (k, _) =>
-      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
-  }
-
   /** Start `out` into a fresh memory sink, drain it once (the
     * bounded-input one-pass pattern every replay here uses), stop,
-    * and return the sink contents pinned with an eager
-    * localCheckpoint — then DROP the sink table, also when the drain
-    * or the checkpoint throws. A named memory sink left registered
-    * retains its full result set in the driver for the life of the
-    * session (every replay × repeated bench/verify invocations grew
-    * monotonically); checkpoint blocks are ContextCleaner-managed and
-    * reclaimed once the returned frame is unreferenced.
+    * and return the sink contents pinned ([[graft.operators.Par.pin]])
+    * — then DROP the sink table, also when the drain or the pin
+    * throws. A named memory sink left registered retains its full
+    * result set in the driver for the life of the session (every
+    * replay × repeated bench/verify invocations grew monotonically).
     *
     * `stateSource` right-sizes stateful-operator parallelism from the
     * input size. A streaming query's state-store partition count is
@@ -387,13 +367,13 @@ object StreamingOps {
     try {
       // the width is read once, at query start: set it just for the
       // start + drain
-      withConf(spark, width.toSeq: _*) {
+      graft.operators.Par.withConf(spark, width.toSeq: _*) {
         val q = out.writeStream.outputMode(mode)
           .format("memory").queryName(name)
           .start()
         try q.processAllAvailable() finally q.stop()
       }
-      spark.table(name).localCheckpoint(eager = true)
+      spark.table(name).transform(graft.operators.Par.pin)
     } finally spark.catalog.dropTempView(name)
   }
 
@@ -458,7 +438,8 @@ object StreamingOps {
       spark: SparkSession, path: String, mode: OutputMode,
       stateSource: Option[String] = None)(
       build: (() => DataFrame) => DataFrame): DataFrame =
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+    graft.operators.Par.withConf(
+        spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       drainToFrame(
         build(() => graft.Tables.normalizeTs(parquetStream(spark, path))),
         mode, stateSource)
@@ -1644,7 +1625,7 @@ object StreamingOps {
             val batchBuckets = graft.operators.Dedup.minhashBuckets(
                 graft.operators.Dedup.shingleSets(
                   b, idCol, tokensCol, shingleK), bands, rowsPerBand)
-              .localCheckpoint(true)
+              .transform(graft.operators.Par.pin)
             graft.operators.Dedup
               .incrementalMinhashPairsFromStore(corpus, batchIds, store,
                 idCol, tokensCol, shingleK, bands, rowsPerBand, minJaccard,
@@ -2238,7 +2219,7 @@ object StreamingOps {
       // "c" would collide with the combine's internal column-total
       // margin alias — hand over under neutral names
       .select(col("a").as("cat"), col("c").as("cohort"), col("o"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Par.pin)
     graft.operators.DistributionTests.gTestFromCells(
       cells, "cat", "cohort", crit4)
   }

@@ -66,7 +66,7 @@ class SimHashSpec extends SparkSuite {
       maxBucketSize = 4)
     // 0 vs 66 is the cap's behavioral proof. (The anti-join is no
     // longer visible from the returned frame: simhashPairs seals its
-    // result via CacheLifecycle, so the caller sees a checkpoint scan.)
+    // result via Par.sealAndRelease, so the caller sees a checkpoint scan.)
     assert(capped.count() == 0)
   }
 }

@@ -7,8 +7,8 @@ import graft.SparkSuite
   * incremental leakage split) used to create a temp parquet store per
   * invocation and never delete it — a corpus-sized /tmp leak on every
   * Verify sweep and every Bench rep in a long-lived JVM. All six
-  * sites now run under [[graft.operators.CacheLifecycle.withTempStore]],
-  * which seals the result (localCheckpoint) and recursively deletes
+  * sites now run under [[graft.operators.Par.withTempStore]],
+  * which pins the result (Par.pin) and recursively deletes
   * the store, success or failure. The `graft_` prefix on every store
   * dir makes the hygiene assertable: run representatives of the three
   * store shapes (plain write, streaming sink, three-store ingest
@@ -41,7 +41,7 @@ class TempStoreHygieneSpec extends SparkSuite {
         .map(_.getName).toSet
     val before = present("graft_hygiene_t")
     intercept[RuntimeException] {
-      graft.operators.CacheLifecycle
+      graft.operators.Par
         .withTempStore("graft_hygiene_t") { root =>
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(root, "junk.txt"), "x")
