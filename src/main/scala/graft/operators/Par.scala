@@ -68,11 +68,10 @@ object Par {
     * an unmaterialized one that may still read its source (a temp
     * store [[withTempStore]] is about to delete), so it is pinned.
     */
-  private[graft] def pin(df: DataFrame): DataFrame =
-    df.queryExecution.optimizedPlan match {
-      case r: LogicalRDD if r.rdd.isCheckpointed => df
-      case _ => df.localCheckpoint(true)
-    }
+  def pin(df: DataFrame): DataFrame = df.queryExecution.optimizedPlan match {
+    case r: LogicalRDD if r.rdd.isCheckpointed => df
+    case _ => df.localCheckpoint(true)
+  }
 
   /** [[pin]] `result`, then unpersist every cache in `feeds`: for the
     * operators that lazily persist an intermediate and must not leave

@@ -144,7 +144,7 @@ object ProductQuantization {
       Similarity.assignCellsSampledCodebook(corpus, idCol, vecCol, nl)
     val q = queries.select(col(idCol).cast("long").as("query_id"),
       col(vecCol).as("qv"))
-    val probes = q.crossJoin(centDf)
+    val probes = q.crossJoin(broadcast(centDf))
       .withColumn("csim",
         round(VectorFunctions.cosine(col("qv"), col("centroid")), 6))
       .groupBy(col("query_id"))

@@ -242,18 +242,13 @@ object Similarity {
   }
 
   /** Deterministic corpus-sampled codebook: the `nlist` smallest ids'
-    * vectors, broadcast. A pure function of the data — every consumer
-    * (ANN probing, diversity sampling) is oracle-replayable.
+    * vectors. A pure function of the data — every consumer (ANN
+    * probing, diversity sampling) is oracle-replayable. It carries no
+    * broadcast hint: each join consumer broadcasts it, and
+    * [[writeIvfIndex]] writes it (a hint outside a join logs Spark's
+    * HintErrorLogger warning).
     */
   def sampledCodebook(
-      corpus: DataFrame, idCol: String, vecCol: String, nlist: Int)
-      : DataFrame =
-    broadcast(codebookRows(corpus, idCol, vecCol, nlist))
-
-  /** [[sampledCodebook]] without its broadcast hint, for writing: a
-    * hint outside a join logs Spark's HintErrorLogger warning.
-    */
-  private def codebookRows(
       corpus: DataFrame, idCol: String, vecCol: String, nlist: Int)
       : DataFrame =
     corpus.select(col(idCol).cast("long").as("cell"),
@@ -348,7 +343,7 @@ object Similarity {
           .select(col("cell").as("ccell"), col("centroid").as("ccent"))
         // each fine centroid lands in its nearest coarse cell (ties
         // to the smaller ccell — the assignCellsTo convention)
-        val centAssigned = centDf.crossJoin(broadcast(coarse))
+        val centAssigned = broadcast(centDf).crossJoin(broadcast(coarse))
           .withColumn("__cc",
             round(VectorFunctions.cosine(col("centroid"), col("ccent")), 6))
           .groupBy(col("cell"))
@@ -485,7 +480,7 @@ object Similarity {
   def writeIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, dir: String): Unit = {
-    codebookRows(corpus, idCol, vecCol, nlist)
+    sampledCodebook(corpus, idCol, vecCol, nlist)
       .write.mode("overwrite").parquet(s"$dir/codebook")
     assignCellsSampledCodebook(corpus, idCol, vecCol, nlist)
       .write.mode("overwrite").parquet(s"$dir/assignments")

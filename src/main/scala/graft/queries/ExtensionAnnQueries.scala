@@ -552,7 +552,7 @@ private[queries] object ExtensionAnnQueries {
         val probes = queries
           .select(col("vec_id").cast("long").as("query_id"),
             col("embedding").as("qv"))
-          .crossJoin(centDf)
+          .crossJoin(broadcast(centDf))
           .withColumn("csim", round(
             graft.functions.VectorFunctions.cosine(
               col("qv"), col("centroid")), 6))
