@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Native squared euclidean distance over two embedding arrays
-  * (array<float> or array<double>), accumulated in double — the kNN
-  * kernel behind [[graft.operators.Similarity.euclideanKnn]].
+  * (array<float> or array<double>), accumulated in double — the L2
+  * kernel behind [[graft.operators.Similarity.euclideanTopK]].
   *
   * Same rationale as [[CosineSimilarity]]: a real Catalyst
   * `BinaryExpression` with `doGenCode` keeps the n² scoring loop of a

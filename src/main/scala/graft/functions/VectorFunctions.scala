@@ -27,16 +27,11 @@ object VectorFunctions {
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  /** L2 norm. */
-  def norm2(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0),
-      (acc, v) => acc + v.cast("double") * v.cast("double")))
-
-  /** Squared euclidean distance of two array columns — the kNN-graph
-    * kernel for [[graft.operators.Tsne]]. Backed by the native
+  /** Squared euclidean distance of two array columns — the L2 kernel
+    * of the PQ/ADC and exact-L2 rankers. Backed by the native
     * codegen [[EuclideanDist2]] expression (one fused loop inside
     * whole-stage codegen; the HOF formulation is interpreted and
-    * allocates a zipped array per pair — on an n² kNN build that is
+    * allocates a zipped array per pair — on an all-pairs scan that is
     * the scoring rate).
     */
   def dist2(a: Column, b: Column): Column =
@@ -44,8 +39,8 @@ object VectorFunctions {
 
   /** Cosine similarity of two embedding columns, computed in double.
     * Backed by the native codegen [[CosineSimilarity]] expression (one
-    * fused loop inside whole-stage codegen); `dot`/`norm2` above are
-    * the HOF building blocks for ad-hoc column math.
+    * fused loop inside whole-stage codegen); `dot` above is the HOF
+    * building block for ad-hoc column math.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.cosine_similarity(a, b)

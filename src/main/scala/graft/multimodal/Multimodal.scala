@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media payloads travel as opaque
-  * `binary` columns with typed metadata structs; decode / feature
-  * extraction runs batched per partition.
+  * `binary` columns with typed metadata structs; decode runs batched
+  * per partition.
   *
   * The container has no image/audio codecs, so [[stubDecode]] is a
   * clearly-marked DETERMINISTIC FAKE — the Spark-side plumbing (binary
@@ -64,55 +64,6 @@ object Multimodal {
           }
         }
       }(enc).toDF()
-  }
-
-  /** Feature-extraction record: id + fixed-dim embedding. */
-  case class MediaFeatures(id: Long, features: Array[Float])
-
-  /** Batched feature extraction — the embedding-model boundary. The
-    * STUB kernel is a 16-bin byte histogram, L1-normalized: a
-    * deterministic fake with the real output contract (fixed-dim
-    * float vector per payload, NaN-free, norm-bounded). Same
-    * partition-batched shape as [[decodeMeta]]; a production build
-    * swaps the kernel for an ONNX/JNI encoder consuming the whole
-    * `batch` in one call. Downstream, the vectors feed the existing
-    * Similarity operators unchanged.
-    */
-  def extractFeatures(payloads: DataFrame, batchSize: Int = 64): DataFrame = {
-    val enc = Encoders.product[MediaFeatures]
-    payloads.select(col("id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.map { r =>
-            // null payload → empty array, keeping the NaN-free /
-            // norm-bounded output contract (same guard as decodeMeta)
-            val bytes = Option(r.getAs[Array[Byte]](1))
-              .getOrElse(Array.emptyByteArray)
-            val hist = new Array[Float](16)
-            bytes.foreach(b => hist((b & 0xff) >> 4) += 1f)
-            val total = math.max(1f, bytes.length.toFloat)
-            MediaFeatures(r.getLong(0), hist.map(_ / total))
-          }
-        }
-      }(enc).toDF()
-  }
-
-  /** Resize: proportional byte-range slice to a target (width,
-    * height) budget — the STUB for a pixel resample, preserving the
-    * real contract (output payload is a prefix-deterministic function
-    * of the input, bounded by the target size; metadata records the
-    * target dims). Pure column expressions — no shuffle, codegen.
-    */
-  def resizeStub(
-      payloads: DataFrame, targetW: Int, targetH: Int): DataFrame = {
-    // stand-in byte budget: one "byte per pixel" at the target dims,
-    // capped by the source length
-    val budget = lit(targetW.toLong * targetH / 1024L + 1L)
-    payloads.select(col("id"),
-      lit(targetW).as("width"), lit(targetH).as("height"),
-      col("payload")
-        .substr(lit(1), least(octet_length(col("payload")), budget))
-        .as("payload"))
   }
 
   /** Frame sampling: fixed-offset byte-range "frames" of the payload,

@@ -395,10 +395,9 @@ object BpeTokenizer {
 
   /** Persist a [[trainLedger]] as the tokenizer ARTIFACT — one
     * parquet `(step, left, right, cnt)` under `dir`, ordered by step.
-    * Real pipelines train once and ship the merge list (the
-    * `Similarity.writeIvfIndex` build-once/query-many convention);
-    * the ledger is nMerges-sized driver state, so a single-file
-    * write is the honest shape.
+    * Real pipelines train once and ship the merge list (build once,
+    * tokenize many times); the ledger is nMerges-sized driver
+    * state, so a single-file write is the honest shape.
     */
   def writeMerges(
       spark: org.apache.spark.sql.SparkSession,

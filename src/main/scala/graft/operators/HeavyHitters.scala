@@ -52,8 +52,6 @@ object HeavyHitters {
   def frequentItems(
       df: DataFrame, itemCol: String, support: Double): DataFrame = {
     require(support > 0 && support <= 1, s"support must be in (0,1]: $support")
-    val spark = df.sparkSession
-    import spark.implicits._
     val k = math.ceil(1.0 / support).toInt
     val items = df.select(col(itemCol).cast("string").as("item"))
       .filter(col("item").isNotNull)

@@ -56,7 +56,6 @@ object KmvSketch {
       : DataFrame = {
     require(k >= 2, s"k: $k")
     Reserved.check("input" -> df)
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val scaleConst = (BigInt(k - 1) * TWO60).toString
     val hashes = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("__g"), hash60(col(valueCol)).as("__h"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic, reproducible sampling for training-data pipelines.
@@ -9,60 +9,13 @@ import org.apache.spark.sql.functions._
   * SAME row can land in different samples as partitioning changes
   * (repartition, AQE, input splits) — unacceptable when the sample
   * defines a held-out set that must stay fixed across reruns and
-  * cluster layouts. Content-hash sampling decides membership from the
-  * row's id alone: `xxhash64(seed, id) mod 10^6 < fraction·10^6`.
-  * Same id → same verdict, on any cluster, at any parallelism, in any
-  * engine run. No shuffle, no state — a codegen'd filter that
-  * predicate-pushes like any other.
-  *
-  * The same primitive yields disjoint folds: bucket = hash mod k, and
-  * fold i is `bucket === i` — exact complements with no bookkeeping.
+  * cluster layouts. Every draw here is a content hash of the row's id
+  * instead (the cross-engine md5 pattern): same id → same draw, on any
+  * cluster, at any parallelism, in any engine run. [[weightedSample]]
+  * and [[epochShuffle]] draw that way; [[neymanAllocation]] plans the
+  * per-stratum budgets exactly, on an integer lattice.
   */
 object Sampling {
-
-  private val M = 1000000L
-
-  private def bucket(idCol: Column, seed: Long): Column =
-    pmod(xxhash64(lit(seed), idCol), lit(M))
-
-  /** Keep ~`fraction` of rows, decided by id content. Exact
-    * reproducibility, approximate fraction (hash-uniform over ids).
-    */
-  def sampleByHash(
-      df: DataFrame,
-      idCol: String,
-      fraction: Double,
-      seed: Long = 0L): DataFrame = {
-    require(fraction >= 0.0 && fraction <= 1.0, s"fraction: $fraction")
-    df.where(bucket(col(idCol), seed) < lit((fraction * M).toLong))
-  }
-
-  /** The exact complement of [[sampleByHash]] with the same arguments:
-    * the two results partition the input with no overlap, by
-    * construction rather than by anti-join.
-    */
-  def complementByHash(
-      df: DataFrame,
-      idCol: String,
-      fraction: Double,
-      seed: Long = 0L): DataFrame = {
-    require(fraction >= 0.0 && fraction <= 1.0, s"fraction: $fraction")
-    df.where(bucket(col(idCol), seed) >= lit((fraction * M).toLong))
-  }
-
-  /** Disjoint fold assignment for k-fold workflows: adds `foldCol` in
-    * [0, k). Union of the folds is the input; folds are deterministic
-    * in the id.
-    */
-  def withFold(
-      df: DataFrame,
-      idCol: String,
-      k: Int,
-      foldCol: String = "fold",
-      seed: Long = 0L): DataFrame = {
-    require(k > 0, s"k: $k")
-    df.withColumn(foldCol, pmod(xxhash64(lit(seed), col(idCol)), lit(k.toLong)))
-  }
 
   /** Weighted sampling WITHOUT replacement, k rows, inclusion odds ∝
     * `weightCol` — Efraimidis-Spirakis (2006) reservoir keys, made

@@ -10,13 +10,12 @@ import org.apache.spark.sql.functions._
   * ranker. The generators:
   *  - broadcast cross join — [[bruteForceTopK]] (exact; the ground
   *    truth), [[hardNegatives]] (cross-label candidates only) and the
-  *    L2 pair [[euclideanKnn]]/[[euclideanTopK]]: the bounded query
-  *    side is broadcast, the corpus is scanned once and scored
-  *    map-side, never shuffled;
+  *    L2 [[euclideanTopK]]: the bounded query side is broadcast, the
+  *    corpus is scanned once and scored map-side, never shuffled;
   *  - same-cell self-join — [[cellBlockedTopK]]: corpus×corpus kNN
   *    inside the cells of the deterministic sampled codebook;
-  *  - probe join — [[ivfTopKSampledCodebook]]/[[ivfTopKFromIndex]]:
-  *    each query searches its `nprobe` nearest cells;
+  *  - probe join — [[ivfTopKSampledCodebook]]: each query searches
+  *    its `nprobe` nearest cells;
   *  - bucket join — [[lshTopK]]: random-hyperplane LSH buckets, an
   *    IVF analogue with no codebook at all.
   *
@@ -157,28 +156,6 @@ object Similarity {
       k)
   }
 
-  /** Exact k-nearest-neighbor graph of a (bounded) point set by
-    * squared euclidean distance — the input stage for t-SNE and other
-    * manifold methods. Same plan shape as [[bruteForceTopK]]: the
-    * point set is broadcast, scoring is map-side, and the per-query
-    * bounded top-k aggregate caps the exchange at points×k rows
-    * (score = −d², so "largest score" = "nearest"). Ties break on the
-    * ascending neighbor id, deterministically.
-    * Output: (query_id, neighbor_id, d2, rank), rank ≤ k.
-    */
-  def euclideanKnn(
-      points: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = points.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val c = points.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        negate(VectorFunctions.dist2(col("qv"), col("cv"))).as("cosine"))
-    topKPerQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"),
-        negate(col("cosine")).as("d2"), col("rank"))
-  }
-
   /** Hard-negative mining for embedding-model training: each query's
     * top-k most-similar corpus rows with a DIFFERENT label — the
     * "looks alike, isn't" pairs a contrastive trainer wants. The
@@ -244,9 +221,7 @@ object Similarity {
   /** Deterministic corpus-sampled codebook: the `nlist` smallest ids'
     * vectors. A pure function of the data — every consumer (ANN
     * probing, diversity sampling) is oracle-replayable. It carries no
-    * broadcast hint: each join consumer broadcasts it, and
-    * [[writeIvfIndex]] writes it (a hint outside a join logs Spark's
-    * HintErrorLogger warning).
+    * broadcast hint: each join consumer broadcasts it.
     */
   def sampledCodebook(
       corpus: DataFrame, idCol: String, vecCol: String, nlist: Int)
@@ -430,9 +405,14 @@ object Similarity {
     val assigned =
       assignCellsSampledCodebook(corpus, idCol, vecCol, nl)
         .withColumnRenamed("id", "neighbor_id")
-    ivfSearch(assigned, centDf,
+    val probes = probeCells(
       queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      k, nprobe)
+      "query_id", "qv", centDf, nprobe)
+    // `probes` is queries×nprobe rows — broadcastable because ANN
+    // queries are a workload, not the corpus. If queries ever became
+    // corpus-sized (all-pairs search), drop the hint and shuffle the
+    // join on `cell` instead.
+    rankCosine(assigned.join(broadcast(probes), Seq("cell")), k)
   }
 
   /** Each row's `nprobe` nearest cells of the codebook `centDf`
@@ -453,57 +433,6 @@ object Similarity {
         first(col(vecCol)).as(vecCol))
       .select(col(idCol), col(vecCol), explode(col("top")).as("probe"))
       .select(col(idCol), col(vecCol), col("probe.id").as("cell"))
-
-  /** The IVF probe-and-rerank tail, shared by the live path and the
-    * persisted-index path: nprobe nearest cells per query
-    * ([[probeCells]]), candidate join on the cell id, exact cosine
-    * re-rank. `assigned` = (neighbor_id, cell, cv); `centDf` =
-    * (cell, centroid), broadcast-sized.
-    */
-  private def ivfSearch(
-      assigned: DataFrame, centDf: DataFrame,
-      q: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val probes = probeCells(q, "query_id", "qv", centDf, nprobe)
-    // `probes` is queries×nprobe rows — broadcastable because ANN
-    // queries are a workload, not the corpus. If queries ever became
-    // corpus-sized (all-pairs search), drop the hint and shuffle the
-    // join on `cell` instead.
-    rankCosine(assigned.join(broadcast(probes), Seq("cell")), k)
-  }
-
-  /** Persist the IVF index — codebook (nlist rows) and cell-assigned
-    * corpus — as parquet under `dir`. The build-once half of the
-    * build-once/query-many deployment shape (the ANN twin of the
-    * dedup signature store): index maintenance is a write-time cost,
-    * query latency never pays the assignment pass again.
-    */
-  def writeIvfIndex(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, dir: String): Unit = {
-    sampledCodebook(corpus, idCol, vecCol, nlist)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-    assignCellsSampledCodebook(corpus, idCol, vecCol, nlist)
-      .write.mode("overwrite").parquet(s"$dir/assignments")
-  }
-
-  /** Query a persisted IVF index: identical results to
-    * [[ivfTopKSampledCodebook]] over the corpus the index was built
-    * from (IvfIndexSpec proves the round-trip), with zero corpus
-    * scans at query time — the scan reads only the assignment store,
-    * and partition pruning applies if it was written bucketed or
-    * partitioned by cell.
-    */
-  def ivfTopKFromIndex(
-      queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nprobe: Int, dir: String): DataFrame = {
-    val spark = queries.sparkSession
-    val centDf = spark.read.parquet(s"$dir/codebook")
-    val assigned = spark.read.parquet(s"$dir/assignments")
-      .withColumnRenamed("id", "neighbor_id")
-    ivfSearch(assigned, centDf,
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      k, nprobe)
-  }
 
   /** Exact L2 top-k of `queries` against `corpus` — the ground truth
     * the PQ/ADC path is measured against. Distances snap to the

@@ -92,11 +92,6 @@ object Triangles {
         col("__tri")(2).as("c"))
   }
 
-  /** Global triangle count as a 1-row frame `(n_triangles)`. */
-  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    enumerate(edges, srcCol, dstCol)
-      .agg(count(lit(1)).as("n_triangles"))
-
   /** Local clustering coefficient per node:
     * `(id, deg, triangles, coeff_ppm)` with
     * coeff = 2·T(v) / (deg(v)·(deg(v)−1)), emitted as integer ppm by

@@ -33,16 +33,6 @@ import org.apache.spark.sql.functions._
   * the sample is collected in content-hash order. The solve is
   * therefore a pure function of (data, seed, params) — the same
   * contract as SpectralPca's pinned spectrum.
-  *
-  * For corpus-scale n the right decomposition is a distributed kNN
-  * graph + a sparse solver: [[embedKnnSampled]] builds the graph with
-  * the engine's own ANN operator (only ids and n·k edges ever reach
-  * the driver) and solves either exactly (theta = 0, O(n²)/iter) or
-  * with the Barnes-Hut quadtree approximation (theta > 0,
-  * O(n·k + n log n)/iter and no n² allocation — the van der Maaten
-  * 2014 formulation, taking the sample bound from 10³ to 10⁵). At
-  * the reference's own working sizes the exact driver solver is
-  * faithful and fast.
   */
 object Tsne {
 
@@ -132,8 +122,7 @@ object Tsne {
   }
 
   /** The t-SNE gradient descent over a symmetrized affinity matrix
-    * `p` (n × n, floored, row/col sums normalized) — shared by the
-    * dense [[embed]] path and the kNN-graph [[embedKnnSampled]] path.
+    * `p` (n × n, floored, row/col sums normalized), run by [[embed]].
     * Exact repulsion (Q recomputed per pair, no n² Q storage);
     * deterministic for a fixed seed.
     */
@@ -201,308 +190,6 @@ object Tsne {
     y
   }
 
-  /** Barnes-Hut gradient descent (van der Maaten 2014): attractive
-    * forces run over the SPARSE symmetrized kNN affinities only, and
-    * the repulsive term + partition function are approximated by a
-    * quadtree rebuilt each iteration — cells whose extent/distance
-    * ratio is below `theta` act as point masses at their center of
-    * mass. O(nnz + n log n) per iteration and O(nnz + n) memory (the
-    * dense P matrix is never built), against the exact loop's O(n²).
-    * Same seeded init, exaggeration, momentum, and recentering
-    * schedule as [[gradientLoop]]; deterministic for a fixed seed
-    * (traversal order is child-index order, not data-dependent).
-    *
-    * `rows(i)` holds row i's symmetrized (j, p_ij) entries (both
-    * directions present).
-    */
-  private def gradientLoopBH(
-      n: Int,
-      rows: Array[Array[(Int, Double)]],
-      iterations: Int,
-      seed: Long,
-      learningRate: Double,
-      theta: Double): Array[Array[Double]] = {
-    val rnd = new java.util.Random(seed)
-    val y = Array.fill(n, 2)(rnd.nextGaussian() * 1e-2)
-    val vel = Array.ofDim[Double](n, 2)
-    val grad = Array.ofDim[Double](n, 2)
-    val theta2 = theta * theta
-
-    var iter = 0
-    while (iter < iterations) {
-      val exag = if (iter < 100) 12.0 else 1.0
-      val momentum = if (iter < 250) 0.5 else 0.8
-
-      // ---- quadtree over the current embedding (flat arrays) ----
-      var minX = Double.MaxValue; var maxX = Double.MinValue
-      var minY = Double.MaxValue; var maxY = Double.MinValue
-      var i = 0
-      while (i < n) {
-        minX = math.min(minX, y(i)(0)); maxX = math.max(maxX, y(i)(0))
-        minY = math.min(minY, y(i)(1)); maxY = math.max(maxY, y(i)(1))
-        i += 1
-      }
-      var cap = 4 * n + 64
-      var cx = new Array[Double](cap); var cy = new Array[Double](cap)
-      var hw = new Array[Double](cap)
-      var cnt = new Array[Int](cap)
-      var comX = new Array[Double](cap); var comY = new Array[Double](cap)
-      var kid = Array.fill(cap * 4)(-1)
-      var pt = Array.fill(cap)(-1) // singleton leaf's point, -1 otherwise
-      var nodes = 1
-      cx(0) = (minX + maxX) / 2; cy(0) = (minY + maxY) / 2
-      hw(0) = math.max(maxX - minX, maxY - minY) / 2 + 1e-9
-
-      def grow(): Unit = {
-        val nc = cap * 2
-        cx = java.util.Arrays.copyOf(cx, nc)
-        cy = java.util.Arrays.copyOf(cy, nc)
-        hw = java.util.Arrays.copyOf(hw, nc)
-        cnt = java.util.Arrays.copyOf(cnt, nc)
-        comX = java.util.Arrays.copyOf(comX, nc)
-        comY = java.util.Arrays.copyOf(comY, nc)
-        val nk = Array.fill(nc * 4)(-1)
-        System.arraycopy(kid, 0, nk, 0, cap * 4); kid = nk
-        val np = Array.fill(nc)(-1)
-        System.arraycopy(pt, 0, np, 0, cap); pt = np
-        cap = nc
-      }
-      def childOf(node: Int, q: Int): Int = {
-        val qx = if (y(q)(0) >= cx(node)) 1 else 0
-        val qy = if (y(q)(1) >= cy(node)) 1 else 0
-        val c = qy * 2 + qx
-        if (kid(node * 4 + c) < 0) {
-          if (nodes >= cap) grow()
-          val m = nodes; nodes += 1
-          hw(m) = hw(node) / 2
-          cx(m) = cx(node) + (if (qx == 1) hw(m) else -hw(m))
-          cy(m) = cy(node) + (if (qy == 1) hw(m) else -hw(m))
-          kid(node * 4 + c) = m
-        }
-        kid(node * 4 + c)
-      }
-      // Insert q at `start` and below: count/COM accrue at every node
-      // on the descent; a node's resident singleton is sunk one level
-      // before the path continues (its mass above is already counted).
-      // Recursion depth is bounded by the hw(·) ≥ 1e-12 floor (~50
-      // halvings), where coincident points stop subdividing and the
-      // node becomes a point-mass bucket.
-      def insertAt(start: Int, q: Int): Unit = {
-        var node = start
-        var done = false
-        while (!done) {
-          cnt(node) += 1
-          comX(node) += y(q)(0); comY(node) += y(q)(1)
-          if (cnt(node) == 1) { pt(node) = q; done = true }
-          else if (hw(node) < 1e-12) done = true
-          else {
-            val resident = pt(node)
-            if (resident >= 0) {
-              pt(node) = -1
-              insertAt(childOf(node, resident), resident)
-            }
-            node = childOf(node, q)
-          }
-        }
-      }
-      i = 0
-      while (i < n) { insertAt(0, i); i += 1 }
-
-      // ---- repulsive pass: per-point tree traversal ----
-      val repX = new Array[Double](n); val repY = new Array[Double](n)
-      var z = 0.0
-      val stack = new Array[Int](4 * 64 + nodes / 2 + 8)
-      i = 0
-      while (i < n) {
-        var zi = 0.0
-        var top = 0
-        stack(top) = 0; top += 1
-        while (top > 0) {
-          top -= 1
-          val node = stack(top)
-          if (cnt(node) > 0 && !(cnt(node) == 1 && pt(node) == i)) {
-            val mx = comX(node) / cnt(node)
-            val my = comY(node) / cnt(node)
-            val dx = y(i)(0) - mx; val dy = y(i)(1) - my
-            val d2 = dx * dx + dy * dy
-            val isLeafLike = pt(node) >= 0 || hw(node) < 1e-12 ||
-              (kid(node * 4) < 0 && kid(node * 4 + 1) < 0 &&
-                kid(node * 4 + 2) < 0 && kid(node * 4 + 3) < 0)
-            if (isLeafLike || (4.0 * hw(node) * hw(node)) < theta2 * d2) {
-              val q = 1.0 / (1.0 + d2)
-              val m = cnt(node).toDouble
-              zi += m * q
-              repX(i) += m * q * q * dx
-              repY(i) += m * q * q * dy
-            } else {
-              var c = 0
-              while (c < 4) {
-                val ch = kid(node * 4 + c)
-                if (ch >= 0) { stack(top) = ch; top += 1 }
-                c += 1
-              }
-            }
-          }
-        }
-        z += zi
-        i += 1
-      }
-      // every i skipped only the exact self-singleton; aggregated
-      // cells containing i contribute q̃_ii ≈ 1 each — the standard
-      // BH approximation. Z must still exclude nothing else.
-      if (z <= 0) z = 1e-12
-
-      // ---- attractive pass over the sparse edges ----
-      i = 0
-      while (i < n) { grad(i)(0) = 0.0; grad(i)(1) = 0.0; i += 1 }
-      i = 0
-      while (i < n) {
-        val row = rows(i)
-        var e = 0
-        while (e < row.length) {
-          val j = row(e)._1; val pij = row(e)._2
-          val dx = y(i)(0) - y(j)(0); val dy = y(i)(1) - y(j)(1)
-          val q = 1.0 / (1.0 + dx * dx + dy * dy)
-          val f = exag * pij * q
-          grad(i)(0) += 4.0 * f * dx
-          grad(i)(1) += 4.0 * f * dy
-          e += 1
-        }
-        grad(i)(0) -= 4.0 * repX(i) / z
-        grad(i)(1) -= 4.0 * repY(i) / z
-        i += 1
-      }
-
-      // ---- momentum update + recenter (same schedule as exact) ----
-      var mx0 = 0.0; var my0 = 0.0
-      i = 0
-      while (i < n) {
-        vel(i)(0) = momentum * vel(i)(0) - learningRate * grad(i)(0)
-        vel(i)(1) = momentum * vel(i)(1) - learningRate * grad(i)(1)
-        y(i)(0) += vel(i)(0); y(i)(1) += vel(i)(1)
-        mx0 += y(i)(0); my0 += y(i)(1)
-        i += 1
-      }
-      mx0 /= n; my0 /= n
-      i = 0
-      while (i < n) { y(i)(0) -= mx0; y(i)(1) -= my0; i += 1 }
-      iter += 1
-    }
-    y
-  }
-
-  /** Symmetrized affinities from a kNN graph: per-row beta binary
-    * search restricted to the row's neighbor list (the Barnes-Hut
-    * input treatment — P is exactly zero off the graph before the
-    * floor), then the same symmetrize/normalize/floor the dense path
-    * applies, so [[gradientLoop]] is shared verbatim. `nbr(i)` /
-    * `nd2(i)` are row i's neighbor indices and squared distances.
-    */
-  /** Per-row conditional affinities over the row's kNN distances:
-    * binary-search beta to the target perplexity, return the
-    * normalized probabilities in neighbor order. Shared by the dense
-    * and sparse (Barnes-Hut) affinity builders.
-    */
-  private def conditionalOverNeighbors(
-      ds: Array[Double], logPerp: Double): Array[Double] = {
-    val e = new Array[Double](ds.length)
-    var beta = 1.0
-    var betaMin = Double.NegativeInfinity
-    var betaMax = Double.PositiveInfinity
-    var it = 0
-    while (it < 50) {
-      var sum = 0.0
-      var dot = 0.0
-      var j = 0
-      while (j < ds.length) {
-        val v = StrictMath.exp(-beta * ds(j))
-        e(j) = v; sum += v; dot += v * ds(j)
-        j += 1
-      }
-      val h = StrictMath.log(sum) + beta * dot / sum
-      if (math.abs(h - logPerp) < 1e-5) it = 50
-      else {
-        if (h > logPerp) {
-          betaMin = beta
-          beta = if (betaMax.isPosInfinity) beta * 2 else (beta + betaMax) / 2
-        } else {
-          betaMax = beta
-          beta = if (betaMin.isNegInfinity) beta / 2 else (beta + betaMin) / 2
-        }
-      }
-      it += 1
-    }
-    var sum = 0.0
-    var j = 0
-    while (j < ds.length) { sum += e(j); j += 1 }
-    j = 0
-    while (j < ds.length) { e(j) /= sum; j += 1 }
-    e
-  }
-
-  private def knnAffinities(
-      n: Int,
-      nbr: Array[Array[Int]],
-      nd2: Array[Array[Double]],
-      perplexity: Double): Array[Array[Double]] = {
-    val p = Array.ofDim[Double](n, n)
-    val logPerp = StrictMath.log(perplexity)
-    var i = 0
-    while (i < n) {
-      val js = nbr(i)
-      val e = conditionalOverNeighbors(nd2(i), logPerp)
-      var j = 0
-      while (j < js.length) { p(i)(js(j)) = e(j); j += 1 }
-      i += 1
-    }
-    // symmetrize, normalize, floor — identical to the dense path
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        val v = math.max((p(i)(j) + p(j)(i)) / (2.0 * n), 1e-12)
-        p(i)(j) = v; p(j)(i) = v
-        j += 1
-      }
-      p(i)(i) = 0.0
-      i += 1
-    }
-    p
-  }
-
-  /** Sparse symmetrized affinities for the Barnes-Hut path: the same
-    * per-row conditionals, symmetrized over the edge union — entries
-    * exist only on the kNN graph (no n² allocation, no off-graph
-    * floor: BH runs attraction over edges only). `rows(i)` holds
-    * (j, p_ij) in ascending-j order, both directions present.
-    */
-  private def knnAffinitiesSparse(
-      n: Int,
-      nbr: Array[Array[Int]],
-      nd2: Array[Array[Double]],
-      perplexity: Double): Array[Array[(Int, Double)]] = {
-    val logPerp = StrictMath.log(perplexity)
-    val acc = new java.util.HashMap[Long, Double]()
-    var i = 0
-    while (i < n) {
-      val js = nbr(i)
-      val e = conditionalOverNeighbors(nd2(i), logPerp)
-      var j = 0
-      while (j < js.length) {
-        val v = e(j) / (2.0 * n)
-        acc.merge(i.toLong * n + js(j), v, (a, b) => a + b)
-        acc.merge(js(j).toLong * n + i, v, (a, b) => a + b)
-        j += 1
-      }
-      i += 1
-    }
-    val rows = Array.fill(n)(Array.newBuilder[(Int, Double)])
-    acc.forEach { (key, v) =>
-      rows((key / n).toInt) += (((key % n).toInt, v))
-    }
-    rows.map(_.result().sortBy(_._1))
-  }
-
   /** Deterministic bounded-sample wrapper: the `maxRows` vectors with
     * the smallest xxhash64(id) (content-hash order — stable across
     * partitioning, planned as TakeOrderedAndProject), embedded on the
@@ -529,82 +216,5 @@ object Tsne {
     spark.createDataFrame(
       rows.indices.map(k => (rows(k)._1, y(k)(0), y(k)(1))))
       .toDF(idCol, "tsne_x", "tsne_y")
-  }
-
-  /** The 10×-scale path: the kNN INPUT stage runs distributed through
-    * the engine's own ANN operator ([[Similarity.euclideanKnn]] — the
-    * broadcast + bounded-top-k-aggregate plan), so the driver never
-    * sees a vector: it collects only the n ids and the n·k graph
-    * edges, builds the sparse affinities ([[knnAffinities]]), and
-    * runs the shared exact solver (or, with theta > 0, the
-    * Barnes-Hut solver over the sparse graph — see below). This is
-    * the decomposition the class scaladoc names.
-    *
-    * `k` defaults to the standard ⌊3·perplexity⌋ neighbor budget.
-    * Deterministic: content-hash sample, ascending-id index order,
-    * per-row edges sorted by (d², neighbor).
-    *
-    * `theta` selects the driver solver: 0 (default) runs the shared
-    * exact-repulsion loop over a dense affinity matrix (O(n²) per
-    * iteration — faithful to [[embed]]); > 0 runs the Barnes-Hut
-    * loop ([[gradientLoopBH]], typical theta 0.5) whose per-iteration
-    * cost is O(n·k + n log n) and whose memory never materializes n²
-    * — the bound that takes the sample from 10³ to 10⁵ points.
-    */
-  def embedKnnSampled(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      maxRows: Int,
-      perplexity: Double = 30.0,
-      iterations: Int = 500,
-      seed: Long = 42L,
-      k: Int = 0,
-      theta: Double = 0.0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val kEff = if (k > 0) k else (3 * perplexity).toInt
-    // same refusal embed() makes: with perplexity >= k the per-row
-    // entropy target log(perp) > log(k) is unreachable, the beta
-    // search decays to ~0 and the affinities silently degrade to
-    // uniform — a produced-but-meaningless embedding
-    require(perplexity >= 2 && perplexity < kEff,
-      s"perplexity $perplexity needs perplexity < k (k=$kEff): the " +
-        "entropy target is unreachable over k neighbors otherwise")
-    val sample = df
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .orderBy(xxhash64(col("id")), col("id"))
-      .limit(maxRows)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ids only — the vectors stay on the executors
-      val idArr = sample.select($"id").as[Long].collect().sorted
-      val n = idArr.length
-      require(n >= 4, s"t-SNE needs at least 4 rows, got $n")
-      require(kEff >= 2 && kEff < n,
-        s"k=$kEff out of range for n=$n")
-      val idx = idArr.zipWithIndex.toMap
-      val edges = Similarity.euclideanKnn(sample, "id", "v", kEff)
-        .select($"query_id", $"neighbor_id", $"d2")
-        .as[(Long, Long, Double)].collect()
-      val nbrB = Array.fill(n)(Array.newBuilder[(Double, Int)])
-      edges.foreach { case (q, nb, d) => nbrB(idx(q)) += ((d, idx(nb))) }
-      // per-row sort by (d², neighbor): collect order is not
-      // deterministic, the affinity fold order must be
-      val sorted = nbrB.map(_.result().sortBy(identity))
-      val nbr = sorted.map(_.map(_._2))
-      val nd2 = sorted.map(_.map(_._1))
-      val y =
-        if (theta > 0)
-          gradientLoopBH(n, knnAffinitiesSparse(n, nbr, nd2, perplexity),
-            iterations, seed, learningRate = 200.0, theta)
-        else
-          gradientLoop(knnAffinities(n, nbr, nd2, perplexity),
-            iterations, seed, learningRate = 200.0)
-      spark.createDataFrame(
-        idArr.indices.map(i => (idArr(i), y(i)(0), y(i)(1))))
-        .toDF(idCol, "tsne_x", "tsne_y")
-    } finally sample.unpersist()
   }
 }

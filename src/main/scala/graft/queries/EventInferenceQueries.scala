@@ -1,8 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.multimodal.Multimodal
-import graft.operators.{AsOfJoin, RangeJoin}
+import graft.operators.RangeJoin
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

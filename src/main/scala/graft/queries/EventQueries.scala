@@ -1,12 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
-import graft.multimodal.Multimodal
-import graft.operators.{AsOfJoin, RangeJoin}
-import graft.streaming.StreamingOps
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.QueryDef
 
 /** Events-table queries: batch window aggregation, sessionization,
   * JSON extraction — each with a Structured-Streaming twin where the

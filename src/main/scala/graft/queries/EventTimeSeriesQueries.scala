@@ -1,12 +1,9 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.multimodal.Multimodal
-import graft.operators.{AsOfJoin, RangeJoin}
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Pure-move slice of [[EventQueries]] (round 16, VERDICT r15 #5).
   * Funnel rates, RFM, Mann-Kendall, SPRT/mSPRT, CUPED, Kuiper/AD/G-test, Ljung-Box, (A)DF, Stuart-Maxwell, Granger, Durbin-Watson, CMH, SMD, JS divergence, dispersion, Wasserstein, Bartlett, Wilson, PACF, RMST + stream twins.
@@ -226,7 +223,6 @@ private[queries] object EventTimeSeriesQueries {
     QueryDef(
       "q_rfm",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val users = Tables.events(s, dir)
           .groupBy(col("user_id"))
           .agg(max(unix_micros(col("ts"))).as("last_us"),

@@ -1,9 +1,8 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.QueryDef.sqlList
-import graft.functions.{TextAnalysis, TextFunctions}
-import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, Par, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
+import graft.functions.TextAnalysis
+import graft.operators.{Dedup, DistributionTests, Par, RankCorrelation, Similarity, Skyline}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1576,8 +1575,8 @@ private[queries] object ExtensionInferenceQueries {
 
     // Persisted-tokenizer ROUND-TRIP (VERDICT r17 #4): train the same
     // 4 merges, ship them as the parquet artifact
-    // (BpeTokenizer.writeMerges — the writeIvfIndex
-    // build-once/query-many convention), then tokenize FROM THE STORE
+    // (BpeTokenizer.writeMerges — build once, tokenize many
+    // times), then tokenize FROM THE STORE
     // with segmentFromStore. The oracle is q_bpe_segment's own chain,
     // so store → segment must hash-equal the live path: a lost step
     // column, a reordered reload, or a schema drift in the artifact

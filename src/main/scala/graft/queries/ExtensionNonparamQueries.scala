@@ -1,10 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.QueryDef.sqlList
-import graft.functions.{TextAnalysis, TextFunctions}
-import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, Par, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
-import org.apache.spark.sql.expressions.Window
+import graft.operators.{Dedup, Par, Similarity}
 import org.apache.spark.sql.functions._
 
 

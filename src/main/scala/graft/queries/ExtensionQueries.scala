@@ -2,9 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.sqlList
-import graft.functions.{TextAnalysis, TextFunctions}
-import graft.operators.{CorpusMixing, CurationPipeline, Dedup, DistributionTests, GlobalIds, RankCorrelation, SequencePacking, Similarity, Skyline, UnigramLM}
-import org.apache.spark.sql.expressions.Window
+import graft.functions.TextFunctions
 import org.apache.spark.sql.functions._
 
 /** Training-data-pipeline extension queries (beyond the reference's

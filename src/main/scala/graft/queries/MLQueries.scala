@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.functions.{TextFunctions, VectorFunctions}
+import graft.functions.TextFunctions
 import graft.operators.{Log10IDF, StratifiedSplit, TrimmedCountVectorizer}
 import org.apache.spark.sql.functions._
 

@@ -599,10 +599,6 @@ object RelationalQueries {
       (s, dir) => {
         val wRank = Window.partitionBy(col("o_orderpriority"))
           .orderBy(col("o_totalprice"), col("o_orderkey"))
-        val wCum = Window.partitionBy(col("o_orderpriority"))
-          .orderBy(col("decile"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wTot = Window.partitionBy(col("o_orderpriority"))
         Tables.orders(s, dir)
           .select(col("o_orderpriority"), col("o_totalprice"),
             col("o_orderkey"),

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.sqlList
-import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

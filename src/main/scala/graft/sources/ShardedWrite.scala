@@ -61,48 +61,4 @@ object ShardedWrite {
     manifest.write.mode("overwrite").parquet(s"$outDir/_manifest")
     spark.read.parquet(s"$outDir/_manifest")
   }
-
-  /** The shard files whose [min_id, max_id] intersects [lo, hi]
-    * (basenames resolved against THIS outDir — relocation-safe),
-    * plus the total shard count. The manifest is file-count-sized,
-    * so this is a bounded driver-side collect by design — the same
-    * class of driver state as a broadcast codebook.
-    */
-  def pruneShards(
-      spark: org.apache.spark.sql.SparkSession,
-      outDir: String, lo: Long, hi: Long): (Seq[String], Long) = {
-    val m = spark.read.parquet(s"$outDir/_manifest")
-    val total = m.count()
-    val files = m.filter(col("max_id") >= lo && col("min_id") <= hi)
-      .orderBy(col("min_id"))
-      .collect().map { r =>
-        val shard = r.getString(0)
-        // manifests written before the basename format recorded the
-        // absolute URIs input_file_name() returns; prepending
-        // outDir/data/ to those would resolve to garbage paths
-        // (outDir/data/hdfs://...), so any entry that is already a
-        // path — contains '/' (URI schemes always do) — passes
-        // through unmodified
-        if (shard.contains("/")) shard else s"$outDir/data/$shard"
-      }.toSeq
-    (files, total)
-  }
-
-  /** Manifest-pruned range read — the dataloader's resume/slice path
-    * and the batch engine's data-skipping read: open ONLY the shards
-    * whose id range intersects [lo, hi] (the range exchange at write
-    * time made shard ranges disjoint, so a narrow slice touches few
-    * files regardless of corpus size), with a residual id filter for
-    * exactness at shard boundaries.
-    */
-  def readRange(
-      spark: org.apache.spark.sql.SparkSession,
-      outDir: String, idCol: String, lo: Long, hi: Long): DataFrame = {
-    val (files, _) = pruneShards(spark, outDir, lo, hi)
-    if (files.isEmpty)
-      spark.read.parquet(s"$outDir/data").filter(lit(false))
-    else
-      spark.read.parquet(files: _*)
-        .filter(col(idCol) >= lo && col(idCol) <= hi)
-  }
 }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * single-query plan changes or fleet-wide speedups. No Spark needed:
   * the index is pure arithmetic over (query, seconds) maps.
   */
-class BenchContentionSpec extends AnyFunSuite {
+class BenchContentionSpec extends AnyFunSuite with TempDirs {
 
   private def prev(n: Int): Map[String, Double] =
     (0 until n).map(i => s"q_$i" -> (1.0 + i * 0.3)).toMap
@@ -76,37 +76,27 @@ class BenchContentionSpec extends AnyFunSuite {
 
   test("the drift baseline skips contended artifacts — a second " +
       "slammed run must not read ratio ~1.0 against the first") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_calmbase").toFile
-    try {
-      def write(n: Int, body: String): Unit =
-        java.nio.file.Files.write(
-          new java.io.File(dir, s"bench_full_r$n.json").toPath,
-          body.getBytes("UTF-8"))
-      write(5, """{"queries":{"q":1.5},"contended":true}""")
-      write(4, """{"queries":{"q":1.0},"contended":false}""")
-      write(3, """{"queries":{"q":0.9}}""") // pre-stamp format
-      assert(Bench.calmBaselineFile(dir, 5).map(_.getName)
-        === Some("bench_full_r4.json"))
-      // only contended artifacts exist -> None (caller falls back)
-      val dir2 = java.nio.file.Files
-        .createTempDirectory("graft_calmbase2").toFile
-      try {
-        java.nio.file.Files.write(
-          new java.io.File(dir2, "bench_full_r2.json").toPath,
-          """{"queries":{"q":2.0},"contended":true}""".getBytes("UTF-8"))
-        assert(Bench.calmBaselineFile(dir2, 2).isEmpty)
-        // pre-stamp artifacts are trusted as-is
-        java.nio.file.Files.write(
-          new java.io.File(dir2, "bench_full_r1.json").toPath,
-          """{"queries":{"q":1.0}}""".getBytes("UTF-8"))
-        assert(Bench.calmBaselineFile(dir2, 2).map(_.getName)
-          === Some("bench_full_r1.json"))
-      } finally {
-        dir2.listFiles().foreach(_.delete()); dir2.delete(); ()
-      }
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete(); ()
-    }
+    val dir = tempDir("graft_calmbase").toFile
+    def write(n: Int, body: String): Unit =
+      java.nio.file.Files.write(
+        new java.io.File(dir, s"bench_full_r$n.json").toPath,
+        body.getBytes("UTF-8"))
+    write(5, """{"queries":{"q":1.5},"contended":true}""")
+    write(4, """{"queries":{"q":1.0},"contended":false}""")
+    write(3, """{"queries":{"q":0.9}}""") // pre-stamp format
+    assert(Bench.calmBaselineFile(dir, 5).map(_.getName)
+      === Some("bench_full_r4.json"))
+    // only contended artifacts exist -> None (caller falls back)
+    val dir2 = tempDir("graft_calmbase2").toFile
+    java.nio.file.Files.write(
+      new java.io.File(dir2, "bench_full_r2.json").toPath,
+      """{"queries":{"q":2.0},"contended":true}""".getBytes("UTF-8"))
+    assert(Bench.calmBaselineFile(dir2, 2).isEmpty)
+    // pre-stamp artifacts are trusted as-is
+    java.nio.file.Files.write(
+      new java.io.File(dir2, "bench_full_r1.json").toPath,
+      """{"queries":{"q":1.0}}""".getBytes("UTF-8"))
+    assert(Bench.calmBaselineFile(dir2, 2).map(_.getName)
+      === Some("bench_full_r1.json"))
   }
 }

@@ -6,7 +6,6 @@ import scala.util.hashing.MurmurHash3
 
 import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions._
 
 /** End-to-end reference-pipeline replication on the fixture corpus:
   * ingest → clean → featurize → split → tree → confusion matrix

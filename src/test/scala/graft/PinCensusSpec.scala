@@ -48,8 +48,6 @@ class PinCensusSpec extends AnyFunSuite {
           "released by sealAndRelease"),
       "graft/operators/SpectralPca.scala" -> Seq(
         "the exploded matrix, read by every power iteration"),
-      "graft/operators/Tsne.scala" -> Seq(
-        "the bounded sample, collected and joined back"),
       "graft/sources/FormatRoundtrip.scala" -> Seq(
         "one input for three format writes, so every leg sees the " +
           "same rows"),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.TimestampType
   * shipped, and leaves `nanosAsLong` on the session only for the
   * nanos flavor, whose scan needs it when it executes.
   */
-class TablesEventsSpec extends SparkSuite {
+class TablesEventsSpec extends SparkSuite with TempDirs {
 
   private val key = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -40,7 +40,7 @@ class TablesEventsSpec extends SparkSuite {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
-    val dir = Files.createTempDirectory("graft_nanos_spec")
+    val dir = tempDir("graft_nanos_spec")
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 user_id; " +
         "required int64 ts (TIMESTAMP(NANOS,true)); }")
@@ -55,7 +55,7 @@ class TablesEventsSpec extends SparkSuite {
       writer.write(new SimpleGroupFactory(schema).newGroup()
         .append("user_id", i.toLong).append("ts", n))
     } finally writer.close()
-    try withKeyUnset {
+    withKeyUnset {
       val events = Tables.events(spark, dir.toString)
       assert(events.schema("ts").dataType == TimestampType)
       val micros = events.orderBy(col("user_id"))
@@ -63,11 +63,6 @@ class TablesEventsSpec extends SparkSuite {
       assert(micros == nanos.map(_ / 1000L))
       assert(spark.conf.get(key) == "true",
         "the nanos scan needs the conf when it executes")
-    } finally {
-      val walk = Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally walk.close()
     }
   }
 }

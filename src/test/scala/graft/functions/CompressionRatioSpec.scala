@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 /** The compressibility signal's contract: degenerate repetition sits
   * far below natural prose, near-random strings sit above it, edge

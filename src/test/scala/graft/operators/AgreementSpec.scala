@@ -50,7 +50,6 @@ class AgreementSpec extends SparkSuite {
   test("krippendorffAlpha: perfect agreement reads 1, systematic " +
       "flips read -0.5, the hand-computed 3-rater mix reads 0.375, " +
       "1-rating units and NULL abstentions drop") {
-    import org.apache.spark.sql.functions.col
     val perfect = Seq(("pf", 1L, "a"), ("pf", 1L, "a"),
       ("pf", 2L, "b"), ("pf", 2L, "b"))
     val flip = Seq(("fl", 1L, "a"), ("fl", 1L, "b"),

@@ -9,10 +9,10 @@ class AnomalousCountsSpec extends SparkSuite {
   // 9 calm hours of 10 events + one 100-event spike hour for key "a";
   // key "b" flat. Timestamps at hour h = epoch 3600*h seconds.
   private def events = {
-    val calm = for (h <- 0 until 9; i <- 0 until 10)
+    val calm = for (h <- 0 until 9; _ <- 0 until 10)
       yield ("a", h.toLong * 3600)
     val spike = (0 until 100).map(_ => ("a", 9L * 3600))
-    val flat = for (h <- 0 until 10; i <- 0 until 7)
+    val flat = for (h <- 0 until 10; _ <- 0 until 7)
       yield ("b", h.toLong * 3600)
     (calm ++ spike ++ flat).toDF("k", "sec")
       .select(col("k"), timestamp_seconds(col("sec")).as("ts"))
@@ -28,7 +28,7 @@ class AnomalousCountsSpec extends SparkSuite {
   }
 
   test("a drop below the mean is labeled low") {
-    val drop = ((for (h <- 0 until 9; i <- 0 until 50)
+    val drop = ((for (h <- 0 until 9; _ <- 0 until 50)
       yield ("a", h.toLong * 3600)) ++ Seq(("a", 9L * 3600)))
       .toDF("k", "sec")
       .select(col("k"), timestamp_seconds(col("sec")).as("ts"))

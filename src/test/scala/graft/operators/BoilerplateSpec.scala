@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 /** Boilerplate: tiling edges (trailing partial block, single-block
   * doc), df thresholding, ordered reassembly, and the all-boilerplate

@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import org.apache.spark.sql.functions._
 
-class BpeTokenizerSpec extends SparkSuite {
+class BpeTokenizerSpec extends SparkSuite with TempDirs {
   import spark.implicits._
 
   // The canonical Sennrich toy corpus: {low×5, lower×2, newest×6,
@@ -125,7 +125,7 @@ class BpeTokenizerSpec extends SparkSuite {
   test("writeMerges/segmentFromStore round-trips the live segment " +
       "(VERDICT r17 #4: the persisted tokenizer artifact)") {
     val ledger = BpeTokenizer.trainLedger(corpus, "text", nMerges = 4)
-    val dir = java.nio.file.Files.createTempDirectory("bpe_store").toString
+    val dir = tempDir("bpe_store").toString
     BpeTokenizer.writeMerges(spark, ledger, dir)
     // the reload preserves learned order and the audit columns
     assert(BpeTokenizer.readMerges(spark, dir) === ledger)

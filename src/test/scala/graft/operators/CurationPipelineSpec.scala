@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 class CurationPipelineSpec extends SparkSuite {
   import spark.implicits._

@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 
 /** Min-label propagation over duplicate pairs. */
-class DedupGroupsSpec extends SparkSuite {
+class DedupGroupsSpec extends SparkSuite with TempDirs {
   import spark.implicits._
 
   test("connected components label every node with its group minimum") {
@@ -90,8 +90,7 @@ class DedupGroupsSpec extends SparkSuite {
     // (b) pull a new near-dup of an already-assigned doc onto that
     // doc's side instead of re-drawing it independently
     val docs = (1L to 30L).map(i => (i, s"doc$i")).toDF("doc_id", "text")
-    val root = java.nio.file.Files
-      .createTempDirectory("leak_store").toString
+    val root = tempDir("leak_store").toString
     // batch 0: groups {3,7} and {12,13}
     Seq((3L, 7L), (12L, 13L)).toDF("id_a", "id_b")
       .write.mode("overwrite").parquet(s"$root/batch=0")

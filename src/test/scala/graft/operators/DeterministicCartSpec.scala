@@ -163,7 +163,6 @@ class DeterministicCartSpec extends SparkSuite {
         budget: Long): (Seq[(Double, Double, Long)], String) = {
       spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
       try {
-        val q = graft.SparkEntry.queries("q_confusion")
         // replicate the query but force a layout on the input; the
         // registered query reads parquet directly, so instead rebuild
         // the chain on a re-laid-out documents frame

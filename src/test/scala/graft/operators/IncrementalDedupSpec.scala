@@ -1,12 +1,12 @@
 package graft.operators
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import org.apache.spark.sql.functions._
 
 /** Incremental MinHash dedup: must equal the full pair list filtered
   * to batch-touching pairs, and never emit an old×old pair.
   */
-class IncrementalDedupSpec extends SparkSuite {
+class IncrementalDedupSpec extends SparkSuite with TempDirs {
   import spark.implicits._
 
   // Small corpus with planted near-dups across and within the batch
@@ -78,7 +78,7 @@ class IncrementalDedupSpec extends SparkSuite {
     val batch2Ids = all.select($"doc_id").where(pmod($"doc_id", lit(5L)) === 0)
     val corpus1 = all.where(pmod($"doc_id", lit(5L)) =!= 0)
 
-    val dir = java.nio.file.Files.createTempDirectory("sigstore").toString
+    val dir = tempDir("sigstore").toString
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
 

@@ -4,10 +4,9 @@ import graft.{SparkSuite, Tables}
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.functions._
 
-/** The stubbed multimodal kernels' REAL contracts: batch shape,
-  * output schema, determinism, and downstream compatibility with the
-  * Similarity operators (the stubs are deterministic fakes; the
-  * plumbing is production-shaped — see Multimodal scaladoc).
+/** The stubbed decoder's REAL contract: batch shape and output
+  * schema (the stub is a deterministic fake; the plumbing is
+  * production-shaped — see Multimodal scaladoc).
   */
 class MultimodalSpec extends SparkSuite {
 
@@ -15,23 +14,7 @@ class MultimodalSpec extends SparkSuite {
     Multimodal.withPayload(
       Tables.documents(spark, "/root/testdata/sf0.001"), "doc_id", "text")
 
-  test("extractFeatures: fixed-dim L1-normalized vectors, layout-independent") {
-    val p = payloads()
-    val feats = Multimodal.extractFeatures(p, batchSize = 7)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(feats.nonEmpty)
-    feats.values.foreach { v =>
-      assert(v.length == 16)
-      assert(math.abs(v.sum - 1.0f) < 1e-3, s"not L1-normalized: ${v.sum}")
-      assert(v.forall(x => x >= 0f && !x.isNaN))
-    }
-    // batch size and partitioning must not change the vectors
-    val feats2 = Multimodal.extractFeatures(p.repartition(5), batchSize = 64)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(feats == feats2)
-  }
-
-  test("decodeMeta and extractFeatures tolerate null payloads") {
+  test("decodeMeta tolerates null payloads") {
     val withNull = payloads().limit(3)
       .withColumn("payload",
         when(col("id") === 0L, lit(null).cast("binary"))
@@ -40,38 +23,5 @@ class MultimodalSpec extends SparkSuite {
     assert(meta.length == 3)
     assert(meta.find(_.getLong(0) == 0L).get.getLong(1) == 0L,
       "null payload decodes as zero-length")
-    val feats = Multimodal.extractFeatures(withNull)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(feats(0L).forall(x => x == 0f), "null payload → zero histogram")
-    assert(feats.size == 3)
-  }
-
-  test("extracted features feed the Similarity operators unchanged") {
-    val feats = Multimodal.extractFeatures(payloads())
-      .withColumnRenamed("id", "vec_id")
-      .withColumnRenamed("features", "embedding")
-    val top = Similarity.bruteForceTopK(
-      feats.filter(col("vec_id") < 3), feats, "vec_id", "embedding", 2)
-    assert(top.count() == 6, "3 queries x top-2")
-  }
-
-  test("resizeStub bounds the payload by the target budget, deterministically") {
-    val out = Multimodal.resizeStub(payloads(), 64, 64)
-    val rows = out.select(col("id"), octet_length(col("payload")),
-        col("width"), col("height"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
-    assert(rows.nonEmpty)
-    val budget = 64L * 64 / 1024 + 1
-    rows.foreach { case (_, n, w, h) =>
-      assert(n <= budget, s"payload $n exceeds budget $budget")
-      assert(w == 64 && h == 64)
-    }
-    // prefix determinism: resizing twice gives identical bytes
-    val a = out.select("id", "payload").collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    val b = Multimodal.resizeStub(payloads().repartition(3), 64, 64)
-      .select("id", "payload").collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(a == b)
   }
 }

@@ -655,7 +655,7 @@ class NonParametricSpec extends SparkSuite {
     assert(out("down").getLong(5) === -out("up").getLong(5))
     assert(out("mix").getLong(5) === 0L, s"mix: ${out("mix")}")
     // gapped order values weigh by dense rank, not raw value
-    val gapped = up.map { case (p, b, o, x) => ("g", b, o * 50, x) }
+    val gapped = up.map { case (_, b, o, x) => ("g", b, o * 50, x) }
     val g = NonParametric.pageTrend(
         gapped.toDF("p", "b", "o", "x"), "p", "b", "o", "x")
       .collect().head

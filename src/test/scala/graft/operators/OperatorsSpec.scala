@@ -148,18 +148,6 @@ class OperatorsSpec extends SparkSuite {
       exact(0).getAs[Double]("jaccard"))
   }
 
-  test("VectorOps.sliceOutTerms drops the named vocab slots (P4 intent)") {
-    val cv = new TrimmedCountVectorizer()
-      .setInputCol("tokens").setOutputCol("v").fit(corpus)
-    val sliced = VectorOps.sliceOutTerms(
-      cv.vocabulary, Set("apple"), "v", "v2")
-    val out = sliced.transform(cv.transform(corpus))
-      .filter($"id" === 0L).select($"v2").head().getAs[Vector](0)
-    // vocabulary = apple,banana,cherry,durian → kept banana,cherry,durian
-    assert(out.size == 3)
-    assert(out(0) == 1.0) // banana count of doc 0
-  }
-
   test("Similarity: brute-force top-k finds the aligned vector") {
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f)),

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 /** Integer-lattice PageRank: structural sanity on known graphs and
   * bit-level determinism under repartitioning.

@@ -1,8 +1,6 @@
 package graft.operators
 
-import java.nio.file.Files
-
-import graft.{OkCupidPipeline, SparkSuite}
+import graft.{OkCupidPipeline, SparkSuite, TempDirs}
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.linalg.Vectors
@@ -13,11 +11,11 @@ import org.apache.spark.ml.linalg.Vectors
   * maps to Spark ML persistence, which round-1 judging found broken
   * for the custom stages (no MLWritable).
   */
-class PipelinePersistenceSpec extends SparkSuite {
+class PipelinePersistenceSpec extends SparkSuite with TempDirs {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("graft_persist").resolve(name).toString
+    tempDir("graft_persist").resolve(name).toString
 
   test("fitted OkCupid feature pipeline round-trips with identical vectors") {
     val essays = OkCupidPipeline.withEssays(

@@ -81,7 +81,6 @@ class RobustStatsSpec extends SparkSuite {
   test("null handling matches the aggregate+inner-join form: null " +
       "values skipped, an all-null group keeps null bounds, a null " +
       "group key drops") {
-    import org.apache.spark.sql.functions._
     val rows: Seq[(String, java.lang.Double)] =
       (1 to 9).map(i => ("g", java.lang.Double.valueOf(i.toDouble))) ++
         Seq(("g", null: java.lang.Double),

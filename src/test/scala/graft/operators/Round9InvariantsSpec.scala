@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 /** Seeded-random structural invariants for the round's operators —
   * the properties that must hold for ANY input, checked over several

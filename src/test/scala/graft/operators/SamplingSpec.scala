@@ -1,50 +1,9 @@
 package graft.operators
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 class SamplingSpec extends SparkSuite {
   import spark.implicits._
-
-  private lazy val ids = spark.range(0, 20000).toDF("id")
-
-  test("sampleByHash: deterministic and partitioning-independent") {
-    val a = Sampling.sampleByHash(ids, "id", 0.3)
-      .select("id").as[Long].collect().sorted.toSeq
-    val b = Sampling.sampleByHash(ids.repartition(13), "id", 0.3)
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(a == b)
-    // hash-uniform: within ±2% absolute of the target on 20k ids
-    assert(math.abs(a.size / 20000.0 - 0.3) < 0.02, s"got ${a.size}")
-  }
-
-  test("complementByHash: exact partition of the input") {
-    val s = Sampling.sampleByHash(ids, "id", 0.25)
-      .select("id").as[Long].collect().toSet
-    val c = Sampling.complementByHash(ids, "id", 0.25)
-      .select("id").as[Long].collect().toSet
-    assert(s.intersect(c).isEmpty)
-    assert(s.size + c.size == 20000)
-  }
-
-  test("withFold: k disjoint covering folds, roughly balanced") {
-    val sizes = Sampling.withFold(ids, "id", k = 5)
-      .groupBy("fold").count()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(sizes.keySet == Set(0L, 1L, 2L, 3L, 4L))
-    assert(sizes.values.sum == 20000L)
-    sizes.values.foreach(n => assert(math.abs(n - 4000L) < 400L, sizes))
-  }
-
-  test("seed changes the draw, fraction 0 and 1 are empty/full") {
-    val s0 = Sampling.sampleByHash(ids, "id", 0.5, seed = 1L)
-      .select("id").as[Long].collect().toSet
-    val s1 = Sampling.sampleByHash(ids, "id", 0.5, seed = 2L)
-      .select("id").as[Long].collect().toSet
-    assert(s0 != s1)
-    assert(Sampling.sampleByHash(ids, "id", 0.0).count() == 0L)
-    assert(Sampling.sampleByHash(ids, "id", 1.0).count() == 20000L)
-  }
 
   test("weightedSample: heavier rows win more often; k and " +
       "determinism hold") {

@@ -195,17 +195,12 @@ class SimilaritySpec extends SparkSuite {
     val queries = corpus.filter($"vec_id" < 24)
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
-    val dir = java.nio.file.Files.createTempDirectory("golden-ivf")
     try {
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", 16,
-        dir.toString)
       def run(): Map[String, (Int, Int)] = Map(
         "bruteForceTopK" -> pinned(Similarity.bruteForceTopK(
           queries, corpus, "vec_id", "embedding", 5)),
         "hardNegatives" -> pinned(Similarity.hardNegatives(
           queries, corpus, "vec_id", "embedding", "label", 5)),
-        "euclideanKnn" -> pinned(Similarity.euclideanKnn(
-          corpus, "vec_id", "embedding", 3)),
         "euclideanTopK" -> pinned(Similarity.euclideanTopK(
           queries, corpus, "vec_id", "embedding", 5)),
         "cellBlockedTopK/8" -> pinned(Similarity.cellBlockedTopK(
@@ -217,19 +212,15 @@ class SimilaritySpec extends SparkSuite {
           tables = 8)),
         "ivfTopKSampledCodebook" -> pinned(
           Similarity.ivfTopKSampledCodebook(
-            queries, corpus, "vec_id", "embedding", 5, nprobe = 4)),
-        "ivfTopKFromIndex" -> pinned(Similarity.ivfTopKFromIndex(
-          queries, "vec_id", "embedding", 5, 4, dir.toString)))
+            queries, corpus, "vec_id", "embedding", 5, nprobe = 4)))
       val golden = Map(
         "bruteForceTopK" -> (120, 1626392213),
         "hardNegatives" -> (120, 87072208),
-        "euclideanKnn" -> (600, 484704010),
         "euclideanTopK" -> (120, -1819085480),
         "cellBlockedTopK/8" -> (600, -1234326609),
         "cellBlockedTopK/derived" -> (596, 843713359),
         "lshTopK" -> (120, 231692862),
-        "ivfTopKSampledCodebook" -> (120, 1687499030),
-        "ivfTopKFromIndex" -> (120, 1687499030))
+        "ivfTopKSampledCodebook" -> (120, 1687499030))
       // the fixture does tie: some query has two neighbors at one
       // rounded cosine, so the neighbor-id tie-break is exercised
       assert(Similarity.bruteForceTopK(
@@ -241,10 +232,7 @@ class SimilaritySpec extends SparkSuite {
         val got = run()
         assert(got == golden, s"width $w: $got")
       }
-    } finally {
-      spark.conf.set(key, saved)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-    }
+    } finally spark.conf.set(key, saved)
   }
 
   test("derivedNlist pins expected cell population at any corpus " +

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 /** Snapshot diff: the four statuses, null-content handling, and
   * multi-column fingerprint sensitivity.

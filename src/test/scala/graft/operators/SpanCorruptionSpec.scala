@@ -39,7 +39,7 @@ class SpanCorruptionSpec extends SparkSuite {
       (i, (0 until 40).map(j => s"t$j").mkString(" ")))
       .toDF("doc_id", "text")
     var sawMask = false
-    rows(docs).foreach { case (id, nTok, nMasked, inputs, targets) =>
+    rows(docs).foreach { case (id, nTok, nMasked, inputs, _) =>
       assert(nTok === 40L)
       val sents = "<extra_id_(\\d+)>".r.findAllMatchIn(inputs)
         .map(_.group(1).toInt).toSeq

@@ -53,114 +53,6 @@ class TsneSpec extends SparkSuite {
     assert(a.flatten.toSeq == b.flatten.toSeq)
   }
 
-  test("kNN-graph path: clusters preserved at a 10x sample bound") {
-    import spark.implicits._
-    // 10× the dense test's 120 points: 3 blobs × 400, shipped as a
-    // DataFrame — the kNN input stage runs through the distributed
-    // ANN operator; the driver only ever sees ids and graph edges.
-    val rnd = new java.util.Random(5L)
-    val centers = Array(
-      Array.fill(10)(0.0),
-      Array.tabulate(10)(d => if (d < 5) 25.0 else 0.0),
-      Array.tabulate(10)(d => if (d >= 5) 25.0 else 0.0))
-    val rows = for (c <- centers.indices; i <- 0 until 400) yield
-      (c * 400L + i, c, centers(c).map(_ + rnd.nextGaussian()).toSeq)
-    val df = rows.toDF("id", "cluster", "v")
-
-    val out = Tsne.embedKnnSampled(df, "id", "v", maxRows = 1200,
-      perplexity = 15, iterations = 300)
-    val y = out.select($"id", $"tsne_x", $"tsne_y")
-      .as[(Long, Double, Double)].collect()
-      .map { case (id, a, b) => id -> Array(a, b) }.toMap
-    assert(y.size == 1200)
-
-    val byC = rows.groupBy(_._2)
-    val cent = byC.map { case (c, rs) =>
-      c -> Array(
-        rs.map(r => y(r._1)(0)).sum / rs.size,
-        rs.map(r => y(r._1)(1)).sum / rs.size)
-    }
-    def dist(a: Array[Double], b: Array[Double]) =
-      math.hypot(a(0) - b(0), a(1) - b(1))
-    val radius = byC.map { case (c, rs) =>
-      c -> rs.map(r => dist(y(r._1), cent(c))).sum / rs.size
-    }
-    val maxR = radius.values.max
-    val minSep = (for {
-      a <- cent.keys; b <- cent.keys if a < b
-    } yield dist(cent(a), cent(b))).min
-    assert(minSep > 2 * maxR,
-      s"clusters overlap: min centroid sep $minSep vs max radius $maxR")
-  }
-
-  test("Barnes-Hut solver: clusters preserved at 3000 points, theta=0.5") {
-    import spark.implicits._
-    val rnd = new java.util.Random(9L)
-    val centers = Array(
-      Array.fill(10)(0.0),
-      Array.tabulate(10)(d => if (d < 5) 25.0 else 0.0),
-      Array.tabulate(10)(d => if (d >= 5) 25.0 else 0.0))
-    val rows = for (c <- centers.indices; i <- 0 until 1000) yield
-      (c * 1000L + i, c, centers(c).map(_ + rnd.nextGaussian()).toSeq)
-    val df = rows.toDF("id", "cluster", "v")
-
-    val out = Tsne.embedKnnSampled(df, "id", "v", maxRows = 3000,
-      perplexity = 15, iterations = 300, theta = 0.5)
-    val y = out.select($"id", $"tsne_x", $"tsne_y")
-      .as[(Long, Double, Double)].collect()
-      .map { case (id, a, b) => id -> Array(a, b) }.toMap
-    assert(y.size == 3000)
-
-    val byC = rows.groupBy(_._2)
-    val cent = byC.map { case (c, rs) =>
-      c -> Array(
-        rs.map(r => y(r._1)(0)).sum / rs.size,
-        rs.map(r => y(r._1)(1)).sum / rs.size)
-    }
-    def dist(a: Array[Double], b: Array[Double]) =
-      math.hypot(a(0) - b(0), a(1) - b(1))
-    val radius = byC.map { case (c, rs) =>
-      c -> rs.map(r => dist(y(r._1), cent(c))).sum / rs.size
-    }
-    val maxR = radius.values.max
-    val minSep = (for {
-      a <- cent.keys; b <- cent.keys if a < b
-    } yield dist(cent(a), cent(b))).min
-    assert(minSep > 2 * maxR,
-      s"clusters overlap: min centroid sep $minSep vs max radius $maxR")
-  }
-
-  test("Barnes-Hut solver is deterministic for a fixed seed") {
-    import spark.implicits._
-    val df = spark.range(0, 300)
-      .select($"id", org.apache.spark.sql.functions.array(
-        ($"id" % 17).cast("double"), ($"id" % 13).cast("double"),
-        ($"id" % 5).cast("double")).as("v"))
-    val a = Tsne.embedKnnSampled(df, "id", "v", maxRows = 200,
-      perplexity = 8, iterations = 80, theta = 0.5)
-      .orderBy("id").collect().map(_.toSeq)
-    val b = Tsne.embedKnnSampled(df.repartition(7), "id", "v",
-      maxRows = 200, perplexity = 8, iterations = 80, theta = 0.5)
-      .orderBy("id").collect().map(_.toSeq)
-    assert(a.toSeq == b.toSeq)
-  }
-
-  test("kNN-graph path is deterministic across partitionings") {
-    import spark.implicits._
-    val df = spark.range(0, 200)
-      .select($"id", org.apache.spark.sql.functions.array(
-        ($"id" % 7).cast("double"), ($"id" % 13).cast("double"),
-        ($"id" % 3).cast("double")).as("v"))
-    val a = Tsne.embedKnnSampled(df, "id", "v", maxRows = 100,
-      perplexity = 8, iterations = 60)
-      .orderBy("id").collect().map(_.toSeq)
-    val b = Tsne.embedKnnSampled(df.repartition(17), "id", "v",
-      maxRows = 100, perplexity = 8, iterations = 60)
-      .orderBy("id").collect().map(_.toSeq)
-    assert(a.toSeq == b.toSeq,
-      "same sample, edges, and embedding regardless of layout")
-  }
-
   test("embedSampled bounds the collect and keeps the smallest hashes") {
     import spark.implicits._
     val df = spark.range(0, 1000)

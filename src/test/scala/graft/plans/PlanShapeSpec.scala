@@ -420,7 +420,6 @@ class PlanShapeSpec extends SparkSuite {
     // assignCellsTo. Their checkpointed query plans truncate lineage,
     // so gate the generator itself: its single broadcast build side
     // must be the GlobalLimit-nlist codebook, never the corpus scan.
-    import org.apache.spark.sql.functions.col
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val assigned = graft.operators.Similarity
       .assignCellsTo(emb, "vec_id", "embedding",

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import graft.operators.StorageLayout
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * rows, and the non-bucketed control must show the exchanges the
   * bucketed plan elides.
   */
-class BucketedTablesSpec extends SparkSuite {
+class BucketedTablesSpec extends SparkSuite with TempDirs {
   import spark.implicits._
 
   private def withSmjOnly[A](body: => A): A = {
@@ -22,7 +22,7 @@ class BucketedTablesSpec extends SparkSuite {
   }
 
   test("same-bucket-count join plans no exchange; control does") {
-    val root = java.nio.file.Files.createTempDirectory("buckets").toString
+    val root = tempDir("buckets").toString
     val orders = (0 until 400)
       .map(i => (i.toLong, i.toLong % 50, i * 10.0))
       .toDF("o_id", "cust", "price")
@@ -54,7 +54,7 @@ class BucketedTablesSpec extends SparkSuite {
 
   test("aggregation on the bucket key also skips the exchange") {
     if (!spark.catalog.tableExists("b_orders")) {
-      val root = java.nio.file.Files.createTempDirectory("buckets3").toString
+      val root = tempDir("buckets3").toString
       val orders = (0 until 400)
         .map(i => (i.toLong, i.toLong % 50, i * 10.0))
         .toDF("o_id", "cust", "price")

@@ -1,9 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.functions._
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 
-class FormatRoundtripSpec extends SparkSuite {
+class FormatRoundtripSpec extends SparkSuite with TempDirs {
   import spark.implicits._
 
   test("hostile strings (commas, quotes, newlines, unicode) survive " +
@@ -15,8 +14,7 @@ class FormatRoundtripSpec extends SparkSuite {
       (4L, "line\nbreak inside", "de"),
       (5L, "unicode café 中文", "zh"))
       .toDF("id", "text", "lang")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_fmt_spec").toString
+    val base = tempDir("graft_fmt_spec").toString
     val out = FormatRoundtrip.roundtripFingerprints(
         spark, df, base, Seq("id", "text", "lang"))
       .collect().map(r => r.getString(0) ->

@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
-
-import graft.{SparkSuite, Tables}
+import graft.{SparkSuite, Tables, TempDirs}
 import org.apache.spark.sql.DataFrame
 
 /** Ingest round-trips beyond parquet/CSV: write the documents table to
@@ -14,7 +12,7 @@ import org.apache.spark.sql.DataFrame
   * the JSON writer must escape what the CSV path needed multiLine
   * options for).
   */
-class IngestFormatsSpec extends SparkSuite {
+class IngestFormatsSpec extends SparkSuite with TempDirs {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -32,7 +30,7 @@ class IngestFormatsSpec extends SparkSuite {
     val expectedCount = docs.count()
     val expectedTop = topWords(docs)
 
-    val base = Files.createTempDirectory("graft_ingest").toString
+    val base = tempDir("graft_ingest").toString
     docs.write.mode("overwrite").orc(s"$base/docs_orc")
     docs.write.mode("overwrite").json(s"$base/docs_json")
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{SparkSuite, Tables}
+import graft.{SparkSuite, Tables, TempDirs}
 import org.apache.spark.sql.functions._
 
 /** Partition-pruning demonstration: documents written
@@ -9,11 +9,10 @@ import org.apache.spark.sql.functions._
   * This is the layout a 100 TB corpus would use for
   * routing/per-language processing.
   */
-class PartitionedSourceSpec extends SparkSuite {
+class PartitionedSourceSpec extends SparkSuite with TempDirs {
 
   test("lang-partitioned parquet prunes partitions on read") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     docs.write.mode("overwrite").partitionBy("lang").parquet(dir)
 
@@ -31,8 +30,7 @@ class PartitionedSourceSpec extends SparkSuite {
   }
 
   test("bucketed write co-locates join keys (bucket pruning metadata)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bucket").toString
+    val dir = tempDir("graft_bucket").toString
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     docs.write.mode("overwrite")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import org.apache.spark.sql.functions._
 
 /** The training-shard sink's contract: every shard respects the row
@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   * sequential dataloader relies on), the manifest accounts for every
   * row, and the data round-trips exactly.
   */
-class ShardedWriteSpec extends SparkSuite {
+class ShardedWriteSpec extends SparkSuite with TempDirs {
   import spark.implicits._
 
   test("row bound, disjoint id ranges, complete manifest, round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
+    val dir = tempDir("shards").toString
     val df = spark.range(0, 1000)
       .select($"id", concat(lit("doc"), $"id").as("text"))
     val manifest = ShardedWrite
@@ -39,66 +39,8 @@ class ShardedWriteSpec extends SparkSuite {
     assert(spark.read.parquet(s"$dir/data").count() == 1000L)
   }
 
-  test("readRange prunes to the manifest's intersecting shards and " +
-      "matches a full-scan filter exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("shards_rr").toString
-    val df = spark.range(0, 1000)
-      .select($"id", concat(lit("doc"), $"id").as("text"))
-    ShardedWrite.writeSharded(df, dir, "id", rowsPerShard = 100,
-      targetTasks = 4)
-
-    // a narrow slice must open a strict subset of shards
-    val (files, total) = ShardedWrite.pruneShards(spark, dir, 250L, 310L)
-    assert(total >= 10L, s"expected ≥10 shards, got $total")
-    assert(files.nonEmpty && files.length <= 2,
-      s"61-id slice over 100-row shards should touch ≤2 files, " +
-        s"got ${files.length} of $total")
-
-    val pruned = ShardedWrite.readRange(spark, dir, "id", 250L, 310L)
-      .orderBy("id").as[(Long, String)].collect().toSeq
-    val full = spark.read.parquet(s"$dir/data")
-      .filter($"id".between(250L, 310L))
-      .orderBy("id").as[(Long, String)].collect().toSeq
-    assert(pruned === full)
-    assert(pruned.length === 61)
-
-    // an out-of-range slice reads nothing (and doesn't error)
-    assert(ShardedWrite.readRange(spark, dir, "id", 5000L, 6000L)
-      .count() === 0L)
-  }
-
-  test("pruneShards passes legacy absolute-URI manifest entries " +
-      "through unmodified") {
-    // ADVICE r16: manifests written before the basename format hold
-    // the absolute URIs input_file_name() returned; unconditionally
-    // prepending outDir/data/ resolved those to garbage
-    // (outDir/data/file:///...). Entries that already contain '/'
-    // must pass through untouched; basenames still resolve locally.
-    val dir = java.nio.file.Files.createTempDirectory("shards_legacy")
-      .toString
-    ShardedWrite.writeSharded(
-      spark.range(0, 100).select($"id", ($"id" % 3).as("v")),
-      dir, "id", rowsPerShard = 50, targetTasks = 2)
-    // rewrite the manifest in the legacy absolute format: resolve
-    // today's basenames against the data dir, as the old writer did
-    val legacy = spark.read.parquet(s"$dir/_manifest")
-      .withColumn("shard", concat(lit(s"file:$dir/data/"), $"shard"))
-    val tmp = java.nio.file.Files.createTempDirectory("m_legacy").toString
-    legacy.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite")
-      .parquet(s"$dir/_manifest")
-    val (files, _) = ShardedWrite.pruneShards(spark, dir, 0L, 99L)
-    assert(files.nonEmpty)
-    assert(files.forall(_.startsWith(s"file:$dir/data/")),
-      s"legacy URIs must not be re-prefixed: $files")
-    // and they still OPEN: the range read over the legacy manifest
-    // returns the full id range
-    assert(ShardedWrite.readRange(spark, dir, "id", 0L, 99L)
-      .count() === 100L)
-  }
-
   test("overwrite is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("shards2").toString
+    val dir = tempDir("shards2").toString
     val df = spark.range(0, 200).select($"id", ($"id" % 7).as("v"))
     val m1 = ShardedWrite.writeSharded(df, dir, "id", 50, targetTasks = 2)
       .as[(String, Long, Long, Long)].collect().map(t => (t._2, t._3, t._4)).toSet

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import org.apache.spark.sql.functions._
 
 /** Z-order layout: the Morton expression matches a reference bit
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * single-column sort leaves the second key spanning its full domain
   * in every file (no skipping possible).
   */
-class ZOrderLayoutSpec extends SparkSuite {
+class ZOrderLayoutSpec extends SparkSuite with TempDirs {
   import spark.implicits._
 
   private def mortonRef(a: Long, b: Long, bits: Int): Long =
@@ -57,11 +57,11 @@ class ZOrderLayoutSpec extends SparkSuite {
       spans
     }
 
-    val zDir = java.nio.file.Files.createTempDirectory("zord").toString
+    val zDir = tempDir("zord").toString
     ZOrderLayout.writeZOrdered(df, $"a", $"b", 6, nFiles, zDir)
     val (za, zb) = perFileSpan(zDir)
 
-    val sDir = java.nio.file.Files.createTempDirectory("sorted").toString
+    val sDir = tempDir("sorted").toString
     df.repartitionByRange(nFiles, $"a").sortWithinPartitions($"a")
       .write.mode("overwrite").parquet(sDir)
     val (sa, sb) = perFileSpan(sDir)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -13,12 +13,11 @@ import org.apache.spark.sql.streaming.OutputMode
   * restarts, which is what makes the foreachBatch parquet sinks —
   * classify, percolate, dedupIngest — exactly-once per batch.)
   */
-class CheckpointRestartSpec extends SparkSuite {
+class CheckpointRestartSpec extends SparkSuite with TempDirs {
 
   test("restart from checkpoint resumes without duplicates or holes") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ckpt").toString
+    val root = tempDir("graft_ckpt").toString
     val in = s"$root/in"
     val out = s"$root/out"
     val ckpt = s"$root/ckpt"
@@ -68,8 +67,7 @@ class CheckpointRestartSpec extends SparkSuite {
     // test exercises. Sink is foreachBatch→parquet (the memory sink
     // refuses checkpoint recovery by design).
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_state_ckpt").toString
+    val root = tempDir("graft_state_ckpt").toString
 
     // wave B is strictly later than wave A per key (the operator's
     // batch-monotonic input contract), values chosen so every fold

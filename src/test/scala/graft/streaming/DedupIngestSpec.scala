@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * intra-batch pairs on arrival, prior pairs never re-emitted — and
   * leave the stores equal to a full recompute's view of the world.
   */
-class DedupIngestSpec extends SparkSuite {
+class DedupIngestSpec extends SparkSuite with TempDirs {
   import spark.implicits._
 
   // Same planted shape as IncrementalDedupSpec: (1,2) near-dups
@@ -31,7 +31,7 @@ class DedupIngestSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val root = java.nio.file.Files.createTempDirectory("ingest").toString
+    val root = tempDir("ingest").toString
     val (corpusDir, storeDir, pairsDir) =
       (s"$root/corpus", s"$root/store", s"$root/pairs")
 
@@ -100,7 +100,7 @@ class DedupIngestSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val root = java.nio.file.Files.createTempDirectory("ingest_orph").toString
+    val root = tempDir("ingest_orph").toString
     val (corpusDir, storeDir, pairsDir) =
       (s"$root/corpus", s"$root/store", s"$root/pairs")
 
@@ -165,7 +165,7 @@ class DedupIngestSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val root = java.nio.file.Files.createTempDirectory("ingest_part").toString
+    val root = tempDir("ingest_part").toString
     val (corpusDir, storeDir, pairsDir) =
       (s"$root/corpus", s"$root/store", s"$root/pairs")
 
@@ -237,8 +237,7 @@ class DedupIngestSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val root =
-      java.nio.file.Files.createTempDirectory("ingest_nosucc").toString
+    val root = tempDir("ingest_nosucc").toString
     val (corpusDir, storeDir, pairsDir) =
       (s"$root/corpus", s"$root/store", s"$root/pairs")
 

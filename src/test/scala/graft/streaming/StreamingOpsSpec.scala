@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,7 +11,7 @@ import org.apache.spark.sql.functions._
   * floor it to exactly 1800.000 s and miss the break (the round-1
   * latent bug, VERDICT r1 "What's wrong #2").
   */
-class StreamingOpsSpec extends SparkSuite {
+class StreamingOpsSpec extends SparkSuite with TempDirs {
 
   /** Write an events parquet whose ts column is a LONG of epoch nanos —
     * the same shape `StreamingOps.replayEvents` handles for the driver's
@@ -22,7 +20,7 @@ class StreamingOpsSpec extends SparkSuite {
     */
   private def writeEvents(rows: Seq[(Long, Long)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_stream_spec").toString
+    val dir = tempDir("graft_stream_spec").toString
     rows.toDF("user_id", "us")
       .select(col("user_id"), (col("us") * 1000L).as("ts"))
       .coalesce(1)
@@ -388,10 +386,10 @@ class StreamingOpsSpec extends SparkSuite {
       (14L, "pills pills pills"),
       (15L, "entirely novel vocabulary here")
     ).toDF("doc_id", "text")
-    val inDir = Files.createTempDirectory("graft_nb_in").toString
+    val inDir = tempDir("graft_nb_in").toString
     // three files → three micro-batches under maxFilesPerTrigger=1
     docs.repartition(3).write.mode("overwrite").parquet(inDir)
-    val outDir = Files.createTempDirectory("graft_nb_out").toString
+    val outDir = tempDir("graft_nb_out").toString
 
     val streamed = graft.streaming.StreamingOps
       .classifiedDocStream(spark, inDir, model, outDir,

@@ -1,17 +1,16 @@
 package graft.streaming
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** windowTypeTopK: the streamed windowed counts plus the stateless
   * rank projection equal the hand-computed per-hour board.
   */
-class WindowTopKSpec extends SparkSuite {
+class WindowTopKSpec extends SparkSuite with TempDirs {
   import spark.implicits._
 
   private def writeEvents(rows: Seq[(Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("graft_topk_spec").toString
+    val dir = tempDir("graft_topk_spec").toString
     rows.toDF("us", "event_type", "value")
       .select((col("us") * 1000L).as("ts"), col("event_type"),
         col("value"))
