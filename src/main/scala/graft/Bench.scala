@@ -869,7 +869,7 @@ object Bench {
       if (!witnessResults.exists { case (n, t) => n == "q_ann_ivf_scale" &&
           t.isDefined }) Nil
       else try {
-        val r = SparkEntry.queries("q_ann_ivf_scale")(spark, sfDir).head
+        val r = SparkEntry.queries("q_ann_ivf_scale")(spark, sfDir).head()
         clearCaches()
         Seq("n_corpus" -> r.getLong(0).toDouble,
           "nlist" -> r.getLong(1).toDouble,
@@ -895,7 +895,7 @@ object Bench {
       else try {
         val nDocs = 8L * graft.Tables.documents(spark, sfDir).count()
         val l = graft.queries.ExtensionQueries
-          .dedupScaleCandidateLedger(spark, sfDir).head
+          .dedupScaleCandidateLedger(spark, sfDir).head()
         clearCaches()
         Seq("n_docs" -> nDocs.toDouble,
           "all_pairs_bound" -> (nDocs * (nDocs - 1L) / 2L).toDouble,
@@ -914,7 +914,7 @@ object Bench {
       if (!witnessResults.exists { case (n, t) =>
           n == "q_cc_diameter_scale" && t.isDefined }) Nil
       else try {
-        val r = SparkEntry.queries("q_cc_diameter_scale")(spark, sfDir).head
+        val r = SparkEntry.queries("q_cc_diameter_scale")(spark, sfDir).head()
         clearCaches()
         Seq("n_nodes" -> r.getLong(0).toDouble,
           "diameter" -> (r.getLong(0) - 1L).toDouble,

@@ -15,7 +15,9 @@ object GraftFunctions {
   type Builder = Seq[Expression] => Expression
 
   private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, usage, "")
+    // (className, db, name, usage, arguments, examples, note, group,
+    // since, deprecated, source): all optional fields empty
+    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "")
 
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v

@@ -7,6 +7,12 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+/** A [[BpeApplyMerges]] heap entry: a candidate merge of `l` and `r`
+  * at `rank`, starting at `node`. Top-level so a pattern match on it
+  * needs no outer-instance check.
+  */
+private final case class Cand(rank: Int, node: Int, l: String, r: String)
+
 /** Apply a trained BPE merge list to a symbol array — the native
   * tokenization kernel behind [[graft.operators.BpeTokenizer.segment]]
   * (round 19, the apply-side twin of the batched-training fix).
@@ -82,8 +88,6 @@ case class BpeApplyMerges(
     }
     m
   }
-
-  private final case class Cand(rank: Int, node: Int, l: String, r: String)
 
   /** Public row kernel — called from both eval and generated code. */
   def kernel(arr: ArrayData): ArrayData = {

@@ -429,25 +429,33 @@ object Dedup {
       .transform(Par.pin)
     val buckets = minhashBuckets(sh, bands, rowsPerBand)
       .transform(Par.pin)
-    val hot = buckets.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("sz")).filter(col("sz") > maxBucketSize)
-      .select(col("band"), col("key"))
-    val cool = buckets.join(broadcast(hot), Seq("band", "key"), "left_anti")
+    val cands = newCandidatePairs(buckets, newIds, idCol, maxBucketSize)
+    Par.sealAndRelease(
+      verifiedJaccard(cands, sh).filter(col("jaccard") >= minJaccard),
+      sh, buckets)
+  }
+
+  /** The new × all candidate join both incremental operators share:
+    * [[cooledBuckets]] of `buckets`, then the cool rows of the `newIds`
+    * docs joined to every cool row on (band, key), pairs normalized to
+    * `id_a < id_b` — old×old pairs are never generated.
+    */
+  private def newCandidatePairs(
+      buckets: DataFrame, newIds: DataFrame, idCol: String,
+      maxBucketSize: Int): DataFrame = {
+    val (cool, _) = cooledBuckets(buckets, maxBucketSize)
     // No broadcast hint on newIds: a "batch" can be arbitrarily large
     // (a backfill); the semi-join shuffles on id and AQE still
     // broadcasts a genuinely small increment.
     val newSide = cool.join(
       newIds.select(col(idCol).as("id")), Seq("id"), "left_semi")
-    val cands = newSide.as("a")
+    newSide.as("a")
       .join(cool.as("b"),
         col("a.band") === col("b.band") &&
           col("a.key") === col("b.key") && col("a.id") =!= col("b.id"))
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
       .distinct()
-    Par.sealAndRelease(
-      verifiedJaccard(cands, sh).filter(col("jaccard") >= minJaccard),
-      sh, buckets)
   }
 
   /** Store-fed incremental dedup — the deployment shape the
@@ -490,19 +498,7 @@ object Dedup {
     val buckets = store.select(col("id"), col("band"), col("key"))
       .unionByName(nb)
       .transform(Par.pin)
-    val hot = buckets.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("sz")).filter(col("sz") > maxBucketSize)
-      .select(col("band"), col("key"))
-    val cool = buckets.join(broadcast(hot), Seq("band", "key"), "left_anti")
-    val newSide = cool.join(
-      newIds.select(col(idCol).as("id")), Seq("id"), "left_semi")
-    val cands = newSide.as("a")
-      .join(cool.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.key") === col("b.key") && col("a.id") =!= col("b.id"))
-      .select(least(col("a.id"), col("b.id")).as("id_a"),
-        greatest(col("a.id"), col("b.id")).as("id_b"))
-      .distinct()
+    val cands = newCandidatePairs(buckets, newIds, idCol, maxBucketSize)
       // pinned: consumed by the candidate-id semi-join below AND as
       // the verify join's left side; batch-bounded by construction
       .transform(Par.pin)
@@ -1006,10 +1002,7 @@ object Dedup {
       }: _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
       .transform(Par.pin)
-    val hot = banded.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("sz")).filter(col("sz") > maxBucketSize)
-      .select(col("band"), col("key"))
-    val cool = banded.join(broadcast(hot), Seq("band", "key"), "left_anti")
+    val (cool, _) = cooledBuckets(banded, maxBucketSize)
     val pairs = cool.as("a")
       .join(cool.as("b"),
         col("a.band") === col("b.band") &&

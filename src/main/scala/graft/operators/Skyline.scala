@@ -54,6 +54,6 @@ object Skyline {
       .select(col(xCol).as("__fx"), col("__miny"))
     df.join(broadcast(front),
         df(xCol) === col("__fx") && df(yCol) === col("__miny"))
-      .select(df.columns.map(df(_)): _*)
+      .select(df.columns.toIndexedSeq.map(df(_)): _*)
   }
 }

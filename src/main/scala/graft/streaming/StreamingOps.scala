@@ -4,7 +4,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{
+  Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.ScalaReflection
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -138,8 +140,8 @@ case class MkState(
     * the right policy here: all four consumers (MK trend, DF/ADF
     * unit root, dispersion) ask time-local drift questions where a
     * trailing window is the deployment intent anyway. Lives on the
-    * state case class (not the StreamingOps object) so the
-    * mapGroupsWithState closure captures no outer object.
+    * state case class (not the StreamingOps object) so the fold
+    * handed to `foldGroups` captures no outer object.
     */
   def evictOldest(maxStateDays: Int): MkState =
     if (days.size <= maxStateDays) this
@@ -291,9 +293,18 @@ case class CmhObs(group: String, b: Boolean, y: Boolean)
 case class CmhRow(group: String, n: Long, n1: Long, m1: Long, o: Long)
 
 /** Structured Streaming operators over the events table: watermarked
-  * tumbling-window aggregation and stateful sessionization via
-  * `mapGroupsWithState`. The reference has no streaming (SURVEY §2.10);
-  * these are the engine's scale-path extensions.
+  * tumbling-window aggregation, stream-stream and stream-static joins,
+  * foreachBatch sinks and per-key state functions. The reference has
+  * no streaming (SURVEY §2.10); these are the engine's scale-path
+  * extensions.
+  *
+  * Every state function is a key, an initial state, a fold and an
+  * emit handed to ONE of two helpers: [[foldGroups]] holds the only
+  * `mapGroupsWithState` (one row per key per trigger, update mode) and
+  * [[scanGroups]] the only `flatMapGroupsWithState` (0..n rows per
+  * key per trigger, append mode). Both take no timeout and derive key,
+  * state and output encoders as `spark.implicits` does ([[enc]]), so
+  * checkpointed state schemas are the implicits' ones.
   *
   * Every history goes through ONE replay path: [[parquetStream]]
   * reads the file as a stream, [[replay]] projects the event stream
@@ -302,10 +313,11 @@ case class CmhRow(group: String, n: Long, n1: Long, m1: Long, o: Long)
   * `processAllAvailable()`, so a bounded parquet input behaves as a
   * deterministic one-batch stream (the pattern the driver harness can
   * check against a batch oracle); update-mode histories keep the last
-  * snapshot per key through [[latestPerKey]]. Session conf the replay
-  * needs is set for its own duration only. On a real cluster the
-  * same plans run unbounded with kafka/file sources and checkpointed
-  * sinks.
+  * snapshot per key through [[replayLatest]]. The foreachBatch
+  * operators write through ONE idempotent sink runner,
+  * [[runBatchedSink]]. Session conf the replay needs is set for its
+  * own duration only. On a real cluster the same plans run unbounded
+  * with kafka/file sources and checkpointed sinks.
   *
   * Restart recovery is proven, not assumed: CheckpointRestartSpec
   * kills and restarts a `mapGroupsWithState` query ([[ewmaState]])
@@ -487,6 +499,82 @@ object StreamingOps {
     frame.withColumn("__rn", row_number().over(
       Window.partitionBy(keys.map(col): _*).orderBy(orders: _*)))
 
+  /** [[replay]] in update mode, keeping each key's final snapshot
+    * ([[latestPerKey]]): the history shape of every one-row-per-key
+    * state function.
+    */
+  private def replayLatest[T <: Product : TypeTag](
+      spark: SparkSession, path: String, proj: Seq[Column],
+      keys: Seq[String], order: Column)(
+      state: Dataset[T] => Dataset[_]): DataFrame =
+    latestPerKey(replay[T](spark, path, OutputMode.Update, proj: _*)(state),
+      keys, order)
+
+  /** The encoder `spark.implicits` derives for `A` (its product, Long
+    * and String encoders are all this one reflection), so the state
+    * helpers keep the key, state and output schemas — and with them
+    * checkpointed state — that the implicits gave.
+    */
+  private def enc[A: TypeTag]: Encoder[A] = ScalaReflection.encoderFor[A]
+
+  /** The one `mapGroupsWithState` (no timeout): per key and trigger,
+    * the carried state — `init(key)` on the key's first trigger — is
+    * folded with the trigger's rows, stored back, and `emit`ted with
+    * the key. `fold` sees the rows in arrival order; an
+    * order-sensitive fold sorts them itself.
+    */
+  private def foldGroups[T, K: TypeTag, S: TypeTag, U: TypeTag](
+      stream: Dataset[T])(key: T => K)(init: K => S)(
+      fold: (S, Iterator[T]) => S, emit: (K, S) => U): Dataset[U] = {
+    val update = (k: K, rows: Iterator[T], state: GroupState[S]) => {
+      val s = fold(state.getOption.getOrElse(init(k)), rows)
+      state.update(s)
+      emit(k, s)
+    }
+    stream.groupByKey(key)(enc[K])
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)(
+        enc[S], enc[U])
+  }
+
+  /** The one `flatMapGroupsWithState` (append, no timeout): per key
+    * and trigger, the rows sorted by `order` (micro-batch delivery is
+    * unordered), each a `step` from the carried state — None before
+    * the key's first state — to the next state and at most one output
+    * row; the last state, when there is one, is stored back.
+    */
+  private def scanGroups[T, K: TypeTag, S: TypeTag, U: TypeTag](
+      stream: Dataset[T])(key: T => K, order: Ordering[T])(
+      step: (K, Option[S], T) => (Option[S], Option[U])): Dataset[U] = {
+    val update = (k: K, rows: Iterator[T], state: GroupState[S]) => {
+      var s = state.getOption
+      val out = rows.toSeq.sorted(order).flatMap { t =>
+        val (next, u) = step(k, s, t)
+        s = next
+        u
+      }
+      s.foreach(state.update)
+      out.iterator
+    }
+    stream.groupByKey(key)(enc[K])
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout())(
+        update)(enc[S], enc[U])
+  }
+
+  /** The calendar monitors' fold: each row one arrival on its day,
+    * then drop-oldest eviction ([[MkState.evictOldest]]).
+    */
+  private def dayFold(
+      maxStateDays: Int): (MkState, Iterator[DayObs]) => MkState =
+    (s, rows) => rows.foldLeft(s)((st, o) => st.observe(o.di, 1L))
+      .evictOldest(maxStateDays)
+
+  /** The two-cohort value→count fold ([[EnState.observe]]). */
+  private val cohortFold: (EnState, Iterator[EnObs]) => EnState =
+    (s, rows) => rows.foldLeft(s)((st, o) => st.observe(o.b, o.x))
+
+  /** The batch operators' (ts, event_id) total order on change rows. */
+  private val chgOrder: Ordering[Chg] = Ordering.by(e => (e.us, e.event_id))
+
   /** The windowed-aggregation transform itself, source-agnostic: a
     * watermarked hourly tumbling window with exact DECIMAL sums. Shared
     * by [[eventWindowCounts]] (parquet → memory, one batch) and the
@@ -505,27 +593,19 @@ object StreamingOps {
     * [[sessionCounts]]); exposed so specs can drive it across
     * micro-batches and assert state carries over.
     */
-  def sessionize(stream: Dataset[Ev], gapSeconds: Long): Dataset[UserSessions] = {
-    import stream.sparkSession.implicits._
-    def update(userId: Long, events: Iterator[Ev],
-        state: GroupState[(Long, Long, Long)]): UserSessions = {
-      // (lastTsMicros, nEvents, nSessions)
-      var (lastTs, nEvents, nSessions) =
-        state.getOption.getOrElse((Long.MinValue, 0L, 0L))
+  def sessionize(stream: Dataset[Ev], gapSeconds: Long): Dataset[UserSessions] =
+    // state: (lastTsMicros, nEvents, nSessions)
+    foldGroups(stream)(_.user_id)(_ => (Long.MinValue, 0L, 0L))(
       // one micro-batch delivers events unordered — sort within group
-      events.toSeq.sortBy(_.us).foreach { e =>
-        val t = e.us // micros, same precision as the batch lag-window
-        if (lastTs == Long.MinValue || t - lastTs > gapSeconds * 1000000L)
-          nSessions += 1
-        nEvents += 1
-        lastTs = t
-      }
-      state.update((lastTs, nEvents, nSessions))
-      UserSessions(userId, nEvents, nSessions)
-    }
-    stream.groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+      (s, events) => events.toSeq.sortBy(_.us).foldLeft(s) {
+        case ((lastTs, nEvents, nSessions), e) =>
+          // micros, same precision as the batch lag-window
+          val gap =
+            lastTs == Long.MinValue || e.us - lastTs > gapSeconds * 1000000L
+          (e.us, nEvents + 1, if (gap) nSessions + 1 else nSessions)
+      },
+      { case (userId, (_, nEvents, nSessions)) =>
+        UserSessions(userId, nEvents, nSessions) })
 
   /** Closed-session emitter via `flatMapGroupsWithState` — the 0..n
     * outputs-per-group-per-batch state API ([[sessionize]]'s
@@ -538,30 +618,15 @@ object StreamingOps {
     */
   def sessionSpans(
       stream: Dataset[Ev], gapSeconds: Long): Dataset[SessionSpan] = {
-    import stream.sparkSession.implicits._
     val gapUs = gapSeconds * 1000000L
-    def update(userId: Long, events: Iterator[Ev],
-        state: GroupState[OpenSession]): Iterator[SessionSpan] = {
-      var open = state.getOption
-      val closed = scala.collection.mutable.ArrayBuffer.empty[SessionSpan]
-      // one micro-batch delivers events unordered — sort within group
-      events.toSeq.sortBy(_.us).foreach { e =>
-        open match {
-          case None =>
-            open = Some(OpenSession(e.us, e.us, 1L))
-          case Some(OpenSession(s0, last, n)) =>
-            if (e.us - last > gapUs) {
-              closed += SessionSpan(userId, s0, last, n)
-              open = Some(OpenSession(e.us, e.us, 1L))
-            } else open = Some(OpenSession(s0, e.us, n + 1))
-        }
+    scanGroups(stream)(_.user_id, Ordering.by[Ev, Long](_.us)) {
+      (userId, open: Option[OpenSession], e) => open match {
+        case Some(o) if e.us - o.last_us <= gapUs =>
+          (Some(o.copy(last_us = e.us, n_events = o.n_events + 1)), None)
+        case _ => (Some(OpenSession(e.us, e.us, 1L)), open.map(o =>
+          SessionSpan(userId, o.start_us, o.last_us, o.n_events)))
       }
-      open.foreach(state.update)
-      closed.iterator
     }
-    stream.groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout())(update)
   }
 
   /** [[sessionSpans]] over the events parquet (memory sink, append):
@@ -587,32 +652,15 @@ object StreamingOps {
     * in state, as the still-open session does in [[sessionSpans]]),
     * so the batch oracle checks the stream.
     */
-  def scd2Intervals(stream: Dataset[Chg]): Dataset[ClosedInterval] = {
-    import stream.sparkSession.implicits._
-    def update(userId: Long, events: Iterator[Chg],
-        state: GroupState[OpenRun]): Iterator[ClosedInterval] = {
-      var open = state.getOption
-      val closed = scala.collection.mutable.ArrayBuffer.empty[ClosedInterval]
-      // micro-batch delivery is unordered — sort by the same
-      // (ts, event_id) total order the batch operator uses
-      events.toSeq.sortBy(e => (e.us, e.event_id)).foreach { e =>
-        open match {
-          case None =>
-            open = Some(OpenRun(e.event_type, e.us))
-          case Some(OpenRun(attr, from)) =>
-            if (attr != e.event_type) {
-              closed += ClosedInterval(userId, attr, from, e.us)
-              open = Some(OpenRun(e.event_type, e.us))
-            } // same attribute: the run extends, nothing to emit
-        }
+  def scd2Intervals(stream: Dataset[Chg]): Dataset[ClosedInterval] =
+    scanGroups(stream)(_.user_id, chgOrder) {
+      (userId, open: Option[OpenRun], e) => open match {
+        // same attribute: the run extends, nothing to emit
+        case Some(o) if o.event_type == e.event_type => (open, None)
+        case _ => (Some(OpenRun(e.event_type, e.us)), open.map(o =>
+          ClosedInterval(userId, o.event_type, o.from_us, e.us)))
       }
-      open.foreach(state.update)
-      closed.iterator
     }
-    stream.groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout())(update)
-  }
 
   /** [[scd2Intervals]] over the events parquet (memory sink, append),
     * tracking event_type as the dimension attribute.
@@ -629,31 +677,17 @@ object StreamingOps {
     * advanced), so feed batch-monotonic input per user — the batch
     * operator is the replay tool when order is not guaranteed.
     */
-  def attributionStream(stream: Dataset[Chg]): Dataset[Attrib] = {
-    import stream.sparkSession.implicits._
-    def update(userId: Long, events: Iterator[Chg],
-        state: GroupState[Touch]): Iterator[Attrib] = {
-      var touch = state.getOption
-      val out = scala.collection.mutable.ArrayBuffer.empty[Attrib]
-      // micro-batch delivery is unordered — restore the batch total
-      // order within the batch
-      events.toSeq.sortBy(e => (e.us, e.event_id)).foreach { e =>
-        e.event_type match {
-          case "click" | "view" =>
-            touch = Some(Touch(e.event_id, e.event_type, e.us))
-          case "purchase" =>
-            out += Attrib(e.event_id, userId, touch.map(_.event_id),
-              touch.map(_.event_type), touch.map(t => e.us - t.us))
-          case _ => ()
-        }
+  def attributionStream(stream: Dataset[Chg]): Dataset[Attrib] =
+    scanGroups(stream)(_.user_id, chgOrder) {
+      (userId, touch: Option[Touch], e) => e.event_type match {
+        case "click" | "view" =>
+          (Some(Touch(e.event_id, e.event_type, e.us)), None)
+        case "purchase" =>
+          (touch, Some(Attrib(e.event_id, userId, touch.map(_.event_id),
+            touch.map(_.event_type), touch.map(t => e.us - t.us))))
+        case _ => (touch, None)
       }
-      touch.foreach(state.update)
-      out.iterator
     }
-    stream.groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout())(update)
-  }
 
   /** [[attributionStream]] over the events parquet (memory sink). */
   def attributionHistory(spark: SparkSession, path: String): DataFrame =
@@ -671,30 +705,21 @@ object StreamingOps {
     * Emits each key's current (n, ewma) after every batch (update
     * semantics).
     */
-  def ewmaState(stream: Dataset[Meas]): Dataset[EwmaRow] = {
-    import stream.sparkSession.implicits._
-    def update(key: Long, rows: Iterator[Meas],
-        state: GroupState[EwmaRow]): EwmaRow = {
-      var cur = state.getOption.getOrElse(EwmaRow(key, 0L, 0.0))
-      rows.toSeq.sortBy(m => (m.us, m.tie)).foreach { m =>
-        cur =
-          if (cur.n == 0L) EwmaRow(key, 1L, m.v)
-          else EwmaRow(key, cur.n + 1L, (cur.ewma + m.v) * 0.5)
-      }
-      state.update(cur)
-      cur
-    }
-    stream.groupByKey(_.key)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+  def ewmaState(stream: Dataset[Meas]): Dataset[EwmaRow] =
+    foldGroups(stream)(_.key)(EwmaRow(_, 0L, 0.0))(
+      (s, rows) => rows.toSeq.sortBy(m => (m.us, m.tie)).foldLeft(s) {
+        (cur, m) =>
+          if (cur.n == 0L) EwmaRow(cur.key, 1L, m.v)
+          else EwmaRow(cur.key, cur.n + 1L, (cur.ewma + m.v) * 0.5)
+      },
+      (_, s) => s)
 
   /** [[ewmaState]] over the events parquet (memory sink, update
     * mode); output shape and rounding match the batch `q_ewma`.
     */
   def ewmaHistory(spark: SparkSession, path: String): DataFrame =
-    latestPerKey(
-      replay[Meas](spark, path, OutputMode.Update, measCols: _*)(ewmaState),
-      Seq("key"), col("n").desc)
+    replayLatest[Meas](spark, path, measCols, Seq("key"), col("n").desc)(
+      ewmaState)
       .select(col("key").as("user_id"), col("n"),
         round(col("ewma"), 6).as("ewma"))
 
@@ -707,24 +732,11 @@ object StreamingOps {
     * cross-batch order caveat as the other stateful twins.
     */
   def debounceStream(
-      stream: Dataset[Chg], gapUs: Long): Dataset[Chg] = {
-    import stream.sparkSession.implicits._
-    def update(key: (Long, String), events: Iterator[Chg],
-        state: GroupState[Long]): Iterator[Chg] = {
-      var lastSeen = state.getOption.getOrElse(Long.MinValue)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Chg]
-      events.toSeq.sortBy(e => (e.us, e.event_id)).foreach { e =>
-        if (lastSeen == Long.MinValue || e.us - lastSeen > gapUs)
-          out += e
-        lastSeen = e.us
-      }
-      state.update(lastSeen)
-      out.iterator
+      stream: Dataset[Chg], gapUs: Long): Dataset[Chg] =
+    scanGroups(stream)(e => (e.user_id, e.event_type), chgOrder) {
+      (_, lastSeen: Option[Long], e) =>
+        (Some(e.us), Option.when(lastSeen.forall(e.us - _ > gapUs))(e))
     }
-    stream.groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout())(update)
-  }
 
   /** [[debounceStream]] over the events parquet (memory sink);
     * output shape matches the batch `q_debounce`.
@@ -743,34 +755,25 @@ object StreamingOps {
     * batch plan (the q_stream_holt check). Same cross-batch-order
     * caveat as [[ewmaState]].
     */
-  def holtState(stream: Dataset[Meas]): Dataset[HoltRow] = {
-    import stream.sparkSession.implicits._
-    def update(key: Long, rows: Iterator[Meas],
-        state: GroupState[HoltRow]): HoltRow = {
-      var cur = state.getOption.getOrElse(HoltRow(key, 0L, 0.0, 0.0))
-      rows.toSeq.sortBy(m => (m.us, m.tie)).foreach { m =>
-        cur =
-          if (cur.n == 0L) HoltRow(key, 1L, m.v, 0.0)
+  def holtState(stream: Dataset[Meas]): Dataset[HoltRow] =
+    foldGroups(stream)(_.key)(HoltRow(_, 0L, 0.0, 0.0))(
+      (s, rows) => rows.toSeq.sortBy(m => (m.us, m.tie)).foldLeft(s) {
+        (cur, m) =>
+          if (cur.n == 0L) HoltRow(cur.key, 1L, m.v, 0.0)
           else {
             val l1 = 0.5 * m.v + 0.5 * (cur.l + cur.b)
             val b1 = 0.5 * (l1 - cur.l) + 0.5 * cur.b
-            HoltRow(key, cur.n + 1L, l1, b1)
+            HoltRow(cur.key, cur.n + 1L, l1, b1)
           }
-      }
-      state.update(cur)
-      cur
-    }
-    stream.groupByKey(_.key)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+      },
+      (_, s) => s)
 
   /** [[holtState]] over the events parquet (memory sink, update mode);
     * output shape and rounding match the batch `q_holt`.
     */
   def holtHistory(spark: SparkSession, path: String): DataFrame =
-    latestPerKey(
-      replay[Meas](spark, path, OutputMode.Update, measCols: _*)(holtState),
-      Seq("key"), col("n").desc)
+    replayLatest[Meas](spark, path, measCols, Seq("key"), col("n").desc)(
+      holtState)
       .select(col("key").as("user_id"), col("n"),
         round(col("l"), 6).as("level"), round(col("b"), 6).as("trend"),
         round(col("l") + col("b"), 6).as("forecast"))
@@ -784,16 +787,12 @@ object StreamingOps {
     * bit-for-bit; same cross-batch order caveat as the other
     * recurrence twins.
     */
-  def holtWintersState(stream: Dataset[Meas]): Dataset[HwRow] = {
-    import stream.sparkSession.implicits._
-    def update(key: Long, rows: Iterator[Meas],
-        state: GroupState[HwRow]): HwRow = {
-      var cur = state.getOption.getOrElse(
-        HwRow(key, 0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-      rows.toSeq.sortBy(m => (m.us, m.tie)).foreach { m =>
-        cur =
+  def holtWintersState(stream: Dataset[Meas]): Dataset[HwRow] =
+    foldGroups(stream)(_.key)(HwRow(_, 0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))(
+      (s, rows) => rows.toSeq.sortBy(m => (m.us, m.tie)).foldLeft(s) {
+        (cur, m) =>
           if (cur.n == 0L)
-            HwRow(key, 1L, m.v, 0.0, 0.0, 0.0, 0.0, 0.0)
+            HwRow(cur.key, 1L, m.v, 0.0, 0.0, 0.0, 0.0, 0.0)
           else {
             val slot = (cur.n % 4L).toInt
             val sOld = slot match {
@@ -805,29 +804,22 @@ object StreamingOps {
             val lp = 0.5 * (m.v - sOld) + 0.5 * (cur.l + cur.b)
             val bp = 0.5 * (lp - cur.l) + 0.5 * cur.b
             val sNew = 0.5 * (m.v - lp) + 0.5 * sOld
-            HwRow(key, cur.n + 1L, lp, bp,
+            HwRow(cur.key, cur.n + 1L, lp, bp,
               if (slot == 0) sNew else cur.s0,
               if (slot == 1) sNew else cur.s1,
               if (slot == 2) sNew else cur.s2,
               if (slot == 3) sNew else cur.s3)
           }
-      }
-      state.update(cur)
-      cur
-    }
-    stream.groupByKey(_.key)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+      },
+      (_, s) => s)
 
   /** [[holtWintersState]] over the events parquet; output shape and
     * rounding match the batch `q_holt_winters` (memory sink, update
     * mode, last state per key by the monotone n).
     */
   def holtWintersHistory(spark: SparkSession, path: String): DataFrame =
-    latestPerKey(
-      replay[Meas](spark, path, OutputMode.Update, measCols: _*)(
-        holtWintersState),
-      Seq("key"), col("n").desc)
+    replayLatest[Meas](spark, path, measCols, Seq("key"), col("n").desc)(
+      holtWintersState)
       .select(col("key").as("user_id"), col("n"),
         round(col("l"), 6).as("level"), round(col("b"), 6).as("trend"),
         round(col("s0"), 6).as("s0"), round(col("s1"), 6).as("s1"),
@@ -847,26 +839,18 @@ object StreamingOps {
     * computes it from min-per-stage aggregates.
     */
   def funnelState(stream: Dataset[Chg]): Dataset[FunnelRow] = {
-    import stream.sparkSession.implicits._
-    def update(userId: Long, events: Iterator[Chg],
-        state: GroupState[FunnelRow]): FunnelRow = {
-      var cur = state.getOption.getOrElse(
-        FunnelRow(userId, 0L, 0L, 0L, 0L, 0L))
-      def mn(old: Long, t: Long) = if (old == 0L || t < old) t else old
-      events.foreach { e =>
-        cur = e.event_type match {
+    def mn(old: Long, t: Long) = if (old == 0L || t < old) t else old
+    foldGroups(stream)(_.user_id)(FunnelRow(_, 0L, 0L, 0L, 0L, 0L))(
+      (s, events) => events.foldLeft(s) { (cur, e) =>
+        e.event_type match {
           case "signup" => cur.copy(n = cur.n + 1, t1 = mn(cur.t1, e.us))
           case "view" => cur.copy(n = cur.n + 1, t2 = mn(cur.t2, e.us))
           case "click" => cur.copy(n = cur.n + 1, t3 = mn(cur.t3, e.us))
           case "purchase" => cur.copy(n = cur.n + 1, t4 = mn(cur.t4, e.us))
           case _ => cur.copy(n = cur.n + 1)
         }
-      }
-      state.update(cur)
-      cur
-    }
-    stream.groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
+      },
+      (_, s) => s)
   }
 
   /** [[funnelState]] over the events parquet → the q_funnel stage
@@ -882,9 +866,8 @@ object StreamingOps {
       .when(col("t3") === 0L || col("t3") <= col("t2"), 2)
       .when(col("t4") === 0L || col("t4") <= col("t3"), 3)
       .otherwise(4)
-    latestPerKey(
-      replay[Chg](spark, path, OutputMode.Update, chgCols: _*)(funnelState),
-      Seq("userId"), col("n").desc)
+    replayLatest[Chg](spark, path, chgCols, Seq("userId"), col("n").desc)(
+      funnelState)
       .select(stage.as("stage"))
       .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
       .orderBy(col("stage"))
@@ -910,34 +893,28 @@ object StreamingOps {
     */
   def mannKendallState(
       stream: Dataset[MkObs],
-      maxStateDays: Int = Int.MaxValue): Dataset[MkRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[MkObs],
-        state: GroupState[MkState]): MkRow = {
-      var st = state.getOption.getOrElse(MkState(Map.empty, 0L))
-      rows.foreach { o => st = st.observe(o.di, o.cents) }
-      st = st.evictOldest(maxStateDays)
-      state.update(st)
-      val xs = st.days.toSeq.sortBy(_._1).map(_._2)
-      val n = xs.length.toLong
-      var s = 0L
-      var i = 0
-      while (i < xs.length) {
-        var j = i + 1
-        while (j < xs.length) {
-          s += java.lang.Long.compare(xs(j), xs(i)).sign.toLong
-          j += 1
+      maxStateDays: Int = Int.MaxValue): Dataset[MkRow] =
+    foldGroups(stream)(_.group)(_ => MkState(Map.empty, 0L))(
+      (s, rows) => rows.foldLeft(s)((st, o) => st.observe(o.di, o.cents))
+        .evictOldest(maxStateDays),
+      (g, st) => {
+        val xs = st.days.toSeq.sortBy(_._1).map(_._2)
+        val n = xs.length.toLong
+        var s = 0L
+        var i = 0
+        while (i < xs.length) {
+          var j = i + 1
+          while (j < xs.length) {
+            s += java.lang.Long.compare(xs(j), xs(i)).sign.toLong
+            j += 1
+          }
+          i += 1
         }
-        i += 1
-      }
-      val tie = xs.groupBy(identity).valuesIterator
-        .map(_.length.toLong).map(t => t * (t - 1) * (2 * t + 5)).sum
-      MkRow(g, n, s, n * (n - 1) * (2 * n + 5) - tie, st.eventsSeen,
-        st.days.size.toLong, st.evictedDays)
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+        val tie = xs.groupBy(identity).valuesIterator
+          .map(_.length.toLong).map(t => t * (t - 1) * (2 * t + 5)).sum
+        MkRow(g, n, s, n * (n - 1) * (2 * n + 5) - tie, st.eventsSeen,
+          st.days.size.toLong, st.evictedDays)
+      })
 
   /** [[mannKendallState]] over the events parquet (memory sink,
     * update mode): per-event integer cents are extracted by the SAME
@@ -947,14 +924,11 @@ object StreamingOps {
     * its oracle.
     */
   def mannKendallHistory(spark: SparkSession, path: String): DataFrame =
-    latestPerKey(
-      replay[MkObs](spark, path, OutputMode.Update,
-        col("event_type").as("group"),
+    replayLatest[MkObs](spark, path, Seq(col("event_type").as("group"),
         datediff(to_date(col("ts")), to_date(lit("2024-01-01")))
           .cast("long").as("di"),
-        round(col("value") * 100).cast("long").as("cents"))(
-        mannKendallState(_)),
-      Seq("group"), col("events_seen").desc)
+        round(col("value") * 100).cast("long").as("cents")),
+      Seq("group"), col("events_seen").desc)(mannKendallState(_))
       .filter(col("var_num") > 0)
       .select(col("group").as("event_type"), col("n"), col("s_stat"),
         col("var_num"),
@@ -980,49 +954,42 @@ object StreamingOps {
     * multiset fold is commutative, so micro-batch splits and
     * intra-batch order cannot change the result.
     */
-  def wilcoxonState(stream: Dataset[WsrObs]): Dataset[WsrRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[WsrObs],
-        state: GroupState[WsrState]): WsrRow = {
-      var st = state.getOption.getOrElse(WsrState(Map.empty, 0L))
-      rows.foreach { o =>
+  def wilcoxonState(stream: Dataset[WsrObs]): Dataset[WsrRow] =
+    foldGroups(stream)(_.group)(_ => WsrState(Map.empty, 0L))(
+      (s, rows) => rows.foldLeft(s) { (st, o) =>
         val d = o.y - o.x
         if (d != 0L)
-          st = WsrState(
-            st.diffs.updated(d, st.diffs.getOrElse(d, 0L) + 1L),
+          WsrState(st.diffs.updated(d, st.diffs.getOrElse(d, 0L) + 1L),
             st.eventsSeen + 1L)
-        else st = WsrState(st.diffs, st.eventsSeen + 1L)
-      }
-      state.update(st)
-      val byAbs = st.diffs.toSeq
-        .groupBy { case (d, _) => math.abs(d) }
-        .toSeq.sortBy(_._1)
-      var cum = 0L; var w2 = 0L; var tie = 0L
-      byAbs.foreach { case (_, entries) =>
-        val t = entries.map(_._2).sum
-        val r2 = 2L * (cum + 1L) + t - 1L
-        val pos = entries.collect { case (d, c) if d > 0 => c }.sum
-        w2 += pos * r2
-        tie += t * t * t - t
-        cum += t
-      }
-      val n = cum
-      // LOUD replay bound (the AdfRow/adfFromSums convention): the
-      // variance numerator 2n(n+1)(2n+1) wraps Long past n ≈ 1.31e6
-      // nonzero pairs per group — wrapped-negative rows would be
-      // silently dropped by the history's var_num > 0 filter, and a
-      // wrapped-positive one would fabricate z. Groups that large
-      // must pre-aggregate upstream.
-      require(n <= 1300000L,
-        s"wilcoxonState: group '$g' holds $n nonzero pairs; the exact " +
-          "Long variance numerator 2n(n+1)(2n+1) wraps past ~1.31e6 — " +
-          "pre-aggregate or shard the group")
-      WsrRow(g, n, w2, n * (n + 1L) / 2L,
-        2L * n * (n + 1L) * (2L * n + 1L) - tie, st.eventsSeen)
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+        else WsrState(st.diffs, st.eventsSeen + 1L)
+      },
+      (g, st) => {
+        val byAbs = st.diffs.toSeq
+          .groupBy { case (d, _) => math.abs(d) }
+          .toSeq.sortBy(_._1)
+        var cum = 0L; var w2 = 0L; var tie = 0L
+        byAbs.foreach { case (_, entries) =>
+          val t = entries.map(_._2).sum
+          val r2 = 2L * (cum + 1L) + t - 1L
+          val pos = entries.collect { case (d, c) if d > 0 => c }.sum
+          w2 += pos * r2
+          tie += t * t * t - t
+          cum += t
+        }
+        val n = cum
+        // LOUD replay bound (the AdfRow/adfFromSums convention): the
+        // variance numerator 2n(n+1)(2n+1) wraps Long past n ≈ 1.31e6
+        // nonzero pairs per group — wrapped-negative rows would be
+        // silently dropped by the history's var_num > 0 filter, and a
+        // wrapped-positive one would fabricate z. Groups that large
+        // must pre-aggregate upstream.
+        require(n <= 1300000L,
+          s"wilcoxonState: group '$g' holds $n nonzero pairs; the exact " +
+            "Long variance numerator 2n(n+1)(2n+1) wraps past ~1.31e6 — " +
+            "pre-aggregate or shard the group")
+        WsrRow(g, n, w2, n * (n + 1L) / 2L,
+          2L * n * (n + 1L) * (2L * n + 1L) - tie, st.eventsSeen)
+      })
 
   /** [[wilcoxonState]] over the documents parquet (memory sink,
     * update mode): pairs are (n_chars, 5 × whitespace token count)
@@ -1065,31 +1032,24 @@ object StreamingOps {
     * the result; the twin shares q_psi's oracle through
     * [[psiHistory]]'s micro edge.
     */
-  def psiState(stream: Dataset[EnObs]): Dataset[PsiRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[EnObs],
-        state: GroupState[EnState]): PsiRow = {
-      var st = state.getOption.getOrElse(EnState(Map.empty, Map.empty, 0L))
-      rows.foreach { o => st = st.observe(o.b, o.x) }
-      state.update(st)
-      val bins = (st.a.keySet ++ st.bm.keySet).toSeq
-      val nA = st.a.valuesIterator.sum
-      val nB = st.bm.valuesIterator.sum
-      val nBins = bins.size.toLong
-      val tsum = bins.iterator.map { v =>
-        val pA = (st.a.getOrElse(v, 0L) + 1.0) / (nA + nBins.toDouble)
-        val pB = (st.bm.getOrElse(v, 0L) + 1.0) / (nB + nBins.toDouble)
-        // Spark's round() is HALF_UP on the BigDecimal of the
-        // double (away from zero for negatives) — math.round is
-        // NOT; replicate the batch lattice exactly
-        BigDecimal((pA - pB) * math.log(pA / pB) * 1e9)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      }.sum
-      PsiRow(g, nA, nB, nBins, tsum)
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+  def psiState(stream: Dataset[EnObs]): Dataset[PsiRow] =
+    foldGroups(stream)(_.group)(_ => EnState(Map.empty, Map.empty, 0L))(
+      cohortFold, (g, st) => {
+        val bins = (st.a.keySet ++ st.bm.keySet).toSeq
+        val nA = st.a.valuesIterator.sum
+        val nB = st.bm.valuesIterator.sum
+        val nBins = bins.size.toLong
+        val tsum = bins.iterator.map { v =>
+          val pA = (st.a.getOrElse(v, 0L) + 1.0) / (nA + nBins.toDouble)
+          val pB = (st.bm.getOrElse(v, 0L) + 1.0) / (nB + nBins.toDouble)
+          // Spark's round() is HALF_UP on the BigDecimal of the
+          // double (away from zero for negatives) — math.round is
+          // NOT; replicate the batch lattice exactly
+          BigDecimal((pA - pB) * math.log(pA / pB) * 1e9)
+            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+        }.sum
+        PsiRow(g, nA, nB, nBins, tsum)
+      })
 
   /** [[psiState]] over the events parquet (memory sink, update
     * mode): bins and cohorts come from the SAME Spark expressions
@@ -1098,12 +1058,9 @@ object StreamingOps {
     * shape matches `q_psi` and shares its oracle.
     */
   def psiHistory(spark: SparkSession, path: String): DataFrame =
-    latestPerKey(
-      replay[EnObs](spark, path, OutputMode.Update,
-        col("event_type").as("group"), cohortB,
-        expr("CAST(ROUND(value * 100) AS BIGINT) div 1000").as("x"))(
-        psiState),
-      Seq("group"), (col("n_a") + col("n_b")).desc)
+    replayLatest[EnObs](spark, path, Seq(col("event_type").as("group"),
+        cohortB, expr("CAST(ROUND(value * 100) AS BIGINT) div 1000").as("x")),
+      Seq("group"), (col("n_a") + col("n_b")).desc)(psiState)
       .filter(col("n_a") > 0 && col("n_b") > 0)
       .select(col("group").as("event_type"), col("n_a"), col("n_b"),
         col("n_bins"),
@@ -1120,25 +1077,15 @@ object StreamingOps {
     * [[graft.operators.AbTest.msprtDecision]], so the twin shares
     * q_msprt's oracle.
     */
-  def msprtState(stream: Dataset[EnObs]): Dataset[MsprtRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[EnObs],
-        state: GroupState[MsprtRow]): MsprtRow = {
-      var cur = state.getOption
-        .getOrElse(MsprtRow(g, 0L, 0L, 0L, 0L, 0L, 0L))
-      rows.foreach { o =>
-        cur =
-          if (o.b) cur.copy(n_b = cur.n_b + 1L, sx_b = cur.sx_b + o.x,
-            sxx_b = cur.sxx_b + o.x * o.x)
-          else cur.copy(n_a = cur.n_a + 1L, sx_a = cur.sx_a + o.x,
-            sxx_a = cur.sxx_a + o.x * o.x)
-      }
-      state.update(cur)
-      cur
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+  def msprtState(stream: Dataset[EnObs]): Dataset[MsprtRow] =
+    foldGroups(stream)(_.group)(MsprtRow(_, 0L, 0L, 0L, 0L, 0L, 0L))(
+      (s, rows) => rows.foldLeft(s) { (cur, o) =>
+        if (o.b) cur.copy(n_b = cur.n_b + 1L, sx_b = cur.sx_b + o.x,
+          sxx_b = cur.sxx_b + o.x * o.x)
+        else cur.copy(n_a = cur.n_a + 1L, sx_a = cur.sx_a + o.x,
+          sxx_a = cur.sxx_a + o.x * o.x)
+      },
+      (_, s) => s)
 
   /** [[msprtState]] over the events parquet (memory sink, complete
     * fold): cohorts and integer cents come from the SAME Spark
@@ -1149,10 +1096,8 @@ object StreamingOps {
   def msprtHistory(
       spark: SparkSession, path: String, tauMicro: Long,
       alphaPpm: Long = 50000L): DataFrame = {
-    val last = latestPerKey(
-      replay[EnObs](spark, path, OutputMode.Update, cohortCents: _*)(
-        msprtState),
-      Seq("group"), (col("n_a") + col("n_b")).desc)
+    val last = replayLatest[EnObs](spark, path, cohortCents, Seq("group"),
+      (col("n_a") + col("n_b")).desc)(msprtState)
     graft.operators.AbTest.msprtDecision(
       last.withColumnRenamed("group", "event_type"), "event_type",
       tauMicro, alphaPpm)
@@ -1169,37 +1114,30 @@ object StreamingOps {
     * operator uses as windows, so no pair is ever formed. Map folds
     * are commutative: micro-batch splits cannot change the result.
     */
-  def energyState(stream: Dataset[EnObs]): Dataset[EnRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[EnObs],
-        state: GroupState[EnState]): EnRow = {
-      var st = state.getOption.getOrElse(EnState(Map.empty, Map.empty, 0L))
-      rows.foreach { o => st = st.observe(o.b, o.x) }
-      state.update(st)
-      val nA = st.a.valuesIterator.sum
-      val nB = st.bm.valuesIterator.sum
-      val tA = st.a.iterator.map { case (v, c) => v * c }.sum
-      var cumA = 0L; var sumA = 0L; var cumB = 0L; var sumB = 0L
-      var ab = 0L; var aa = 0L; var bb = 0L
-      (st.a.keySet ++ st.bm.keySet).toSeq.sorted.foreach { v =>
-        val av = st.a.getOrElse(v, 0L)
-        val bv = st.bm.getOrElse(v, 0L)
-        // within-cohort sums use STRICT-less cumulatives (equal
-        // values contribute |x-x'| = 0); the cross sum uses <=
-        // cumulatives, invariant per the batch operator's tie
-        // argument
-        aa += av * (v * cumA - sumA)
-        bb += bv * (v * cumB - sumB)
-        ab += bv * (v * (2L * (cumA + av) - nA) -
-          2L * (sumA + v * av) + tA)
-        cumA += av; sumA += v * av
-        cumB += bv; sumB += v * bv
-      }
-      EnRow(g, nA, nB, ab, aa, bb, st.eventsSeen)
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+  def energyState(stream: Dataset[EnObs]): Dataset[EnRow] =
+    foldGroups(stream)(_.group)(_ => EnState(Map.empty, Map.empty, 0L))(
+      cohortFold, (g, st) => {
+        val nA = st.a.valuesIterator.sum
+        val nB = st.bm.valuesIterator.sum
+        val tA = st.a.iterator.map { case (v, c) => v * c }.sum
+        var cumA = 0L; var sumA = 0L; var cumB = 0L; var sumB = 0L
+        var ab = 0L; var aa = 0L; var bb = 0L
+        (st.a.keySet ++ st.bm.keySet).toSeq.sorted.foreach { v =>
+          val av = st.a.getOrElse(v, 0L)
+          val bv = st.bm.getOrElse(v, 0L)
+          // within-cohort sums use STRICT-less cumulatives (equal
+          // values contribute |x-x'| = 0); the cross sum uses <=
+          // cumulatives, invariant per the batch operator's tie
+          // argument
+          aa += av * (v * cumA - sumA)
+          bb += bv * (v * cumB - sumB)
+          ab += bv * (v * (2L * (cumA + av) - nA) -
+            2L * (sumA + v * av) + tA)
+          cumA += av; sumA += v * av
+          cumB += bv; sumB += v * bv
+        }
+        EnRow(g, nA, nB, ab, aa, bb, st.eventsSeen)
+      })
 
   /** [[energyState]] over the events parquet (memory sink, update
     * mode): cohorts and integer cents come from the SAME Spark
@@ -1209,10 +1147,8 @@ object StreamingOps {
     * oracle.
     */
   def energyHistory(spark: SparkSession, path: String): DataFrame = {
-    val last = latestPerKey(
-      replay[EnObs](spark, path, OutputMode.Update, cohortCents: _*)(
-        energyState),
-      Seq("group"), col("events_seen").desc)
+    val last = replayLatest[EnObs](spark, path, cohortCents, Seq("group"),
+      col("events_seen").desc)(energyState)
       .filter(col("n_a") > 0 && col("n_b") > 0)
     val mD = col("n_a").cast("double")
     val nD = col("n_b").cast("double")
@@ -1239,21 +1175,13 @@ object StreamingOps {
     * q_sprt's oracle. Counting is commutative: micro-batch splits
     * and intra-batch order cannot change the result.
     */
-  def sprtState(stream: Dataset[SprtObs]): Dataset[SprtRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[SprtObs],
-        state: GroupState[SprtRow]): SprtRow = {
-      var cur = state.getOption.getOrElse(SprtRow(g, 0L, 0L))
-      rows.foreach { o =>
-        cur = SprtRow(g, cur.n + 1L,
+  def sprtState(stream: Dataset[SprtObs]): Dataset[SprtRow] =
+    foldGroups(stream)(_.group)(SprtRow(_, 0L, 0L))(
+      (s, rows) => rows.foldLeft(s) { (cur, o) =>
+        SprtRow(cur.group, cur.n + 1L,
           cur.successes + (if (o.ok) 1L else 0L))
-      }
-      state.update(cur)
-      cur
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+      },
+      (_, s) => s)
 
   /** [[sprtState]] over the events parquet (memory sink, update
     * mode): the outcome predicate is the same Spark expression the
@@ -1264,11 +1192,9 @@ object StreamingOps {
       spark: SparkSession, path: String,
       p0: Double, p1: Double): DataFrame =
     graft.operators.AbTest.sprtDecision(
-      latestPerKey(
-        replay[SprtObs](spark, path, OutputMode.Update,
-          col("event_type").as("group"), (col("value") > 50).as("ok"))(
-          sprtState),
-        Seq("group"), col("n").desc)
+      replayLatest[SprtObs](spark, path, Seq(col("event_type").as("group"),
+          (col("value") > 50).as("ok")), Seq("group"), col("n").desc)(
+          sprtState)
         .select(col("group").as("event_type"), col("n"),
           col("successes")),
       "event_type", p0, p1)
@@ -1314,14 +1240,21 @@ object StreamingOps {
       leftTs: String,
       rightTs: String,
       watermark: String,
-      windowSeconds: Long): DataFrame = {
-    val l = left.withWatermark(leftTs, watermark)
-    val r = right.withWatermark(rightTs, watermark)
-    l.join(r,
+      windowSeconds: Long): DataFrame =
+    intervalJoin(left, right, leftKey, rightKey, leftTs, rightTs,
+      watermark, windowSeconds, "inner")
+
+  /** [[joinWithinInterval]] under `joinType` (inner or left_outer). */
+  private def intervalJoin(
+      left: DataFrame, right: DataFrame, leftKey: String, rightKey: String,
+      leftTs: String, rightTs: String, watermark: String,
+      windowSeconds: Long, joinType: String): DataFrame =
+    left.withWatermark(leftTs, watermark).join(
+      right.withWatermark(rightTs, watermark),
       col(leftKey) === col(rightKey) &&
         col(rightTs) <= col(leftTs) &&
-        col(rightTs) >= col(leftTs) - expr(s"INTERVAL $windowSeconds SECONDS"))
-  }
+        col(rightTs) >= col(leftTs) - expr(s"INTERVAL $windowSeconds SECONDS"),
+      joinType)
 
   /** Streaming curation gate: the SAME stateless column expressions
     * the batch curation queries use (token count, type/token ratio,
@@ -1369,40 +1302,37 @@ object StreamingOps {
       path: String,
       model: graft.operators.NaiveBayes.Model,
       outDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val docs = parquetStream(spark, path, maxFilesPerTrigger)
-    // batch=<id> partition dirs + per-batch overwrite make the sink
-    // IDEMPOTENT under foreachBatch's at-least-once contract: a
-    // replayed micro-batch overwrites its own output instead of
-    // appending a duplicate copy, and a full re-run against the same
-    // outDir converges to the same result instead of unioning runs
-    val q = docs.writeStream
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runBatchedSink(spark, path, outDir, maxFilesPerTrigger)(
+      graft.operators.NaiveBayes.classify(model, _, "doc_id", "text"))
+
+  /** The one foreachBatch sink runner: streams the docs parquet at
+    * `path`, writes `f` of each micro-batch to `outDir/batch=<id>`,
+    * drains, and reads the sink back without the partition column.
+    * batch=<id> partition dirs + per-batch overwrite make the sink
+    * IDEMPOTENT under foreachBatch's at-least-once contract: a
+    * replayed micro-batch overwrites its own output instead of
+    * appending a duplicate copy, and a full re-run against the same
+    * outDir converges to the same result instead of unioning runs. An
+    * input that produced ZERO batches (no matching files) leaves no
+    * sink directory: the result is then `f` of the empty input, with
+    * the sink's schema, instead of PATH_NOT_FOUND.
+    */
+  private def runBatchedSink(
+      spark: SparkSession, path: String, outDir: String,
+      maxFilesPerTrigger: Option[Int] = None)(
+      f: DataFrame => DataFrame): DataFrame = {
+    val q = parquetStream(spark, path, maxFilesPerTrigger).writeStream
       .outputMode(OutputMode.Append)
-      .foreachBatch {
-        (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          graft.operators.NaiveBayes
-            .classify(model, batch, "doc_id", "text")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          ()
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        f(batch).write.mode("overwrite").parquet(s"$outDir/batch=$id")
+        ()
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    readBatchedSink(spark, outDir,
-      graft.operators.NaiveBayes.classify(
-        model, spark.read.parquet(path).limit(0), "doc_id", "text"))
-  }
-
-  /** Read back a batch=<id>-partitioned foreachBatch sink, dropping
-    * the partition column; an input that produced ZERO batches (no
-    * matching files) leaves no sink directory — return the empty
-    * frame with the caller's schema instead of PATH_NOT_FOUND.
-    */
-  private def readBatchedSink(
-      spark: SparkSession, outDir: String,
-      emptyShape: DataFrame): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(outDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) emptyShape
+    if (!fs.exists(p)) f(spark.read.parquet(path).limit(0))
     else spark.read.parquet(outDir).drop("batch")
   }
 
@@ -1448,29 +1378,11 @@ object StreamingOps {
       queries: DataFrame,
       queryIdCol: String,
       termCol: String,
-      outDir: String): DataFrame = {
-    val docs = parquetStream(spark, path)
-    // same idempotent batch=<id> sink convention as
-    // classifiedDocStream (replayed batches overwrite themselves)
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch {
-        (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          graft.operators.Percolator.percolate(
-              batch.select(col("doc_id"),
-                split(col("text"), " ", -1).as("tokens")),
-              "doc_id", "tokens", queries, queryIdCol, termCol)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    readBatchedSink(spark, outDir,
+      outDir: String): DataFrame =
+    runBatchedSink(spark, path, outDir)(docs =>
       graft.operators.Percolator.percolate(
-        spark.read.parquet(path).limit(0)
-          .select(col("doc_id"), split(col("text"), " ", -1).as("tokens")),
+        docs.select(col("doc_id"), split(col("text"), " ", -1).as("tokens")),
         "doc_id", "tokens", queries, queryIdCol, termCol))
-  }
 
   /** Streaming incremental NEAR-dup ingest — the production loop
     * whose kernel is [[graft.operators.Dedup.incrementalMinhashPairsFromStore]].
@@ -1489,8 +1401,9 @@ object StreamingOps {
     * (near-dup keys never expire, so no watermark can evict them:
     * exactly the case the docs-level store exists for). Per-batch
     * cost: O(batch) signature work + the candidate-bounded verify
-    * join. The batch's signatures are computed twice (pair kernel +
-    * store append) — batch-sized, kept for operator isolation.
+    * join. The batch's signatures are computed once: one pinned
+    * bucket frame feeds both the pair kernel's new side and the store
+    * append.
     *
     * Returns the started query; the caller drives triggers and stops
     * it (tests step batches via MemoryStream + processAllAvailable).
@@ -1679,6 +1592,17 @@ object StreamingOps {
       clickType: String = "click",
       windowSeconds: Long = 3600L,
       watermark: String = "2 hours"): DataFrame =
+    attributed(spark, path, convType, clickType, windowSeconds, watermark,
+      "inner")
+
+  /** The body of both attribution streams: conversions joined to the
+    * same user's clicks in the preceding `windowSeconds` under
+    * `joinType`.
+    */
+  private def attributed(
+      spark: SparkSession, path: String, convType: String,
+      clickType: String, windowSeconds: Long, watermark: String,
+      joinType: String): DataFrame =
     // 4 state stores per partition: width from the source size
     replayEvents(spark, path, OutputMode.Append, stateSource = Some(path)) {
       read =>
@@ -1690,9 +1614,9 @@ object StreamingOps {
           .filter(col("event_type") === clickType)
           .select(col("event_id").as("click_id"),
             col("user_id").as("click_user"), col("ts").as("click_ts"))
-        joinWithinInterval(conv, clicks,
+        intervalJoin(conv, clicks,
           "conv_user", "click_user", "conv_ts", "click_ts",
-          watermark, windowSeconds)
+          watermark, windowSeconds, joinType)
     }.select(col("conv_id"), col("click_id"))
 
   /** Stream-STATIC enrichment: each micro-batch of events joined to a
@@ -1743,26 +1667,8 @@ object StreamingOps {
       clickType: String = "click",
       windowSeconds: Long = 3600L,
       watermark: String = "2 hours"): DataFrame =
-    // 4 state stores per partition: width from the source size
-    replayEvents(spark, path, OutputMode.Append, stateSource = Some(path)) {
-      read =>
-        val conv = read()
-          .filter(col("event_type") === convType)
-          .select(col("event_id").as("conv_id"),
-            col("user_id").as("conv_user"), col("ts").as("conv_ts"))
-          .withWatermark("conv_ts", watermark)
-        val clicks = read()
-          .filter(col("event_type") === clickType)
-          .select(col("event_id").as("click_id"),
-            col("user_id").as("click_user"), col("ts").as("click_ts"))
-          .withWatermark("click_ts", watermark)
-        conv.join(clicks,
-          col("conv_user") === col("click_user") &&
-            col("click_ts") <= col("conv_ts") &&
-            col("click_ts") >= col("conv_ts") -
-              expr(s"INTERVAL $windowSeconds SECONDS"),
-          "left_outer")
-    }.select(col("conv_id"), col("click_id"))
+    attributed(spark, path, convType, clickType, windowSeconds, watermark,
+      "left_outer")
 
   /** Hourly tumbling-window counts and exact sums per event_type.
     * Money-style sums run in DECIMAL for order-independence.
@@ -1795,25 +1701,11 @@ object StreamingOps {
     * downstream into the Markov matrix — cross-micro-batch
     * transitions work because the previous event rides in state.
     */
-  def transitionPairs(stream: Dataset[Chg]): Dataset[Transition] = {
-    import stream.sparkSession.implicits._
-    def update(userId: Long, events: Iterator[Chg],
-        state: GroupState[Chg]): Iterator[Transition] = {
-      var last = state.getOption
-      val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-      // micro-batch delivery is unordered — sort by the same
-      // (ts, event_id) total order the batch operator uses
-      events.toSeq.sortBy(e => (e.us, e.event_id)).foreach { e =>
-        last.foreach(l => out += Transition(l.event_type, e.event_type))
-        last = Some(e)
-      }
-      last.foreach(state.update)
-      out.iterator
+  def transitionPairs(stream: Dataset[Chg]): Dataset[Transition] =
+    scanGroups(stream)(_.user_id, chgOrder) {
+      (_, last: Option[Chg], e) =>
+        (Some(e), last.map(l => Transition(l.event_type, e.event_type)))
     }
-    stream.groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout())(update)
-  }
 
   /** [[transitionPairs]] over the events parquet → the Markov
     * transition matrix (counts + integer-ppm row probabilities).
@@ -1911,30 +1803,22 @@ object StreamingOps {
     */
   def dickeyFullerState(
       stream: Dataset[DayObs],
-      maxStateDays: Int = Int.MaxValue): Dataset[DfRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[DayObs],
-        state: GroupState[MkState]): DfRow = {
-      var st = state.getOption.getOrElse(MkState(Map.empty, 0L))
-      rows.foreach { o => st = st.observe(o.di, 1L) }
-      st = st.evictOldest(maxStateDays)
-      state.update(st)
-      val xs = st.days.toSeq.sortBy(_._1).map(_._2)
-      var n = 0L; var su = 0L; var sv = 0L
-      var suu = 0L; var suv = 0L; var svv = 0L
-      var i = 1
-      while (i < xs.length) {
-        val u = xs(i - 1); val v = xs(i) - u
-        n += 1L; su += u; sv += v
-        suu += u * u; suv += u * v; svv += v * v
-        i += 1
-      }
-      DfRow(g, n, su, sv, suu, suv, svv, st.eventsSeen,
-        st.days.size.toLong, st.evictedDays)
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+      maxStateDays: Int = Int.MaxValue): Dataset[DfRow] =
+    foldGroups(stream)(_.group)(_ => MkState(Map.empty, 0L))(
+      dayFold(maxStateDays), (g, st) => {
+        val xs = st.days.toSeq.sortBy(_._1).map(_._2)
+        var n = 0L; var su = 0L; var sv = 0L
+        var suu = 0L; var suv = 0L; var svv = 0L
+        var i = 1
+        while (i < xs.length) {
+          val u = xs(i - 1); val v = xs(i) - u
+          n += 1L; su += u; sv += v
+          suu += u * u; suv += u * v; svv += v * v
+          i += 1
+        }
+        DfRow(g, n, su, sv, suu, suv, svv, st.eventsSeen,
+          st.days.size.toLong, st.evictedDays)
+      })
 
   /** [[dickeyFullerState]] over the events parquet (memory sink,
     * update mode): day bucketing comes from the SAME Spark
@@ -1944,10 +1828,8 @@ object StreamingOps {
     */
   def dickeyFullerHistory(
       spark: SparkSession, path: String): DataFrame = {
-    val per = latestPerKey(
-      replay[DayObs](spark, path, OutputMode.Update, dayCols: _*)(
-        dickeyFullerState(_)),
-      Seq("group"), col("events_seen").desc)
+    val per = replayLatest[DayObs](spark, path, dayCols, Seq("group"),
+      col("events_seen").desc)(dickeyFullerState(_))
       .select(col("group").as("event_type"), col("n"),
         col("su").as("__su"), col("sv").as("__sv"),
         col("suu").cast(DecimalType(38, 0)).as("__suu"),
@@ -1969,33 +1851,25 @@ object StreamingOps {
     */
   def adfState(
       stream: Dataset[DayObs],
-      maxStateDays: Int = Int.MaxValue): Dataset[AdfRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[DayObs],
-        state: GroupState[MkState]): AdfRow = {
-      var st = state.getOption.getOrElse(MkState(Map.empty, 0L))
-      rows.foreach { o => st = st.observe(o.di, 1L) }
-      st = st.evictOldest(maxStateDays)
-      state.update(st)
-      val xs = st.days.toSeq.sortBy(_._1).map(_._2)
-      var n = 0L; var sv = 0L; var sp = 0L; var sq = 0L
-      var svp = 0L; var svq = 0L; var spq = 0L
-      var spp = 0L; var sqq = 0L; var svv = 0L
-      var i = 2
-      while (i < xs.length) {
-        val v = xs(i) - xs(i - 1); val p = xs(i - 1)
-        val q = xs(i - 1) - xs(i - 2)
-        n += 1L; sv += v; sp += p; sq += q
-        svp += v * p; svq += v * q; spq += p * q
-        spp += p * p; sqq += q * q; svv += v * v
-        i += 1
-      }
-      AdfRow(g, n, sv, sp, sq, svp, svq, spq, spp, sqq, svv,
-        st.eventsSeen, st.days.size.toLong, st.evictedDays)
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+      maxStateDays: Int = Int.MaxValue): Dataset[AdfRow] =
+    foldGroups(stream)(_.group)(_ => MkState(Map.empty, 0L))(
+      dayFold(maxStateDays), (g, st) => {
+        val xs = st.days.toSeq.sortBy(_._1).map(_._2)
+        var n = 0L; var sv = 0L; var sp = 0L; var sq = 0L
+        var svp = 0L; var svq = 0L; var spq = 0L
+        var spp = 0L; var sqq = 0L; var svv = 0L
+        var i = 2
+        while (i < xs.length) {
+          val v = xs(i) - xs(i - 1); val p = xs(i - 1)
+          val q = xs(i - 1) - xs(i - 2)
+          n += 1L; sv += v; sp += p; sq += q
+          svp += v * p; svq += v * q; spq += p * q
+          spp += p * p; sqq += q * q; svv += v * v
+          i += 1
+        }
+        AdfRow(g, n, sv, sp, sq, svp, svq, spq, spp, sqq, svv,
+          st.eventsSeen, st.days.size.toLong, st.evictedDays)
+      })
 
   /** [[adfState]] over the events parquet (memory sink, update
     * mode): day bucketing comes from the SAME Spark expressions the
@@ -2004,10 +1878,8 @@ object StreamingOps {
     * shape matches `q_adf` and shares its oracle.
     */
   def adfHistory(spark: SparkSession, path: String): DataFrame = {
-    val per = latestPerKey(
-      replay[DayObs](spark, path, OutputMode.Update, dayCols: _*)(
-        adfState(_)),
-      Seq("group"), col("events_seen").desc)
+    val per = replayLatest[DayObs](spark, path, dayCols, Seq("group"),
+      col("events_seen").desc)(adfState(_))
       .select(col("group").as("event_type"), col("n"),
         col("sv").as("__sv"), col("sp").as("__sp"),
         col("sq").as("__sq"), col("svp").as("__svp"),
@@ -2026,27 +1898,17 @@ object StreamingOps {
     * q_smd_balance's oracle. The live use: watch assignment balance
     * DURING an experiment ramp, not after.
     */
-  def smdState(stream: Dataset[EnObs]): Dataset[SmdRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[EnObs],
-        state: GroupState[SmdRow]): SmdRow = {
-      var cur = state.getOption
-        .getOrElse(SmdRow(g, 0L, 0L, 0L, 0L, 0L, 0L, 0L))
-      rows.foreach { o =>
-        cur =
-          if (o.b) cur.copy(n_b = cur.n_b + 1L, sxb = cur.sxb + o.x,
-            sxxb = cur.sxxb + o.x * o.x,
-            events_seen = cur.events_seen + 1L)
-          else cur.copy(n_a = cur.n_a + 1L, sxa = cur.sxa + o.x,
-            sxxa = cur.sxxa + o.x * o.x,
-            events_seen = cur.events_seen + 1L)
-      }
-      state.update(cur)
-      cur
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+  def smdState(stream: Dataset[EnObs]): Dataset[SmdRow] =
+    foldGroups(stream)(_.group)(SmdRow(_, 0L, 0L, 0L, 0L, 0L, 0L, 0L))(
+      (s, rows) => rows.foldLeft(s) { (cur, o) =>
+        if (o.b) cur.copy(n_b = cur.n_b + 1L, sxb = cur.sxb + o.x,
+          sxxb = cur.sxxb + o.x * o.x,
+          events_seen = cur.events_seen + 1L)
+        else cur.copy(n_a = cur.n_a + 1L, sxa = cur.sxa + o.x,
+          sxxa = cur.sxxa + o.x * o.x,
+          events_seen = cur.events_seen + 1L)
+      },
+      (_, s) => s)
 
   /** [[smdState]] over the events parquet (memory sink, update
     * mode): cohorts and integer cents come from the SAME Spark
@@ -2055,10 +1917,8 @@ object StreamingOps {
     * matches `q_smd_balance` and shares its oracle.
     */
   def smdHistory(spark: SparkSession, path: String): DataFrame = {
-    val per = latestPerKey(
-      replay[EnObs](spark, path, OutputMode.Update, cohortCents: _*)(
-        smdState),
-      Seq("group"), col("events_seen").desc)
+    val per = replayLatest[EnObs](spark, path, cohortCents, Seq("group"),
+      col("events_seen").desc)(smdState)
       .select(col("group").as("event_type"), col("n_a"),
         col("sxa").as("__sxa"),
         col("sxxa").cast(DecimalType(38, 0)).as("__sxxa"),
@@ -2080,23 +1940,12 @@ object StreamingOps {
     */
   def dispersionState(
       stream: Dataset[DayObs],
-      maxStateDays: Int = Int.MaxValue): Dataset[DispRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[DayObs],
-        state: GroupState[MkState]): DispRow = {
-      var st = state.getOption.getOrElse(MkState(Map.empty, 0L))
-      rows.foreach { o => st = st.observe(o.di, 1L) }
-      st = st.evictOldest(maxStateDays)
-      state.update(st)
-      val n = st.days.size.toLong
-      val s = st.days.valuesIterator.sum
-      val sxx = st.days.valuesIterator.map(c => c * c).sum
-      DispRow(g, n, s, sxx, st.eventsSeen, st.days.size.toLong,
-        st.evictedDays)
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+      maxStateDays: Int = Int.MaxValue): Dataset[DispRow] =
+    foldGroups(stream)(_.group)(_ => MkState(Map.empty, 0L))(
+      dayFold(maxStateDays), (g, st) =>
+      DispRow(g, st.days.size.toLong, st.days.valuesIterator.sum,
+        st.days.valuesIterator.map(c => c * c).sum, st.eventsSeen,
+        st.days.size.toLong, st.evictedDays))
 
   /** [[dispersionState]] over the events parquet (memory sink,
     * update mode): day bucketing comes from the SAME Spark
@@ -2106,10 +1955,8 @@ object StreamingOps {
     * oracle.
     */
   def dispersionHistory(spark: SparkSession, path: String): DataFrame = {
-    val per = latestPerKey(
-      replay[DayObs](spark, path, OutputMode.Update, dayCols: _*)(
-        dispersionState(_)),
-      Seq("group"), col("events_seen").desc)
+    val per = replayLatest[DayObs](spark, path, dayCols, Seq("group"),
+      col("events_seen").desc)(dispersionState(_))
       .select(col("group").as("event_type"), col("n"),
         col("s").as("__s"),
         col("sxx").cast(DecimalType(38, 0)).as("__sxx"))
@@ -2127,35 +1974,28 @@ object StreamingOps {
     * tie-free collapse the batch operator runs as windows. Map folds
     * are commutative: micro-batch splits cannot change the result.
     */
-  def wassersteinState(stream: Dataset[EnObs]): Dataset[WsRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[EnObs],
-        state: GroupState[EnState]): WsRow = {
-      var st = state.getOption.getOrElse(EnState(Map.empty, Map.empty, 0L))
-      rows.foreach { o => st = st.observe(o.b, o.x) }
-      state.update(st)
-      val nA = st.a.valuesIterator.sum
-      val nB = st.bm.valuesIterator.sum
-      // Array, not Seq: positional vals(i + 1) on a List would make
-      // the lattice walk O(D²) per trigger (the energyState walk
-      // avoids indexing; here the successor gap needs it, so index
-      // an array)
-      val vals = (st.a.keySet ++ st.bm.keySet).toArray.sorted
-      var cumA = 0L; var cumB = 0L; var num = 0L
-      var i = 0
-      while (i < vals.length) {
-        val v = vals(i)
-        cumA += st.a.getOrElse(v, 0L)
-        cumB += st.bm.getOrElse(v, 0L)
-        if (i + 1 < vals.length)
-          num += math.abs(cumA * nB - cumB * nA) * (vals(i + 1) - v)
-        i += 1
-      }
-      WsRow(g, nA, nB, num, st.eventsSeen)
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+  def wassersteinState(stream: Dataset[EnObs]): Dataset[WsRow] =
+    foldGroups(stream)(_.group)(_ => EnState(Map.empty, Map.empty, 0L))(
+      cohortFold, (g, st) => {
+        val nA = st.a.valuesIterator.sum
+        val nB = st.bm.valuesIterator.sum
+        // Array, not Seq: positional vals(i + 1) on a List would make
+        // the lattice walk O(D²) per trigger (the energyState walk
+        // avoids indexing; here the successor gap needs it, so index
+        // an array)
+        val vals = (st.a.keySet ++ st.bm.keySet).toArray.sorted
+        var cumA = 0L; var cumB = 0L; var num = 0L
+        var i = 0
+        while (i < vals.length) {
+          val v = vals(i)
+          cumA += st.a.getOrElse(v, 0L)
+          cumB += st.bm.getOrElse(v, 0L)
+          if (i + 1 < vals.length)
+            num += math.abs(cumA * nB - cumB * nA) * (vals(i + 1) - v)
+          i += 1
+        }
+        WsRow(g, nA, nB, num, st.eventsSeen)
+      })
 
   /** [[wassersteinState]] over the events parquet (memory sink,
     * update mode): cohorts and integer cents come from the SAME
@@ -2166,10 +2006,8 @@ object StreamingOps {
     */
   def wassersteinHistory(
       spark: SparkSession, path: String): DataFrame =
-    latestPerKey(
-      replay[EnObs](spark, path, OutputMode.Update, cohortCents: _*)(
-        wassersteinState),
-      Seq("group"), col("events_seen").desc)
+    replayLatest[EnObs](spark, path, cohortCents, Seq("group"),
+      col("events_seen").desc)(wassersteinState)
       .filter(col("n_a") > 0 && col("n_b") > 0)
       .select(col("group").as("event_type"), col("n_a"), col("n_b"),
         round(col("num").cast(DecimalType(38, 0)).cast("double") /
@@ -2183,18 +2021,10 @@ object StreamingOps {
     * anything. The G combine happens in [[gtestHistory]] through the
     * batch operator's own code.
     */
-  def gtestCellState(stream: Dataset[GtObs]): Dataset[GtCellRow] = {
-    import stream.sparkSession.implicits._
-    def update(key: (String, Long), rows: Iterator[GtObs],
-        state: GroupState[Long]): GtCellRow = {
-      var n = state.getOption.getOrElse(0L)
-      rows.foreach(_ => n += 1L)
-      state.update(n)
-      GtCellRow(key._1, key._2, n)
-    }
-    stream.groupByKey(o => (o.a, o.c))
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+  def gtestCellState(stream: Dataset[GtObs]): Dataset[GtCellRow] =
+    foldGroups(stream)(o => (o.a, o.c))(_ => 0L)(
+      (n, rows) => rows.foldLeft(n)((c, _) => c + 1L),
+      (k, n) => GtCellRow(k._1, k._2, n))
 
   /** [[gtestCellState]] over the events parquet (memory sink,
     * update mode): categories and cohorts come from the SAME Spark
@@ -2211,11 +2041,9 @@ object StreamingOps {
     // the combine margin-joins the cell table to itself; the memory
     // view's attributes collide across the self-join branches, so
     // pin the (tiny, cell-count-sized) table first
-    val cells = latestPerKey(
-      replay[GtObs](spark, path, OutputMode.Update,
-        col("event_type").as("a"), pmod(col("user_id"), lit(3L)).as("c"))(
-        gtestCellState),
-      Seq("a", "c"), col("o").desc)
+    val cells = replayLatest[GtObs](spark, path, Seq(
+        col("event_type").as("a"), pmod(col("user_id"), lit(3L)).as("c")),
+      Seq("a", "c"), col("o").desc)(gtestCellState)
       // "c" would collide with the combine's internal column-total
       // margin alias — hand over under neutral names
       .select(col("a").as("cat"), col("c").as("cohort"), col("o"))
@@ -2232,23 +2060,15 @@ object StreamingOps {
     * operator's own [[graft.operators.AbTest.cmhFromCounts]] over
     * the latest per-stratum rows, so the twin shares q_cmh's oracle.
     */
-  def cmhState(stream: Dataset[CmhObs]): Dataset[CmhRow] = {
-    import stream.sparkSession.implicits._
-    def update(g: String, rows: Iterator[CmhObs],
-        state: GroupState[CmhRow]): CmhRow = {
-      var cur = state.getOption.getOrElse(CmhRow(g, 0L, 0L, 0L, 0L))
-      rows.foreach { ob =>
-        cur = cur.copy(n = cur.n + 1L,
+  def cmhState(stream: Dataset[CmhObs]): Dataset[CmhRow] =
+    foldGroups(stream)(_.group)(CmhRow(_, 0L, 0L, 0L, 0L))(
+      (s, rows) => rows.foldLeft(s) { (cur, ob) =>
+        cur.copy(n = cur.n + 1L,
           n1 = cur.n1 + (if (ob.b) 1L else 0L),
           m1 = cur.m1 + (if (ob.y) 1L else 0L),
           o = cur.o + (if (ob.b && ob.y) 1L else 0L))
-      }
-      state.update(cur)
-      cur
-    }
-    stream.groupByKey(_.group)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(update)
-  }
+      },
+      (_, s) => s)
 
   /** [[cmhState]] over the events parquet (memory sink, update
     * mode): strata, cohorts, and the conversion predicate come from
@@ -2258,11 +2078,10 @@ object StreamingOps {
     */
   def cmhHistory(
       spark: SparkSession, path: String, crit4: Long): DataFrame = {
-    val per = latestPerKey(
-      replay[CmhObs](spark, path, OutputMode.Update,
+    val per = replayLatest[CmhObs](spark, path, Seq(
         col("event_type").as("group"), cohortB,
-        (col("value") >= 100.0).as("y"))(cmhState),
-      Seq("group"), col("n").desc)
+        (col("value") >= 100.0).as("y")),
+      Seq("group"), col("n").desc)(cmhState)
       .select(col("n").as("__n"), col("n1").as("__n1"),
         col("m1").as("__m1"), col("o").as("__o"))
     graft.operators.AbTest.cmhFromCounts(per, crit4)
@@ -2276,10 +2095,8 @@ object StreamingOps {
       spark: SparkSession,
       path: String,
       gapSeconds: Long = 1800L): DataFrame =
-    latestPerKey(
-      replay[Ev](spark, path, OutputMode.Update,
-        col("user_id"), unix_micros(col("ts")).as("us"))(
-        sessionize(_, gapSeconds)),
-      Seq("user_id"), col("n_events").desc)
+    replayLatest[Ev](spark, path,
+      Seq(col("user_id"), unix_micros(col("ts")).as("us")),
+      Seq("user_id"), col("n_events").desc)(sessionize(_, gapSeconds))
       .select(col("user_id"), col("n_events"), col("n_sessions"))
 }

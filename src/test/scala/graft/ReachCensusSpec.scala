@@ -47,7 +47,10 @@ class ReachCensusSpec extends AnyFunSuite {
       "persisted ML Param setter: the ICU tokenizer mode exists for " +
         "fidelity with the reference"),
     ("graft/operators/TrimmedCountVectorizer.scala", "setMaxVocabSize") ->
-      "persisted ML Param setter of the vectorizer's vocabulary cap")
+      "persisted ML Param setter of the vectorizer's vocabulary cap",
+    ("graft/streaming/StreamingOps.scala", "joinWithinInterval") -> (
+      "the public inner stream-stream interval join; the attribution " +
+        "streams run its body, intervalJoin, under their own join type"))
 
   /** A def line: any modifiers, then `def name`. */
   private val defLine =
